@@ -176,7 +176,6 @@ object Autotune {
   private val EnvBufferRows = "SPARK_GRAFT_BUFFER_MAX_ROWS"
   private val EnvCcLimit = "SPARK_GRAFT_CC_DRIVER_EDGE_LIMIT"
   private val EnvInitialPartitions = "SPARK_GRAFT_INITIAL_PARTITIONS"
-  private val EnvAqeMinPartition = "SPARK_GRAFT_AQE_MIN_PARTITION_KB"
 
   /** The default WAL buffer cap [[graft.sources.BufferedWriteLayer]]
     * reads when the caller passes none: env override, else derived. */
@@ -346,29 +345,10 @@ object Autotune {
     resolve(EnvInitialPartitions,
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       None, math.max(k.initialShufflePartitions, shuffle), _.toLong, _.toLong)
-    // AQE coalesce FLOOR SIZE — r15: the r14 session-wide 64 KB floor is
-    // REMOVED; the session keeps Spark's 1 MB default. The floor was
-    // right for heavy-work-per-compressed-byte similarity exchanges
-    // (q27 −40%, same-JVM A/B'd) but it multiplied the task count of
-    // EVERY small shuffle of all 148 queries: the driver's r14 full-set
-    // run showed a near-uniform +0.05–0.3 s absolute tax on untouched
-    // sub-second queries (99.4 s → 128.3 s total; a ~N-KB shuffle that
-    // coalesced to 1–3 tasks at the 1 MB floor splits into
-    // total/64 KB tasks, tens of extra task launches per exchange —
-    // VERDICT r14 what's-wrong #1), and this round's own full-set A/B
-    // (floor 64 KB vs 1 MB via the env knob, same binary, back-to-back)
-    // confirms the direction. The operators whose fused work is heavy
-    // per compressed byte now carry EXPLICIT keyed widths at the
-    // collapse-prone exchanges instead (TextDedup.simhashPairs r15; the
-    // containment/PPJoin/edit-distance widths from r13/r14 already did
-    // this) — scoped where the pathology is, never session-wide. The
-    // env knob stays for A/B; an operator-set session conf is left
-    // untouched (no more Spark-default-indistinguishable sentinel —
-    // ADVICE r14).
-    env.get(EnvAqeMinPartition).foreach { kb =>
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        (kb.toLong * 1024).toString)
-    }
+    // AQE coalesce floor SIZE is not tuned: the session keeps Spark's
+    // 1 MB default or the operator's value. A lower session floor split
+    // every small shuffle into tens of extra tasks; the operators whose
+    // work is heavy per byte set explicit keyed widths instead.
     val bufferedRows = defaultMaxBufferedRows(env)
     val a = audit(host, shuffle.toInt, broadcast, bufferedRows, ccLimit)
     val chosen = if (applied.isEmpty) "no overrides applied (all knobs " +

@@ -134,6 +134,10 @@ object Bench {
     // pass and min() heals it. (In-JVM stall sources were fixed for real:
     // 1g reserved code cache — see build.sbt.)
     val names = warmNames
+    // the final line keys queries by their "qNN" prefix (see below):
+    // check uniqueness before the passes, not after minutes of timing
+    require(names.map(_.takeWhile(_ != '_')).distinct.size == names.size,
+      "bench short-key compaction needs unique qNN prefixes")
     val pass1 = names.map(n => n -> run(n))
     val pass2 = names.map(n => n -> run(n)).toMap
     // best of the VALID samples: -1 marks a failed run, and min() must not
@@ -463,9 +467,6 @@ object Bench {
           println(s"""{"metric":"bench_queries","chunk":${i + 1},"of":$n,"queries":$qjs}""")
         }
     }
-    val shortKeys = results.map(_._1).map(n => n -> n.takeWhile(_ != '_'))
-    require(shortKeys.map(_._2).distinct.size == shortKeys.size,
-      "bench short-key compaction needs unique qNN prefixes")
     val qsMs = results.map { case (k, v) =>
       val ms = if (v < 0) -1L else math.round(v * 1000)
       s"\"${k.takeWhile(_ != '_')}\":$ms"

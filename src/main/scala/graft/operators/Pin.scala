@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{classic, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Lineage cut for reused expensive frames (verified pair lists, hashed
   * token sets, quantizer assignments…).
@@ -53,12 +54,22 @@ object Pin {
     * consumer), so N pins built sequentially still serialize N rounds
     * of map-stage jobs. Built concurrently, their stages back-fill each
     * other's idle cores; Spark's scheduler handles multi-threaded job
-    * submission natively. Frames must not depend on one another. */
+    * submission natively. Frames must not depend on one another.
+    *
+    * Each construction thread runs with the CALLER's active session and
+    * local properties (job group, description, scheduler pool), so the
+    * jobs it submits stay cancellable with the caller's job group and
+    * attributed to it — a pooled thread would otherwise carry whatever
+    * properties it inherited when it was created. */
   def lazilyAll(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fs = dfs.map(df => Future(lazily(df)))
-    fs.map(Await.result(_, Duration.Inf))
+    val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    try dfs.map { df =>
+      SQLExecution.withThreadLocalCaptured(
+        df.sparkSession.asInstanceOf[classic.SparkSession], pool)(lazily(df))
+    }.map { f =>
+      try f.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
+    finally pool.shutdown()
   }
 }

@@ -59,39 +59,6 @@ object GraftTable {
     * int64 micros (see `rgShadowExpr`); never part of a read schema. */
   val RgKeyColumn = "__rg_key"
 
-  /** Scope table WRITES to Spark's default AQE coalesce floor (1 MB) —
-    * a write's exchange feeds FILES, and a lowered session floor fans a
-    * small append/compaction out into task-count-many tiny files per
-    * partition dir (the r14 q55 0.65 → 6.8 s pathology; guide §6).
-    * Reentrant JVM-wide DEPTH COUNTER (ADVICE r14): two concurrent write
-    * scopes used to save/restore the session conf independently — t2
-    * could read t1's temporary "1m" as `prev` and restore it permanently.
-    * Only the outermost enter saves, only the outermost exit restores;
-    * overlapping scopes want the same value anyway. Critical sections
-    * cover just the conf get/set, never the write itself. Since r15 the
-    * session floor is Spark's 1 MB default again (the 64 KB session
-    * floor is gone), so the scope is a no-op unless an operator or the
-    * env knob lowered the floor — kept for exactly those callers. */
-  private[sources] object WriteCoalesce {
-    private val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    private var depth = 0
-    private var prev: Option[String] = None
-    def enter(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-      if (depth == 0) {
-        prev = spark.conf.getOption(key)
-        spark.conf.set(key, "1m")
-      }
-      depth += 1
-    }
-    def exit(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-      depth -= 1
-      if (depth == 0) prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   /** Free a `localCheckpoint`ed frame's executor blocks eagerly. The
     * blocks belong to the RDD the checkpoint wrapped (LogicalRDD in the
     * analyzed plan); without this they survive until the driver GCs the
@@ -202,12 +169,16 @@ class GraftTable(
     * `dates` is the version's event-date range (for appends: the
     * Delta-checkpoint-stats role — [[recentPage]] and the date-bounded
     * window derive date sets from markers alone; for partial bases: the
-    * subsumption scope). Encoded entirely in the marker NAME (`_v00007`,
+    * subsumption scope). Every write records the range of the `date=`
+    * directories it created, so a range-less marker is a write that
+    * touched no dates (an empty append, a delete matching nothing).
+    * Encoded entirely in the marker NAME (`_v00007`,
     * `_v00007.base.00005`, `_v00009.pb.dr.2024-03-01.2024-03-10`,
     * `_v00007.dr.2024-03-01.2024-03-10`) so listing needs no file reads. */
   private case class Commit(v: Int, baseOf: Option[Int],
-      dates: Option[(java.time.LocalDate, java.time.LocalDate)],
-      pbase: Boolean = false)
+      dates: Option[DateRange], pbase: Boolean = false)
+
+  private type DateRange = (java.time.LocalDate, java.time.LocalDate)
 
   private def commits(): Seq[Commit] = {
     val dir = new Path(commitsDir)
@@ -235,8 +206,7 @@ class GraftTable(
   }
 
   private def markerName(v: Int, baseOf: Option[Int],
-      dates: Option[(java.time.LocalDate, java.time.LocalDate)],
-      pbase: Boolean = false): String = {
+      dates: Option[DateRange], pbase: Boolean = false): String = {
     val core = baseOf match {
       case None => f"_v$v%05d"
       case Some(b) => f"_v$v%05d.base.$b%05d"
@@ -249,8 +219,7 @@ class GraftTable(
   }
 
   private def commit(v: Int, baseOf: Option[Int] = None,
-      dates: Option[(java.time.LocalDate, java.time.LocalDate)] = None,
-      pbase: Boolean = false): Unit = {
+      dates: Option[DateRange] = None, pbase: Boolean = false): Unit = {
     fs.mkdirs(new Path(commitsDir))
     // atomic create (fails if present) IS the commit
     val marker = new Path(commitsDir, markerName(v, baseOf, dates, pbase))
@@ -259,15 +228,20 @@ class GraftTable(
         s"${meta.name}: version $v already committed by another writer")
   }
 
-  /** Event-date range of one just-written version directory — a listing
-    * bounded by the BATCH's partitions (tenants × touched days), done once
-    * at write time so readers never need it. */
-  private def writtenDateRange(
-      dir: String): Option[(java.time.LocalDate, java.time.LocalDate)] = {
-    val ds = partitionDates(Seq(dir))
+  /** Event-date range of one just-written version directory — a
+    * driver-side listing (two levels deep, no file reads) bounded by the
+    * BATCH's partitions (tenants × touched days), done once at write time
+    * so readers never need it. None when the write created no `date=`
+    * directory. */
+  private def writtenDateRange(dir: String): Option[DateRange] = {
+    val p = new Path(dir)
+    val ds = if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).filter(_.isDirectory).toSeq.flatMap(proj =>
+        fs.listStatus(proj.getPath).map(_.getPath.getName).toSeq
+          .filter(_.startsWith("date=")).map(_.stripPrefix("date=")))
     if (ds.isEmpty) None
-    else Some((java.time.LocalDate.parse(ds.last),
-      java.time.LocalDate.parse(ds.head)))
+    else Some((java.time.LocalDate.parse(ds.min),
+      java.time.LocalDate.parse(ds.max)))
   }
 
   private def versionDir(v: Int): String = f"$path/v$v%05d"
@@ -326,20 +300,37 @@ class GraftTable(
   private def visibleDirs(cs: Seq[Commit]): Seq[String] =
     visibleCommits(cs).map(c => versionDir(c.v))
 
+  /** The visible snapshot of a commit list with its partial-base
+    * coverage, computed once: for each leg, the date ranges a NEWER
+    * partial base subsumes. A date inside one is served by the newest
+    * covering base, never by this leg — the one rule the resolved view
+    * ([[resolvedFrom]]), the scan gate's work estimate
+    * ([[selectedFileWork]]) and maintenance ([[maintenanceSweep]]) share. */
+  private class Snapshot(cs: Seq[Commit]) {
+    val vis: Seq[Commit] = visibleCommits(cs)
+    private val coverage: Map[Int, Seq[DateRange]] = {
+      val pbases = vis.filter(_.pbase)
+      vis.map(c => c.v -> pbases.filter(_.v > c.v).flatMap(_.dates)).toMap
+    }
+    def covered(c: Commit): Seq[DateRange] = coverage(c.v)
+    def isCovered(c: Commit, d: java.time.LocalDate): Boolean =
+      covered(c).exists { case (lo, hi) => !d.isBefore(lo) && !d.isAfter(hi) }
+    /** Dates leg `c` recorded that no newer partial base covers. */
+    def liveDates(c: Commit): Iterator[String] =
+      c.dates.iterator.flatMap(expandDates)
+        .filterNot(ds => isCovered(c, java.time.LocalDate.parse(ds)))
+    /** Legs that still serve a date. Every other visible leg holds no
+      * visible row (it recorded no dates, or newer partial bases cover
+      * all of them), so readers skip it. */
+    val live: Seq[Commit] = vis.filter(liveDates(_).hasNext)
+  }
+
   /** Distinct candidate event dates of the visible snapshot, newest
-    * first — from marker date ranges when present (no filesystem walk; a
-    * range may include absent dates, which scan zero files), falling back
-    * to a per-version directory listing for markers that predate range
-    * recording. */
+    * first — from marker date ranges alone (no filesystem walk; a range
+    * may include absent dates, which scan zero files). */
   private def visibleDates(cs: Seq[Commit]): Seq[String] =
-    visibleCommits(cs).flatMap { c =>
-      c.dates match {
-        case Some((lo, hi)) =>
-          Iterator.iterate(hi)(_.minusDays(1)).takeWhile(!_.isBefore(lo))
-            .map(_.toString).toSeq
-        case None => partitionDates(Seq(versionDir(c.v)))
-      }
-    }.distinct.sorted.reverse
+    visibleCommits(cs).flatMap(_.dates.toSeq.flatMap(expandDates))
+      .distinct.sorted.reverse
 
   /** Post-pruning work a scan bounded below by `since` would actually
     * select: (parquet file count, total bytes) under `date=` partitions
@@ -351,23 +342,18 @@ class GraftTable(
   private[sources] def selectedFileWork(
       since: java.time.LocalDate): (Long, Long) = {
     var files = 0L; var bytes = 0L
-    val vis = visibleCommits(commits())
-    // mirror resolvedFrom's per-leg anti-range exclusions: a date covered
-    // by a NEWER partial base is never read from this leg, so its files
-    // are not work this scan selects — counting them would over-gate a
-    // pruned-small deep scan on a partially-compacted table
-    val pbases = vis.filter(_.pbase)
-    vis.foreach { c =>
-      val excl = pbases.filter(_.v > c.v).flatMap(_.dates)
+    // a date covered by a NEWER partial base is never read from this leg,
+    // so its files are not work this scan selects — counting them would
+    // over-gate a pruned-small deep scan on a partially-compacted table
+    val snap = new Snapshot(commits())
+    snap.live.foreach { c =>
       val p = new Path(versionDir(c.v))
       if (fs.exists(p)) fs.listStatus(p).filter(_.isDirectory).foreach { proj =>
         fs.listStatus(proj.getPath).filter(_.isDirectory).foreach { dp =>
           val n = dp.getPath.getName
           if (n.startsWith("date=")) {
             val d = java.time.LocalDate.parse(n.stripPrefix("date="))
-            val excluded =
-              excl.exists { case (lo, hi) => !d.isBefore(lo) && !d.isAfter(hi) }
-            if (!d.isBefore(since) && !excluded)
+            if (!d.isBefore(since) && !snap.isCovered(c, d))
               fs.listStatus(dp.getPath).filter(_.isFile).foreach { f =>
                 if (f.getPath.getName.endsWith(".parquet")) {
                   files += 1; bytes += f.getLen
@@ -512,13 +498,6 @@ class GraftTable(
 
   // -------------------------------------------------------------- write --
 
-  /** Per-column parquet writer options from the schema's field opts
-    * (reference `build_writer_properties`, `src/database.rs:11343-11420`):
-    * bloom filters opt-IN per point-lookup column (NDV sized to a typical
-    * row group, matching the reference's 1M — a naive global enable would
-    * pay bloom buffers on every column), dictionary opt-OUT per high-
-    * entropy free-text column. DataFrameWriter options flow into the job's
-    * Hadoop conf, where parquet-mr applies the `#column` suffix per-column. */
   /** Shadow row-group key: Spark 4's parquet filter builder only matches
     * the UTC-adjusted timestamp logical type (`ParquetFilters`'
     * `ParquetTimestampMicrosType` is `timestampType(true, MICROS)`), so a
@@ -541,26 +520,6 @@ class GraftTable(
         unix_micros(col(f.name).cast("timestamp"))
     }
 
-  private def withRgShadow(df: DataFrame): DataFrame =
-    rgShadowExpr.map(e => df.withColumn(GraftTable.RgKeyColumn, e))
-      .getOrElse(df)
-
-  /** Scope table WRITES back to Spark's default AQE coalesce floor
-    * (1 MB). The session floor is lowered to 64 KB (Autotune, r14) so
-    * heavy-work-per-byte READ stages keep their parallelism — but a
-    * write's exchange feeds FILES, and under the 64 KB floor a small
-    * append/compaction fans out into many tiny files per partition dir
-    * (measured: q55's partial-compaction fixture 0.65 → 6.8 s), exactly
-    * the small-files pathology compaction exists to remove (guide §6:
-    * target 128 MB–1 GB output files, never task-count-many). The write
-    * executes inside this scope, so the restore in `finally` cannot leak
-    * into it; a concurrent reader momentarily sees the 1 MB floor —
-    * the pre-r14 behavior, harmless. */
-  private def withWriteCoalesce[T](f: => T): T = {
-    GraftTable.WriteCoalesce.enter(spark)
-    try f finally GraftTable.WriteCoalesce.exit(spark)
-  }
-
   /** The column the FTS sidecar ranges over: the shadow key when the
     * lead sort key needed one, the lead sort key itself when its type is
     * parquet-pushable, none otherwise. */
@@ -568,6 +527,13 @@ class GraftTable(
     if (rgShadowExpr.isDefined) Some(GraftTable.RgKeyColumn)
     else meta.sortingColumns.headOption.map(_.column)
 
+  /** Per-column parquet writer options from the schema's field opts
+    * (reference `build_writer_properties`, `src/database.rs:11343-11420`):
+    * bloom filters opt-IN per point-lookup column (NDV sized to a typical
+    * row group, matching the reference's 1M — a naive global enable would
+    * pay bloom buffers on every column), dictionary opt-OUT per high-
+    * entropy free-text column. DataFrameWriter options flow into the job's
+    * Hadoop conf, where parquet-mr applies the `#column` suffix per-column. */
   private def writerOptions: Map[String, String] = {
     val bloom = meta.bloomFilterColumns.flatMap(c => Seq(
       s"parquet.bloom.filter.enabled#$c" -> "true",
@@ -576,6 +542,26 @@ class GraftTable(
       s"parquet.enable.dictionary#$c" -> "false")
     (bloom ++ dict).toMap
   }
+
+  /** The one partitioned write every data path (append, full and partial
+    * compaction) goes through. Each (project_id, date) is co-located
+    * before writing: the hash `repartition` sends every key to exactly
+    * one reduce partition, so each partition directory gets one file
+    * whatever the session's AQE coalesce settings — without it every
+    * task would write a file into every directory (tasks × dirs small
+    * files). `order` then sorts within the tenant-day so parquet min/max
+    * stats are tight for time-range pruning. */
+  private def writePartitioned(dir: String, df: DataFrame,
+      order: Seq[Column]): Unit =
+    rgShadowExpr.map(e => df.withColumn(GraftTable.RgKeyColumn, e))
+      .getOrElse(df)
+      .repartition(meta.partitions.map(col): _*)
+      .sortWithinPartitions(order: _*)
+      .write
+      .options(writerOptions)
+      .mode(SaveMode.Overwrite)
+      .partitionBy(meta.partitions: _*)
+      .parquet(dir)
 
   private def driverNow(): java.time.LocalDateTime =
     java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
@@ -632,19 +618,7 @@ class GraftTable(
     * record would make that version's readers see phantom columns). */
   private def writeVersion(v: Int, prepared: DataFrame,
       evolvedTo: Option[StructType] = None): Unit = {
-    withWriteCoalesce(withRgShadow(prepared)
-      // co-locate each (project_id, date) before writing: without this,
-      // every task writes a file into every partition directory (tasks ×
-      // dirs small files); with it, files per dir ≈ 1 and the
-      // sortWithinPartitions below makes parquet min/max stats tight for
-      // the whole tenant-day
-      .repartition(meta.partitions.map(col): _*)
-      .sortWithinPartitions(sortCols: _*)
-      .write
-      .options(writerOptions)
-      .mode(SaveMode.Overwrite)
-      .partitionBy(meta.partitions: _*)
-      .parquet(versionDir(v)))
+    writePartitioned(versionDir(v), prepared, sortCols)
     evolvedTo.foreach(writeSchemaFile(v, _))
     commit(v, dates = writtenDateRange(versionDir(v)))
   }
@@ -710,7 +684,7 @@ class GraftTable(
           .groupBy(keyCols: _*).agg(max(col("__del")).as("__del"))
         val dates = df.select(to_date(col(meta.timeColumn)).cast("string"))
           .distinct().as[String].collect().toSeq
-        val priorLive = resolvedOn(dates)
+        val priorLive = resolvedView(Some(dates))
           .select(keyCols: _*).withColumn("__prior", lit(true))
         val d = batch.join(priorLive, meta.dedupKeys, "left")
           .select(sum(
@@ -787,11 +761,12 @@ class GraftTable(
 
   /** The merge-on-read view: latest version per identity, tombstones out.
     *
-    * Compaction gate: when the visible snapshot is exactly the newest
-    * compaction base (no appends since), that base was MATERIALIZED by
-    * dedup+tombstone-filter at [[compact]] time, so re-running the window
-    * over it is an identity that still costs a full-table shuffle — skip
-    * it. Post-compaction reads are then windowless: a recent-page top-k
+    * Compaction gate: when no append leg serves a date (a compacted-only
+    * snapshot, or one whose appends newer partial bases cover), every
+    * leg was MATERIALIZED by dedup+tombstone-filter at compaction time,
+    * so re-running the window over them is an identity that still costs
+    * a full-table shuffle — skip it. Post-compaction reads are then
+    * windowless: a recent-page top-k
     * (`ORDER BY timestamp DESC LIMIT k`) plans as TakeOrderedAndProject
     * straight over the pruned scan, which is why the reference's
     * per-leg-local-limit rule (`optimizers/ordered_union_for_topk.rs`, T1)
@@ -801,11 +776,15 @@ class GraftTable(
   def readResolved(): DataFrame = resolvedView(None)
 
   /** The resolved view, optionally restricted to a set of `date` partition
-    * values (exact — see [[resolvedOn]]'s invariant note).
+    * values. The restriction is applied to the RAW legs (where `date` is
+    * a partition column, so directories prune before IO) and is exact:
+    * `date` derives from the time column, which is a dedup key, so every
+    * version of an identity lives in one date partition and the window
+    * never needs rows outside the selected dates.
     *
-    * Date-bounded window: when a compaction base exists and every
-    * post-base append's marker records its event-date range, only the
-    * dates those appends TOUCHED can hold version conflicts — `date`
+    * Date-bounded window: when a compaction base exists, only the dates
+    * the post-base appends' markers record as TOUCHED can hold version
+    * conflicts — `date`
     * derives from the time column, a dedup key, so an identity lives in
     * exactly one date partition, and the base is already materialized
     * resolved. Untouched base dates therefore stream straight off the scan
@@ -814,67 +793,60 @@ class GraftTable(
     * (BASELINE: 336 ms compacted vs 14–31 s fragmented for the same
     * window): reads under streaming ingest re-window the trailing day(s),
     * never the historical bulk. Falls back to the full window when no base
-    * exists or markers predate date-range recording. */
+    * exists or more than 64 dates are touched. */
   private def resolvedView(restrict: Option[Seq[String]]): DataFrame =
     resolvedFrom(commits(), restrict.map(ds => col("date").isin(ds: _*)))
 
-  private def expandDates(
-      r: (java.time.LocalDate, java.time.LocalDate)): Seq[String] =
+  private def expandDates(r: DateRange): Seq[String] =
     Iterator.iterate(r._1)(_.plusDays(1)).takeWhile(!_.isAfter(r._2))
       .map(_.toString).toSeq
 
-  /** The general resolved-view constructor over a commit list, also
+  /** `date BETWEEN lo AND hi` — the partition predicate a partial base
+    * rewrites and, negated, every older leg's exclusion. */
+  private def inRange(lo: java.time.LocalDate, hi: java.time.LocalDate): Column =
+    col("date").between(lit(lo.toString).cast("date"), lit(hi.toString).cast("date"))
+
+  /** The one resolved-view constructor over a commit list, also
     * handling PARTIAL compaction bases: each leg is read under an
     * anti-range exclusion predicate (`NOT date BETWEEN lo AND hi` for
     * every newer partial base — the reference's mem∪storage per-bucket
     * exclusion filters, J3/`src/database.rs:13097-13114`), so a date is
-    * served by exactly its newest covering base plus later appends.
-    * `schemaOv` overrides the snapshot schema (time travel). */
+    * served by exactly its newest covering base plus later appends;
+    * legs that serve no date are skipped. `schemaOv` overrides the
+    * snapshot schema (time travel). `pending` is an uncommitted
+    * in-memory leg (the mem buffer): it records no dates, so it can
+    * conflict with any identity and takes the full window over every
+    * leg. */
   private def resolvedFrom(cs: Seq[Commit], restrict: Option[Column],
-      schemaOv: Option[StructType] = None): DataFrame = {
-    val vis = visibleCommits(cs)
-    val dirs = vis.map(c => versionDir(c.v))
-    val s = schemaOv.getOrElse(dirsSchema(dirs))
+      schemaOv: Option[StructType] = None,
+      pending: Option[DataFrame] = None): DataFrame = {
+    val snap = new Snapshot(cs)
+    val s = schemaOv.getOrElse(dirsSchema(snap.vis.map(c => versionDir(c.v))))
     def bound(df: DataFrame): DataFrame =
       restrict.map(df.filter).getOrElse(df)
-    if (vis.isEmpty)
-      return bound(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-    if (vis.lastOption.exists(_.baseOf.isDefined) && dirs.size == 1)
-      return bound(rawFrom(dirs, s)) // compacted-only IS the resolved view
-
-    val pbases = vis.filter(_.pbase)
-    def excluding(c: Commit): Seq[(java.time.LocalDate, java.time.LocalDate)] =
-      pbases.filter(p => p.v > c.v).flatMap(_.dates)
     def leg(c: Commit): DataFrame =
-      excluding(c).foldLeft(bound(rawFrom(Seq(versionDir(c.v)), s))) {
-        case (df, (lo, hi)) => df.filter(!col("date").between(
-          lit(lo.toString).cast("date"), lit(hi.toString).cast("date")))
+      snap.covered(c).foldLeft(bound(rawFrom(Seq(versionDir(c.v)), s))) {
+        case (df, (lo, hi)) => df.filter(!inRange(lo, hi))
       }
     def union(legs: Seq[DataFrame]): DataFrame =
       legs.reduce(_ unionByName _)
+    val stored =
+      if (snap.live.isEmpty) bound(rawFrom(Nil, s)) else union(snap.live.map(leg))
+    if (pending.isDefined) return tombstoneFilter(dedup(
+      stored.unionByName(bound(pending.get), allowMissingColumns = true)))
 
     // materialized legs were written resolved (dedup + tombstone filter at
     // compaction time); append legs carry raw versions
-    val (materialized, appends) = vis.partition(c =>
+    val (materialized, appends) = snap.live.partition(c =>
       c.baseOf.isDefined || c.pbase)
-    val raw = union(vis.map(leg))
-    val touched = appends.flatMap(c => c.dates match {
-      case Some(r) =>
-        val excl = excluding(c)
-        expandDates(r).filterNot { ds =>
-          val d = java.time.LocalDate.parse(ds)
-          excl.exists { case (lo, hi) => !d.isBefore(lo) && !d.isAfter(hi) }
-        }
-      case None => Seq(null)
-    }).distinct // null marks an append with no recorded range
-    if (materialized.isEmpty || touched.contains(null) || touched.size > 64)
-      return tombstoneFilter(dedup(raw))
-    val windowless =
-      union(materialized.map(leg)).filter(!col("date").isin(touched: _*))
-    val windowed = tombstoneFilter(dedup(
-      raw.filter(col("date").isin(touched: _*))))
-    windowless.unionByName(windowed)
+    val touched = appends.flatMap(snap.liveDates).distinct
+    if (appends.isEmpty) stored
+    else if (materialized.isEmpty || touched.size > 64)
+      tombstoneFilter(dedup(stored))
+    else union(materialized.map(leg))
+      .filter(!col("date").isin(touched: _*))
+      .unionByName(tombstoneFilter(dedup(
+        stored.filter(col("date").isin(touched: _*)))))
   }
 
   /** The resolved view as of committed version `asOf` — time travel, which
@@ -973,44 +945,23 @@ class GraftTable(
     * a streaming ingester between micro-batch commits). It is conformed
     * with a version stamp STRICTLY NEWER than any committed write, so the
     * dedup window resolves mem-vs-storage version conflicts exactly like
-    * the reference's keep-greatest DedupExec — no anti-range exclusion
-    * predicates needed (J3): a row present in both legs keeps the pending
-    * version, and after the batch commits with the same stamp the view is
-    * unchanged (read-your-writes without double counting). */
+    * the reference's keep-greatest DedupExec — no mem-vs-storage
+    * exclusion predicates needed (J3): a row present in both legs keeps
+    * the pending version, and after the batch commits with the same stamp
+    * the view is unchanged (read-your-writes without double counting).
+    * Stored legs keep their partial-base exclusions ([[resolvedFrom]]). */
   def readResolvedWith(pending: DataFrame,
       pendingTime: java.time.LocalDateTime): DataFrame = {
-    val dirs = visibleDirs(commits())
-    tombstoneFilter(dedup(rawFrom(dirs)
-      .unionByName(conform(pending, Some(pendingTime), dirsSchema(dirs)))))
+    val cs = commits()
+    resolvedFrom(cs, None, pending = Some(
+      conform(pending, Some(pendingTime), dirsSchema(visibleDirs(cs)))))
   }
 
   /** The resolved view unioned with rows ALREADY conformed by
     * [[conformNow]] — the buffered write layer's read path, where each
     * buffered batch carries its own insert-time stamp. */
   private[sources] def readResolvedWithConformed(pending: DataFrame): DataFrame =
-    tombstoneFilter(dedup(rawFrom(visibleDirs(commits()))
-      .unionByName(pending, allowMissingColumns = true)))
-
-  /** Distinct `date=` partition values across the visible snapshot, newest
-    * first — a driver-side directory listing (two levels deep, no file
-    * reads), the same metadata the reference's routing layer consults when
-    * deriving a scan's time window. */
-  private def partitionDates(dirs: Seq[String]): Seq[String] =
-    dirs.flatMap { d =>
-      val p = new Path(d)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).filter(_.isDirectory).toSeq.flatMap(proj =>
-        fs.listStatus(proj.getPath).map(_.getPath.getName).toSeq
-          .filter(_.startsWith("date=")).map(_.stripPrefix("date=")))
-    }.distinct.sorted.reverse
-
-  /** The resolved view restricted to a set of date partitions. The
-    * restriction is applied to the RAW union (where `date` is a partition
-    * column, so directories prune before IO) and is exact: `date` derives
-    * from the time column, which is a dedup key, so every version of an
-    * identity lives in one date partition and the window never needs rows
-    * outside the selected dates. */
-  private def resolvedOn(dates: Seq[String]): DataFrame = resolvedView(Some(dates))
+    resolvedFrom(commits(), None, pending = Some(pending))
 
   /** Recent-page top-k (T1, the reference's
     * `optimizers/ordered_union_for_topk.rs` early-terminating TopK):
@@ -1062,8 +1013,8 @@ class GraftTable(
       // ≥ k rows is complete: every unselected date is strictly older
       // than every selected row, so its limit-k page is the global one.)
       val probe = gateOpt match {
-        case Some(_) => gatedAction(lb)(page(resolvedOn(sel)).localCheckpoint())
-        case None => page(resolvedOn(sel)).localCheckpoint()
+        case Some(_) => gatedAction(lb)(page(resolvedView(Some(sel))).localCheckpoint())
+        case None => page(resolvedView(Some(sel))).localCheckpoint()
       }
       if (probe.count() >= k) return probe
       // a failed probe's checkpointed rows are dead the moment we widen:
@@ -1155,10 +1106,10 @@ class GraftTable(
     // the empty-intersection drop below is only sound against a gram
     // with zero null-keyed holders (such a row would have to hold EVERY
     // query gram).
-    withWriteCoalesce(terms.groupBy("file", "gram")
+    terms.groupBy("file", "gram")
       .agg(min(col("k")).as("klo"), max(col("k")).as("khi"),
         sum(when(col("k").isNull, 1L).otherwise(0L)).as("knulls"))
-      .write.mode(SaveMode.Overwrite).parquet(textIndexDir(v, column)))
+      .write.mode(SaveMode.Overwrite).parquet(textIndexDir(v, column))
   }
 
   /** `text_match(column, query)` over the resolved view, file-pruned by
@@ -1491,14 +1442,7 @@ class GraftTable(
     val snapSchema = dirsSchema(visibleDirs(cs))
     // resolvedFrom, not a bare union: with partial bases in the snapshot,
     // a leg's subsumed dates must be excluded or the rewrite double-counts
-    withWriteCoalesce(withRgShadow(resolvedFrom(cs, None))
-      .repartition(meta.partitions.map(col): _*)
-      .sortWithinPartitions(compactOrder: _*)
-      .write
-      .options(writerOptions)
-      .mode(SaveMode.Overwrite)
-      .partitionBy(meta.partitions: _*)
-      .parquet(versionDir(upTo + 1)))
+    writePartitioned(versionDir(upTo + 1), resolvedFrom(cs, None), compactOrder)
     commit(upTo + 1, baseOf = Some(upTo),
       dates = writtenDateRange(versionDir(upTo + 1)))
     if (maintainCountIndex) {
@@ -1537,15 +1481,8 @@ class GraftTable(
     val cs = commits()
     if (cs.isEmpty) return
     val v = cs.last.v + 1
-    withWriteCoalesce(withRgShadow(resolvedFrom(cs, Some(col("date").between(
-        lit(lo.toString).cast("date"), lit(hi.toString).cast("date")))))
-      .repartition(meta.partitions.map(col): _*)
-      .sortWithinPartitions(compactOrder: _*)
-      .write
-      .options(writerOptions)
-      .mode(SaveMode.Overwrite)
-      .partitionBy(meta.partitions: _*)
-      .parquet(versionDir(v)))
+    writePartitioned(versionDir(v), resolvedFrom(cs, Some(inRange(lo, hi))),
+      compactOrder)
     commit(v, dates = Some((lo, hi)), pbase = true)
     if (maintainCountIndex) countMarker() match {
       // partial compaction never changes the logical count — carry over
@@ -1580,19 +1517,10 @@ class GraftTable(
   def maintenanceSweep(minVersions: Int = 2,
       maxRanges: Int = Int.MaxValue
   ): Seq[(java.time.LocalDate, java.time.LocalDate)] = {
-    val vis = visibleCommits(commits())
-    val pbases = vis.filter(_.pbase)
-    val appends = vis.filter(c => !c.pbase && c.baseOf.isEmpty)
+    val snap = new Snapshot(commits())
     val queued = dmlDirtyDates()
-    val uncovered = appends
-      .flatMap { c =>
-        c.dates.toSeq.flatMap(expandDates).filterNot { ds =>
-          val d = java.time.LocalDate.parse(ds)
-          pbases.exists(p => p.v > c.v && p.dates.exists { case (lo, hi) =>
-            !d.isBefore(lo) && !d.isAfter(hi)
-          })
-        }
-      }
+    val uncovered = snap.vis.filter(c => !c.pbase && c.baseOf.isEmpty)
+      .flatMap(snap.liveDates)
     // a DML-queued date is dirty at ANY append count: one DML version
     // already puts MOR resolution on every read of that date
     val dirty = uncovered
@@ -1601,7 +1529,7 @@ class GraftTable(
       .keys.toSeq.map(java.time.LocalDate.parse).sortBy(_.toEpochDay)
     // contiguous runs → one partial base each
     def runsOf(ds: Seq[java.time.LocalDate]) = ds.foldLeft(
-      List.empty[(java.time.LocalDate, java.time.LocalDate)]) {
+      List.empty[DateRange]) {
       case ((lo, hi) :: tail, d) if d == hi.plusDays(1) => (lo, d) :: tail
       case (acc, d) => (d, d) :: acc
     }.reverse

@@ -35,7 +35,7 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$d/events.parquet")
-    val base = raw.schema("ts").dataType match {
+    raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts",
           org.apache.spark.sql.functions
@@ -47,18 +47,6 @@ object Tables {
       case other => throw new IllegalStateException(
         s"events.ts must be legacy-nanos LONG or TIMESTAMP_NTZ, got $other")
     }
-    // A/B knob (r15, VERDICT r14 #6): widen a single-split events scan
-    // to session width before consumers, the documents/embeddings
-    // treatment. DEFAULT OFF — measured per query (see
-    // OPTIMIZATION_r15.md): filters still push below the exchange, so
-    // point lookups shuffle only surviving rows, but every full-table
-    // aggregation loses scan-fused partial aggregation and shuffles raw
-    // events instead of pre-aggregated groups. The ~50 event queries
-    // are dominated by exactly those agg shapes.
-    if (s.conf.getOption("spark.graft.events.widen").exists(_.toBoolean))
-      graft.operators.TextDedup.widenForKernel(base,
-        org.apache.spark.sql.functions.col("user_id"))
-    else base
   }
   /** The two training-pipeline corpora fan out to the cluster width
     * before their (compute-heavy) consumers: the fixture files are a

@@ -138,10 +138,6 @@ class AutotuneSpec extends AnyFunSuite {
       spark.conf.set(key, "1m")
       Autotune.install(spark, env = Map.empty)
       assert(spark.conf.get(key) == "1m")
-      // env wins over everything, in KB
-      Autotune.install(spark,
-        env = Map("SPARK_GRAFT_AQE_MIN_PARTITION_KB" -> "256"))
-      assert(spark.conf.get(key) == (256L * 1024).toString)
     } finally {
       prior match {
         case Some(v) => spark.conf.set(key, v)

@@ -363,4 +363,43 @@ class BufferedWriteSpec extends AnyFunSuite {
     assert(fresh.bufferedRows == 0L)
     fresh.close()
   }
+
+  test("over a partial base the buffered view reads no more files than " +
+      "the table view, and equals it after flush") {
+    val tbl = freshTable()
+    // 96 hourly rows: three tenants over 2024-03-01..04
+    val hourly = spark.range(96).select(
+      (col("id") % 3).cast("string").as("project_id"),
+      (lit("2024-03-01 00:00:00").cast("timestamp_ntz")
+        + expr("make_interval(0, 0, 0, 0, id, 0, 0)")).as("timestamp"),
+      concat(lit("row-"), col("id")).as("id"),
+      lit("stored").as("name"))
+    tbl.append(hourly, t(0))
+    tbl.compact()
+    // fragment days two..four, then let maintenance fold them into a
+    // partial base: every older leg now excludes those dates
+    val later = col("timestamp") >=
+      lit("2024-03-02 00:00:00").cast("timestamp_ntz")
+    tbl.update(later, Map("name" -> lit("u1")), t(1))
+    tbl.update(later, Map("name" -> lit("u2")), t(2))
+    assert(tbl.maintenanceSweep(minVersions = 2).nonEmpty)
+
+    val buf = new BufferedWriteLayer(tbl)
+    // new versions of a day-one and a partial-base-covered identity,
+    // plus one new identity
+    buf.insert(hourly.filter(col("id").isin("row-7", "row-50"))
+      .withColumn("name", lit("buffered"))
+      .unionByName(rows(Seq(500), "buffered")), t(3))
+    val bufView = buf.readResolved()
+    val bufFiles = bufView.inputFiles.length
+    val tableFiles = tbl.readResolved().inputFiles.length
+    assert(bufFiles <= tableFiles, s"buffered view reads $bufFiles files, " +
+      s"the table view of the same snapshot $tableFiles")
+    val before = bufView.collect().toSet
+    assert(before.size == 97)
+    assert(bufView.filter(col("name") === "buffered").count() == 3)
+    buf.flush()
+    assert(tbl.readResolved().collect().toSet == before,
+      "flush must not change the resolved view")
+  }
 }

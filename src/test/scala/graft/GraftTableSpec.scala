@@ -594,6 +594,68 @@ class GraftTableSpec extends AnyFunSuite {
       == "mem-row-7")
   }
 
+  test("an empty delete touches no dates: the read stays date-bounded") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val t = freshTable()
+    t.append(hourlyRows(40), t0(0)) // days 2024-03-01 + 02
+    t.compact()
+    t.update(col("id") === "row-30", Map("name" -> lit("u1")), t0(1))
+    val before = t.readResolved().collect().toSet
+    // matches nothing: the version commits but creates no date= directory
+    t.delete(col("id") === "row-none", t0(2))
+    assert(t.currentVersion() == 4)
+    assert(t.readResolved().collect().toSet == before)
+    // only day two (the update's date) goes through the dedup window;
+    // day one streams off the base through the windowless leg
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = t.readResolved().queryExecution.executedPlan
+      def files(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+        case s: FileSourceScanExec => s.selectedPartitions.totalNumberOfFiles
+      }.sum
+      val windowed = plan.collect { case w: WindowExec => files(w) }.sum
+      assert(windowed > 0 && windowed < files(plan),
+        s"$windowed of ${files(plan)} files read under the window")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("append, compact and compactRange write one parquet file per " +
+      "(project_id, date) directory under a 1 KB AQE floor") {
+    val keys = Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      "spark.sql.shuffle.partitions")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "1k")
+    spark.conf.set(keys(1), "64")
+    try {
+      val t = freshTable()
+      t.append(hourlyRows(96), t0(0)) // v1: 3 tenants × 4 days
+      t.update(col("timestamp") >=
+        lit("2024-03-03 00:00:00").cast("timestamp_ntz"),
+        Map("name" -> lit("u1")), t0(1)) // v2
+      t.compact() // v3
+      t.update(col("id") === "row-40", Map("name" -> lit("u2")), t0(2)) // v4
+      t.compactRange(java.time.LocalDate.of(2024, 3, 2),
+        java.time.LocalDate.of(2024, 3, 3)) // v5
+      val table = new java.io.File(s"${t.root}/${t.meta.name}")
+      def dirs(f: java.io.File, prefix: String) =
+        f.listFiles().filter(d => d.isDirectory && d.getName.startsWith(prefix))
+      val perVersion = Seq("v00001", "v00003", "v00005").map { v =>
+        val dateDirs = dirs(new java.io.File(table, v), "project_id=")
+          .flatMap(dirs(_, "date="))
+        dateDirs.foreach { d =>
+          val n = d.listFiles().count(_.getName.endsWith(".parquet"))
+          assert(n == 1, s"$v/${d.getParentFile.getName}/${d.getName}: $n files")
+        }
+        dateDirs.length
+      }
+      assert(perVersion == Seq(12, 12, 6), perVersion)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("partition layout is (project_id, date) inside each version dir") {
     val t = freshTable()
     t.append(sampleRows(30), t0(0))
