@@ -71,10 +71,9 @@ object GraftTable {
       case _ =>
     }
 
-  /** Cached raw-union plans per (session, table): a bounded MRU of
-    * ((schema, dir-set) fingerprint → plan) entries — the current
-    * snapshot's full union plus the base/append sub-plans the
-    * date-bounded resolved view composes. */
+  /** Cached scan plans per (session, table): a bounded LRU of
+    * (fingerprint → plan) entries — the current snapshot's legs and the
+    * leg unions the resolved view composes of them. */
   private val snapshotCache =
     scala.collection.concurrent.TrieMap[(Int, String), List[(String, org.apache.spark.sql.DataFrame)]]()
 
@@ -170,8 +169,8 @@ class GraftTable(
     * Delta-checkpoint-stats role — [[recentPage]] and the date-bounded
     * window derive date sets from markers alone; for partial bases: the
     * subsumption scope). Every write records the range of the `date=`
-    * directories it created, so a range-less marker is a write that
-    * touched no dates (an empty append, a delete matching nothing).
+    * directories it created; a range-less marker is an empty write, or
+    * rows whose dates it cannot name ([[Snapshot.live]] tells which).
     * Encoded entirely in the marker NAME (`_v00007`,
     * `_v00007.base.00005`, `_v00009.pb.dr.2024-03-01.2024-03-10`,
     * `_v00007.dr.2024-03-01.2024-03-10`) so listing needs no file reads. */
@@ -319,18 +318,30 @@ class GraftTable(
     def liveDates(c: Commit): Iterator[String] =
       c.dates.iterator.flatMap(expandDates)
         .filterNot(ds => isCovered(c, java.time.LocalDate.parse(ds)))
-    /** Legs that still serve a date. Every other visible leg holds no
-      * visible row (it recorded no dates, or newer partial bases cover
-      * all of them), so readers skip it. */
-    val live: Seq[Commit] = vis.filter(liveDates(_).hasNext)
+    /** Legs that still serve a date. A leg with a recorded range serves
+      * the dates no newer partial base covers. A range-less leg is
+      * decided by its directory: an empty write (a delete matching
+      * nothing) holds no rows and is skipped, while rows whose dates the
+      * marker does not name (a layout without `date=` directories, or a
+      * marker written before range recording) keep the leg, on every
+      * date. */
+    val live: Seq[Commit] = vis.filter(c =>
+      if (c.dates.isEmpty) holdsData(c.v) else liveDates(c).hasNext)
+    /** Every date the snapshot serves, newest first, from marker ranges
+      * alone (a range may include absent dates, which scan zero files);
+      * None when a live leg's dates are unknown. */
+    def dates: Option[Seq[String]] =
+      if (live.exists(_.dates.isEmpty)) None
+      else Some(live.flatMap(liveDates).distinct.sorted.reverse)
   }
 
-  /** Distinct candidate event dates of the visible snapshot, newest
-    * first — from marker date ranges alone (no filesystem walk; a range
-    * may include absent dates, which scan zero files). */
-  private def visibleDates(cs: Seq[Commit]): Seq[String] =
-    visibleCommits(cs).flatMap(_.dates.toSeq.flatMap(expandDates))
-      .distinct.sorted.reverse
+  /** Whether a committed version directory holds data: a write that
+    * matched no rows creates no partition directory and no data file. */
+  private def holdsData(v: Int): Boolean = {
+    val p = new Path(versionDir(v))
+    fs.exists(p) && fs.listStatus(p).exists(st =>
+      st.isDirectory || st.getPath.getName.endsWith(".parquet"))
+  }
 
   /** Post-pruning work a scan bounded below by `since` would actually
     * select: (parquet file count, total bytes) under `date=` partitions
@@ -735,28 +746,32 @@ class GraftTable(
   private def rawFrom(dirs: Seq[String]): DataFrame =
     rawFrom(dirs, dirsSchema(dirs))
 
-  private def rawFrom(dirs: Seq[String], s: StructType): DataFrame = {
+  private def rawFrom(dirs: Seq[String], s: StructType,
+      keep: Int = 8): DataFrame =
     if (dirs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    else {
-      // memoize union plans per (dir set, schema): building one performs
-      // driver-side partition discovery over every (tenant, day) dir of
-      // every leg — at fleet scale that listing dwarfs a point query.
-      // Files inside a committed version dir are immutable, so a hit can
-      // never be stale (the reference's ListingTable/plan-cache role). A
-      // small per-table MRU keeps the current snapshot plus the base /
-      // append-legs sub-plans the date-bounded view reads, so a stream of
-      // micro-batch commits re-lists only each NEW version dir.
-      val key = (System.identityHashCode(spark), path)
-      val ck = s"${s.hashCode}|${dirs.mkString(";")}"
-      val cur = GraftTable.snapshotCache.getOrElse(key, Nil)
-      cur.find(_._1 == ck).map(_._2).getOrElse {
-        val df = dirs.map(d => spark.read.schema(s).parquet(d))
-          .reduce(_ unionByName _)
-        GraftTable.snapshotCache.put(key, ((ck, df) :: cur).take(8))
-        df
-      }
+    else cachedPlan(s"${s.hashCode}|${dirs.mkString(";")}", keep) {
+      dirs.map(d => spark.read.schema(s).parquet(d)).reduce(_ unionByName _)
     }
+
+  /** Memoize a scan plan per (session, table) under fingerprint `ck`:
+    * building one performs driver-side partition discovery over every
+    * (tenant, day) dir of every leg — at fleet scale that listing dwarfs
+    * a point query. Files inside a committed version dir are immutable,
+    * so a hit can never be stale (the reference's ListingTable/plan-cache
+    * role). A per-table LRU of `keep` entries: the resolved view sizes
+    * it to hold every live leg plus the leg unions composed of them, so
+    * a read of an unchanged snapshot is one hit per union whatever its
+    * leg count, and a new commit re-lists only its own leg. */
+  private def cachedPlan(ck: String, keep: Int)(
+      build: => DataFrame): DataFrame = {
+    val key = (System.identityHashCode(spark), path)
+    def entries = GraftTable.snapshotCache.getOrElse(key, Nil)
+    val df = entries.find(_._1 == ck).map(_._2).getOrElse(build)
+    // re-read: `build` may have cached the legs it composes
+    GraftTable.snapshotCache.put(key,
+      ((ck, df) :: entries.filterNot(_._1 == ck)).take(keep max 8))
+    df
   }
 
   /** The merge-on-read view: latest version per identity, tombstones out.
@@ -824,26 +839,37 @@ class GraftTable(
     val s = schemaOv.getOrElse(dirsSchema(snap.vis.map(c => versionDir(c.v))))
     def bound(df: DataFrame): DataFrame =
       restrict.map(df.filter).getOrElse(df)
+    // the plan cache holds every live leg and the unions of them
+    val keep = snap.live.size + 8
     def leg(c: Commit): DataFrame =
-      snap.covered(c).foldLeft(bound(rawFrom(Seq(versionDir(c.v)), s))) {
+      snap.covered(c).foldLeft(rawFrom(Seq(versionDir(c.v)), s, keep)) {
         case (df, (lo, hi)) => df.filter(!inRange(lo, hi))
       }
-    def union(legs: Seq[DataFrame]): DataFrame =
-      legs.reduce(_ unionByName _)
-    val stored =
-      if (snap.live.isEmpty) bound(rawFrom(Nil, s)) else union(snap.live.map(leg))
+    // one cached plan per leg set; `restrict` filters above the union and
+    // Catalyst pushes it into every leg's scan
+    def union(legs: Seq[Commit]): DataFrame = bound(legs match {
+      case Seq() => rawFrom(Nil, s)
+      case Seq(c) => leg(c)
+      case _ => cachedPlan(s"legs|${s.hashCode}|" + legs.map(c =>
+          versionDir(c.v) + snap.covered(c).mkString).mkString(";"), keep) {
+        legs.map(leg).reduce(_ unionByName _)
+      }
+    })
+    val stored = union(snap.live)
     if (pending.isDefined) return tombstoneFilter(dedup(
       stored.unionByName(bound(pending.get), allowMissingColumns = true)))
 
     // materialized legs were written resolved (dedup + tombstone filter at
-    // compaction time); append legs carry raw versions
+    // compaction time); append legs carry raw versions, and one whose
+    // dates are unknown can conflict with any identity
     val (materialized, appends) = snap.live.partition(c =>
       c.baseOf.isDefined || c.pbase)
     val touched = appends.flatMap(snap.liveDates).distinct
     if (appends.isEmpty) stored
-    else if (materialized.isEmpty || touched.size > 64)
+    else if (materialized.isEmpty || appends.exists(_.dates.isEmpty) ||
+        touched.size > 64)
       tombstoneFilter(dedup(stored))
-    else union(materialized.map(leg))
+    else union(materialized)
       .filter(!col("date").isin(touched: _*))
       .unionByName(tombstoneFilter(dedup(
         stored.filter(col("date").isin(touched: _*)))))
@@ -993,7 +1019,8 @@ class GraftTable(
     val order = col(meta.timeColumn).desc +: tieBreak
     def page(df: DataFrame): DataFrame =
       df.filter(predicate).orderBy(order: _*).limit(k)
-    val dates = visibleDates(commits())
+    // unknown dates (a range-less leg holding rows): no bounded probe
+    val dates = new Snapshot(commits()).dates.getOrElse(Nil)
     // admission depth of a probe over `sel` (newest-first): now back to
     // the oldest selected date's start of day
     def lookbackTo(sel: Seq[String]): Option[Long] = sel.lastOption.map { d =>
@@ -1031,13 +1058,16 @@ class GraftTable(
     * compacted version — the gate for metadata-only counts
     * ([[graft.plans.CountFastPath]]): a compacted snapshot IS the resolved
     * view, so physical row counts are logical row counts. */
-  def compactBaseDir(): Option[String] = {
-    val cs = commits()
-    cs.lastOption
-      .filter(_.baseOf.isDefined)
-      .filter(last => visibleDirs(cs) == Seq(versionDir(last.v)))
-      .map(last => versionDir(last.v))
-  }
+  def compactBaseDir(): Option[String] =
+    compactBase(commits()).map(b => versionDir(b.v))
+
+  /** The full base when it is the only live leg ([[Snapshot.live]]) —
+    * later empty writes hold no rows and leave the snapshot compacted. */
+  private def compactBase(cs: Seq[Commit]): Option[Commit] =
+    new Snapshot(cs).live match {
+      case Seq(b) if b.baseOf.isDefined => Some(b)
+      case _ => None
+    }
 
   // --------------------------------------------------------- text index --
 
@@ -1073,9 +1103,9 @@ class GraftTable(
     meta.ftsTokenizers.getOrElse(column, "ngram3")
 
   def buildTextIndex(column: String): Unit = {
-    val base = compactBaseDir().getOrElse(throw new IllegalStateException(
+    val b = compactBase(commits()).getOrElse(throw new IllegalStateException(
       s"${meta.name}: text index requires a compacted-only snapshot"))
-    val v = currentVersion()
+    val base = versionDir(b.v)
     // Row-group parity (reference tantivy row-ordinal selections,
     // `src/tantivy_index/search.rs:126-216`): alongside the (gram, file)
     // pair, record the min/max of the table's LEAD SORT KEY over the rows
@@ -1109,7 +1139,7 @@ class GraftTable(
     terms.groupBy("file", "gram")
       .agg(min(col("k")).as("klo"), max(col("k")).as("khi"),
         sum(when(col("k").isNull, 1L).otherwise(0L)).as("knulls"))
-      .write.mode(SaveMode.Overwrite).parquet(textIndexDir(v, column))
+      .write.mode(SaveMode.Overwrite).parquet(textIndexDir(b.v, column))
   }
 
   /** `text_match(column, query)` over the resolved view, file-pruned by
@@ -1138,8 +1168,9 @@ class GraftTable(
     val grams = toks.filter(_.length >= 3).flatMap(_.sliding(3)).distinct
     val raw = ftsTokenizer(column) == "raw"
     val indexed = for {
-      base <- compactBaseDir()
-      idx = textIndexDir(currentVersion(), column)
+      b <- compactBase(commits())
+      base = versionDir(b.v)
+      idx = textIndexDir(b.v, column)
       if (if (raw) toks.nonEmpty else grams.nonEmpty) &&
         fs.exists(new Path(idx))
     } yield {
@@ -1420,9 +1451,7 @@ class GraftTable(
     // z-ordered, already-resolved files would replace every file with an
     // identical-content copy, breaking vacuum retention and object-store
     // cache warmth for zero gain.
-    val alreadyCompacted =
-      cs.lastOption.exists(_.baseOf.isDefined) && visibleDirs(cs).size == 1
-    if (cs.nonEmpty && !alreadyCompacted) {
+    if (cs.nonEmpty && compactBase(cs).isEmpty) {
       compactLocked(cs)
       // a FULL base consolidates every date — nothing queued remains dirty
       if (dmlDirtyDates().nonEmpty) storeDmlDirty(Set.empty)

@@ -620,6 +620,52 @@ class GraftTableSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("a range-less leg that holds rows is read, paged, compacted and " +
+      "survives vacuum") {
+    import spark.implicits._
+    val t = freshTable()
+    t.append(hourlyRows(48), t0(0)) // v1: days 2024-03-01 + 02
+    t.compact() // v2
+    t.update(col("id") === "row-30", Map("name" -> lit("u1")), t0(1)) // v3
+    t.append(Seq("2024-03-05 10:00:00").toDF("ts").select(
+      lit("1").as("project_id"),
+      col("ts").cast("timestamp_ntz").as("timestamp"),
+      lit("row-900").as("id"), lit("late").as("name")), t0(2)) // v4
+    // strip the recorded ranges: the marker shape written before range
+    // recording, or by a layout without date= directories
+    val commits = new java.io.File(s"${t.root}/${t.meta.name}/_commits")
+    Seq("_v00003", "_v00004").foreach { v =>
+      val m = commits.listFiles().find(_.getName.startsWith(v)).get
+      assert(m.getName.contains(".dr."), m.getName)
+      assert(m.renameTo(new java.io.File(commits, v)))
+    }
+    def check(when: String): Unit = {
+      val got = t.readResolved().select("id", "name").as[(String, String)]
+        .collect().toMap
+      assert(got.size == 49 && got("row-30") == "u1" &&
+        got("row-900") == "late", s"$when: $got")
+      assert(t.recentPage(1).select("id").as[String].collect().toSeq ==
+        Seq("row-900"), when)
+    }
+    check("range-less legs")
+    t.compact()
+    t.vacuum()
+    assert(t.compactBaseDir().isDefined)
+    check("compacted and vacuumed")
+  }
+
+  test("an empty write after compaction keeps the snapshot compacted") {
+    val t = freshTable()
+    t.append(hourlyRows(40), t0(0))
+    t.compact()
+    t.delete(col("id") === "row-none", t0(1))
+    val v = t.currentVersion()
+    assert(t.compactBaseDir().isDefined)
+    t.compact()
+    assert(t.currentVersion() == v, "compact rewrote an unchanged view")
+    assert(t.readResolved().count() == 40)
+  }
+
   test("append, compact and compactRange write one parquet file per " +
       "(project_id, date) directory under a 1 KB AQE floor") {
     val keys = Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize",
