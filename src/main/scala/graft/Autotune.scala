@@ -17,11 +17,12 @@ import org.apache.spark.sql.SparkSession
   * posture). The knobs that can still oversubscribe a host live OUTSIDE
   * that pool, and those are the ones derived here:
   *
-  *  - `spark.sql.shuffle.partitions` — derived from detected cores.
-  *    NOTE the same container caveat as the reference's `detect_cores`:
-  *    `availableProcessors` honors cpuset pinning but NOT a CFS quota
-  *    (`docker --cpus`), so a quota-throttled container should set the
-  *    override env explicitly.
+  *  - `spark.sql.shuffle.partitions` — derived from the session's task
+  *    slots ([[GraftSession.defaultCpus]]: `SPARK_GRAFT_CPUS`, else the
+  *    detected cores). NOTE the same container caveat as the reference's
+  *    `detect_cores`: `availableProcessors` honors cpuset pinning but NOT
+  *    a CFS quota (`docker --cpus`), so a quota-throttled container should
+  *    set `SPARK_GRAFT_CPUS` explicitly.
   *  - `spark.sql.autoBroadcastJoinThreshold` — each broadcast relation is
   *    rebuilt on the driver and resident per executor. Measured (see
   *    [[derive]]): raising it with heap REGRESSES reads under concurrent
@@ -44,15 +45,16 @@ import org.apache.spark.sql.SparkSession
   *    line as the collect instead of riding uncharged beside it.
   *
   * Precedence per knob: environment variable > already-set Spark conf >
-  * derived value. [[install]] logs one line naming exactly which knobs
-  * were derived vs respected — the reference's "logged once at startup so
-  * ops can see exactly what was chosen". One documented edge: "operator
-  * set" is detected as "the resolved conf differs from Spark's own
-  * default", so an operator deliberately pinning a knob AT the Spark
-  * default (e.g. `spark.sql.shuffle.partitions=200`) is indistinguishable
-  * from an unset knob and will be overridden by the derived value — pin
-  * through the env override (`SPARK_GRAFT_*`) when the default itself is
-  * the intended choice.
+  * derived value; the shuffle width has no env of its own, it follows the
+  * session's task slots. [[install]] logs one line naming exactly which
+  * knobs were derived vs respected — the reference's "logged once at
+  * startup so ops can see exactly what was chosen". One documented edge:
+  * "operator set" is detected as "the resolved conf differs from Spark's
+  * own default", so an operator deliberately pinning a knob AT the Spark
+  * default (e.g. `spark.sql.autoBroadcastJoinThreshold=10m`) is
+  * indistinguishable from an unset knob and will be overridden by the
+  * derived value — pin through the env override (`SPARK_GRAFT_*`) when
+  * the default itself is the intended choice.
   */
 object Autotune {
 
@@ -171,7 +173,6 @@ object Autotune {
   // ---- wiring ------------------------------------------------------------
 
   /** Env overrides, named like the existing bench/probe envs. */
-  private val EnvShuffle = "SPARK_GRAFT_CPUS"
   private val EnvBroadcast = "SPARK_GRAFT_BROADCAST_MB"
   private val EnvBufferRows = "SPARK_GRAFT_BUFFER_MAX_ROWS"
   private val EnvCcLimit = "SPARK_GRAFT_CC_DRIVER_EDGE_LIMIT"
@@ -300,19 +301,18 @@ object Autotune {
   /** Resolve every knob with env > operator-set-conf > derived precedence
     * and SET the winners on the session; returns the audit of the FINAL
     * (post-override) values — operators keep authority, the failure mode
-    * becomes a visible warning. Logged once per call site (Bench, probe,
-    * verify mains — each a fresh JVM). "Operator-set" = the session conf
-    * currently differs from Spark's own default for that key (a builder
-    * `.config(...)` or an earlier `conf.set`). */
-  def install(spark: SparkSession,
+    * becomes a visible warning. Called by [[GraftSession.build]] with the
+    * session's `cores` (task slots), logged once per session. "Operator-
+    * set" = the session conf currently differs from Spark's own default
+    * for that key (a builder `.config(...)` or an earlier `conf.set`). */
+  def install(spark: SparkSession, cores: Int,
       env: Map[String, String] = sys.env): Audit = {
-    val host = detectHost()
+    val host = detectHost().copy(cores = cores)
     val k = derive(host)
     val applied = scala.collection.mutable.ArrayBuffer.empty[String]
-    def resolve(envKey: String, confKey: String, sparkDefault: Option[Long],
-        derived: Long, fromEnv: String => Long,
-        fromConf: String => Long): Long =
-      env.get(envKey).map(fromEnv) match {
+    def resolve(confKey: String, sparkDefault: Option[Long], derived: Long,
+        fromEnv: Option[Long], fromConf: String => Long): Long =
+      fromEnv match {
         case Some(explicit) =>
           spark.conf.set(confKey, explicit.toString); explicit
         case None =>
@@ -326,13 +326,15 @@ object Autotune {
       }
     val bytesConf = (s: String) =>
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-    val shuffle = resolve(EnvShuffle, "spark.sql.shuffle.partitions",
-      Some(200L), k.shufflePartitions, _.toLong, _.toLong)
-    val broadcast = resolve(EnvBroadcast,
-      "spark.sql.autoBroadcastJoinThreshold", Some(10L * MB),
-      k.broadcastThresholdBytes, mb => mb.toLong * MB, bytesConf)
-    val ccLimit = resolve(EnvCcLimit, "spark.graft.cc.driverEdgeLimit",
-      None, k.ccDriverEdgeLimit, _.toLong, _.toLong)
+    // no env override: the width follows `cores`, which already carries
+    // SPARK_GRAFT_CPUS when it is set
+    val shuffle = resolve("spark.sql.shuffle.partitions", Some(200L),
+      k.shufflePartitions, None, _.toLong)
+    val broadcast = resolve("spark.sql.autoBroadcastJoinThreshold",
+      Some(10L * MB), k.broadcastThresholdBytes,
+      env.get(EnvBroadcast).map(_.toLong * MB), bytesConf)
+    val ccLimit = resolve("spark.graft.cc.driverEdgeLimit", None,
+      k.ccDriverEdgeLimit, env.get(EnvCcLimit).map(_.toLong), _.toLong)
     // AQE coalesce floor: shuffles start here and shrink by size; no
     // Spark default for this key (unset = use shuffle.partitions), so
     // any operator-set value is respected as-is. Floored at the RESOLVED
@@ -342,9 +344,10 @@ object Autotune {
     // caps the pre-coalesce reduce-task count, so a floor below the
     // operator's setting would recreate the oversized-shuffle spill this
     // knob exists to prevent.
-    resolve(EnvInitialPartitions,
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      None, math.max(k.initialShufflePartitions, shuffle), _.toLong, _.toLong)
+    val initial = resolve(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None,
+      math.max(k.initialShufflePartitions, shuffle),
+      env.get(EnvInitialPartitions).map(_.toLong), _.toLong)
     // AQE coalesce floor SIZE is not tuned: the session keeps Spark's
     // 1 MB default or the operator's value. A lower session floor split
     // every small shuffle into tens of extra tasks; the operators whose
@@ -359,14 +362,25 @@ object Autotune {
     if (a.oversubscribed)
       System.err.println(s"$msg — OVERSUBSCRIBED, lower one of these knobs")
     else System.err.println(msg)
-    lastAudit = Some(a)
+    lastBoot = Some(Boot(a, Seq(
+      "cores" -> host.cores.toLong,
+      "shuffle_partitions" -> shuffle,
+      "initial_shuffle_partitions" -> initial,
+      "broadcast_threshold_bytes" -> broadcast,
+      "cc_driver_edge_limit" -> ccLimit,
+      "max_buffered_rows" -> bufferedRows)))
     a
   }
 
-  /** The most recent audit, for introspection surfaces (the reference
-    * keeps its boot audit readable from `timefusion_stats` — a startup
-    * log line rotates away; an operator diagnosing an OOM needs the
-    * committed-vs-slack split on demand). */
-  @volatile private var lastAudit: Option[Audit] = None
-  def bootAudit: Option[Audit] = lastAudit
+  /** What the most recent [[install]] resolved: its budget audit and the
+    * effective knob values, by name. */
+  final case class Boot(audit: Audit, knobs: Seq[(String, Long)])
+
+  /** The most recent install, for introspection surfaces — the reference
+    * keeps its boot audit readable from `timefusion_stats`; here
+    * [[graft.sources.GraftStats]] serves it as the `autotune` rows. A
+    * startup log line rotates away; an operator diagnosing an OOM needs
+    * the committed-vs-slack split on demand. */
+  @volatile private var lastBoot: Option[Boot] = None
+  def boot: Option[Boot] = lastBoot
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line the driver records.
   *
@@ -17,17 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // shuffle partitions / broadcast threshold / buffer caps derive from
-    // the host (SPARK_GRAFT_CPUS et al. win when set) + budget audit log
-    Autotune.install(spark)
-    graft.plans.DeferExpensiveProjection.install(spark)
+    val spark = GraftSession.build()
 
     // JVM-health telemetry per query (stderr — stdout carries only the
     // one JSON record): GC time delta, JIT compilation delta, heap in use.

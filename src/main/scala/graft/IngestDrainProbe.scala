@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Drain probe for the ingest-side indexes at REAL corpus scale
@@ -63,20 +63,13 @@ object IngestDrainProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
     val batches = sys.env.getOrElse("SPARK_GRAFT_DRAIN_BATCHES", "20").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // comma-list of legs to run (default: all) — single-leg reruns for
     // A/B knob rows (e.g. SPARK_GRAFT_DRAIN_LEGS=text_shingle with two
     // SPARK_GRAFT_SEGMENT_ROWS_PER_FILE values)
     val legsEnv = sys.env.get("SPARK_GRAFT_DRAIN_LEGS")
       .map(_.split(",").map(_.trim).toSet)
     def legOn(name: String): Boolean = legsEnv.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Autotune.install(spark)
+    val spark = GraftSession.build()
     val reads = new Reads
     spark.sparkContext.addSparkListener(reads)
 

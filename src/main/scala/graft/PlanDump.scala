@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for declared SparkEntry queries to files
@@ -22,15 +21,7 @@ object PlanDump {
     val outDir = args.headOption.getOrElse("plans/r14")
     val suffix = args.lift(1).getOrElse("")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Autotune.install(spark)
-    graft.plans.DeferExpensiveProjection.install(spark)
+    val spark = GraftSession.build()
     Files.createDirectories(Paths.get(outDir))
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Alternating A/B of one SparkEntry query under two runtime confs —
   * the bench-attribution discipline (same host, same JVM, interleaved
   * samples) applied to a single query instead of the storage legs.
@@ -23,15 +21,8 @@ object QueryAb {
     val confKey = args.lift(1).getOrElse(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_AB_REPEATS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Autotune.install(spark)
+    val spark = GraftSession.build()
     val valueA = args.lift(2).getOrElse(
       spark.conf.getOption(confKey).getOrElse("256"))
     val valueB = args.lift(3).getOrElse(

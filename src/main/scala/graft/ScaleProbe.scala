@@ -82,19 +82,11 @@ object ScaleProbe {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the probe measures the DISTRIBUTED algorithms: the cluster
-      // queries must not take the small-graph driver union-find escape
-      // hatch here, or the ratios would compare different code paths
-      .config("spark.graft.cc.driverEdgeLimit", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Autotune.install(spark) // derive remaining knobs; the explicit
-    // cc.driverEdgeLimit=0 above survives (operator-set conf wins)
+    val spark = GraftSession.build()
+    // the probe measures the DISTRIBUTED algorithms: the cluster
+    // queries must not take the small-graph driver union-find escape
+    // hatch here, or the ratios would compare different code paths
+    spark.conf.set("spark.graft.cc.driverEdgeLimit", "0")
 
     // resume guard keys on a marker written AFTER every amplify write: a
     // run that died mid-build (or an older build lacking a newer table's
@@ -328,13 +320,7 @@ object AmplifyFull {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1_full")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     if (Files.exists(Paths.get(out, "_amplified_full_v2"))) {
       spark.stop(); return
     }

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage cost breakdown for one SparkEntry query — the measurement
   * companion to the scale probe's per-query aggregates: which STAGE owns
@@ -81,17 +80,7 @@ object StageBreakdown {
     val names = args.headOption.getOrElse("q26_minhash_lsh")
       .split(",").toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Autotune.install(spark)
-    // match the Bench session exactly — a profile under a different
-    // planner config would attribute the wrong plan
-    graft.plans.DeferExpensiveProjection.install(spark)
+    val spark = GraftSession.build()
 
     val collector = new Collector
     spark.sparkContext.addSparkListener(collector)

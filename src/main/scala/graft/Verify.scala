@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // write µs-INT64 timestamps (not INT96) so the driver's DuckDB
-      // compare sees the same type it produces itself
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Autotune.install(spark) // respects the explicit builder confs above
-    graft.plans.DeferExpensiveProjection.install(spark)
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // Failures must be LOUD: a throwing query used to leave only a stderr
     // line, the driver omitted the row, and dark queries went unnoticed

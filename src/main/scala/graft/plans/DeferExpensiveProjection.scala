@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -19,6 +18,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Fires only when something expensive is movable; the rewritten plan's
   * inner projection is all-cheap, so a fixed-point re-run is a no-op.
+  *
+  * Injected through [[GraftExtensions]], the rule runs in the operator
+  * optimization batch, where Spark 4.1's `PushProjectionThroughLimitAndOffset`
+  * pushes the outer `Project` back below the limit. Physical planning then
+  * folds that `Project` into `TakeOrderedAndProjectExec`'s project list,
+  * which is evaluated on the k rows the top-k keeps — so the expensive
+  * expression still runs on n rows, not the whole window; without the rule
+  * it sits in a `Project` under the top-k and runs on every row.
   */
 object DeferExpensiveProjection extends Rule[LogicalPlan] {
 
@@ -74,12 +81,4 @@ object DeferExpensiveProjection extends Rule[LogicalPlan] {
       Project(outer.toIndexedSeq, limited)
     }
   }
-
-  /** Install into a running session (Verify/Bench/tests build plain
-    * sessions; `spark.experimental` is the injection point that works
-    * post-construction). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

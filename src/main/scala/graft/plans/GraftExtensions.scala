@@ -1,17 +1,25 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In}
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Multi-tenant scan guard — the Spark rendering of the reference's
   * mandatory-`project_id`-filter rule
   * (`/root/reference/src/optimizers/mod.rs:192-216`): a query against a
   * guarded table root that carries no `project_id = …` / `project_id IN (…)`
-  * predicate anywhere above the scan is rejected at analysis time. At fleet
-  * scale an unfiltered scan is a full-table read across every tenant — the
-  * guard turns that bug into an immediate error instead of a 100 TB scan.
+  * predicate anywhere above the scan is rejected when the query is planned,
+  * before any job runs. At fleet scale an unfiltered scan is a full-table
+  * read across every tenant — the guard turns that bug into an immediate
+  * error instead of a 100 TB scan.
+  *
+  * Not at analysis time: Spark analyzes every DataFrame eagerly, and a
+  * table read is built from bare per-version scans that get their
+  * `project_id` filter only afterwards, so an analysis check would reject
+  * the filtered read too. The optimized plan is the whole query; the rule
+  * runs once per optimization, after filters are pushed toward the scans.
   *
   * Roots are registered per-path via [[GuardedTables.guard]]; `date` bounds
   * for timestamp-only predicates are derived separately by
@@ -35,12 +43,12 @@ object GuardedTables {
     p.replaceFirst("^file:", "").stripSuffix("/")
 }
 
-/** Raised at analysis time when a guarded scan lacks a tenant filter. */
+/** Raised when a query whose guarded scan lacks a tenant filter is planned. */
 class MissingProjectIdException(msg: String) extends RuntimeException(msg)
 
-/** Analysis-time check: every guarded scan must sit under a `project_id`
-  * equality/IN filter. */
-object ProjectIdGuard extends (LogicalPlan => Unit) {
+/** Every guarded scan must sit under a `project_id` equality/IN filter;
+  * returns the plan unchanged. */
+object ProjectIdGuard extends Rule[LogicalPlan] {
 
   // NB: one side may be wrapped in casts (partition-type inference), so we
   // accept any foldable side rather than a bare Literal
@@ -51,10 +59,12 @@ object ProjectIdGuard extends (LogicalPlan => Unit) {
       b.references.exists(_.name == "project_id")
     case In(a, vs) if vs.forall(_.foldable) =>
       a.references.exists(_.name == "project_id")
+    // the optimizer turns long IN lists into InSet
+    case InSet(a, _) => a.references.exists(_.name == "project_id")
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): Unit = {
+  override def apply(plan: LogicalPlan): LogicalPlan = {
     def walk(p: LogicalPlan, hasFilter: Boolean): Unit = p match {
       case Filter(cond, child) =>
         walk(child, hasFilter || referencesProjectId(cond))
@@ -73,16 +83,20 @@ object ProjectIdGuard extends (LogicalPlan => Unit) {
       case other => other.children.foreach(walk(_, hasFilter))
     }
     walk(plan, hasFilter = false)
+    plan
   }
 }
 
-/** `SparkSessionExtensions` entry point:
-  * `.withExtensions(new GraftExtensions)` or
+/** The one entry point for graft's planner rules: the tenant guard, the
+  * deferred expensive projection and the ts→date partition bounds.
+  * [[graft.GraftSession.build]] installs it with
+  * `.withExtensions(new GraftExtensions)`; a session built elsewhere (a
+  * `spark-shell`, `spark-submit`) gets the same rules from
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectCheckRule(_ => ProjectIdGuard)
+    e.injectPreCBORule(_ => ProjectIdGuard)
     e.injectOptimizerRule(_ => DeferExpensiveProjection)
     e.injectOptimizerRule(_ => TimeToDatePruning)
   }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -43,8 +42,7 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType}
   * Scale note: the rule fires once per scan leg of the version-dir union,
   * so every leg of a merge-on-read stack prunes independently. Idempotent
   * (derived conjuncts already present are not re-added), so it is safe in
-  * fixed-point batches and under both injection points (extensions +
-  * `spark.experimental`).
+  * fixed-point batches.
   */
 object TimeToDatePruning extends Rule[LogicalPlan] {
 
@@ -136,11 +134,4 @@ object TimeToDatePruning extends Rule[LogicalPlan] {
       case _ => None
     }
   }
-
-  /** Install into a running session (same pattern as
-    * [[DeferExpensiveProjection.install]]). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

@@ -27,6 +27,14 @@ object GraftStats {
         sc.statusTracker.getExecutorInfos.length.toString),
       ("memory", "max_heap_bytes", Runtime.getRuntime.maxMemory.toString),
       ("guard", "guarded_roots", GuardedTables.count.toString))
+    // the effective autotune config and its budget split — what an
+    // operator diagnosing an OOM or a slow shuffle asks first
+    val autotune = graft.Autotune.boot.toSeq.flatMap { b =>
+      Seq(("autotune", "committed_mb", b.audit.committedMb.toString),
+        ("autotune", "slack_mb", b.audit.slackMb.toString),
+        ("autotune", "oversubscribed", b.audit.oversubscribed.toString)) ++
+        b.knobs.map { case (k, v) => ("autotune", k, v.toString) }
+    }
     val perTable = tables.flatMap { t =>
       val c = t.currentVersion()
       Seq(
@@ -67,7 +75,7 @@ object GraftStats {
         (c, "durable", b.durable.toString))
     }
     import spark.implicits._
-    (session ++ perTable ++ perTier ++ perGate ++ perBuffer)
+    (session ++ autotune ++ perTable ++ perTier ++ perGate ++ perBuffer)
       .toDF("component", "key", "value")
   }
 

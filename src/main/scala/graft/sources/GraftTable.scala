@@ -128,10 +128,9 @@ class GraftTable(
   private val path = s"$root/${meta.name}"
   private val commitsDir = s"$path/_commits"
 
-  // every session that touches a GraftTable gets ts→date partition-bound
-  // derivation for this table's scans (reference optimizers/mod.rs:90-167)
+  // ts→date partition-bound derivation for this table's scans (reference
+  // optimizers/mod.rs:90-167), in every session built with GraftExtensions
   graft.plans.TimeToDatePruning.register(path, meta.timeColumn)
-  graft.plans.TimeToDatePruning.install(spark)
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

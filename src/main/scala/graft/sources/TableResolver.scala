@@ -30,9 +30,9 @@ import graft.schema.TableSchema
   *
   * Guard integration: constructing the resolver registers every unified
   * table root with [[GuardedTables]], so sessions running the
-  * [[graft.plans.ProjectIdGuard]] check reject tenant-unscoped scans of
-  * shared tables at analysis time. Custom roots are single-tenant by
-  * construction and are not guarded.
+  * [[graft.plans.ProjectIdGuard]] rule reject tenant-unscoped scans of
+  * shared tables when the query is planned. Custom roots are single-tenant
+  * by construction and are not guarded.
   */
 class TableResolver(
     val spark: SparkSession,

@@ -26,14 +26,14 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   /** `events.ts` has shipped at two precisions across testdata
     * generations: nanosecond (which Spark's reader only surfaces as a
-    * raw long via the legacy conf) and microsecond TIMESTAMP_NTZ
+    * raw long via the legacy `nanosAsLong` conf, set once for the whole
+    * session by [[graft.GraftSession.build]]) and microsecond TIMESTAMP_NTZ
     * (isAdjustedToUTC=false, read natively). Dispatch on the loaded
     * dtype so both generations work: a LongType `ts` is legacy nanos
     * and gets the exact `div 1000` truncation (same as DuckDB's
     * TIMESTAMP_NS → TIMESTAMP cast); a timestamp `ts` passes through.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$d/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -57,21 +57,21 @@ class AutotuneSpec extends AnyFunSuite {
     try {
       // env wins over everything
       spark.conf.set(key, "123")
-      Autotune.install(spark, env = Map("SPARK_GRAFT_CC_DRIVER_EDGE_LIMIT" -> "77"))
+      Autotune.install(spark, SparkTestSession.Cpus,
+        env = Map("SPARK_GRAFT_CC_DRIVER_EDGE_LIMIT" -> "77"))
       assert(spark.conf.get(key) == "77")
       // operator-set conf wins when no env
       spark.conf.set(key, "0")
-      Autotune.install(spark, env = Map.empty)
+      Autotune.install(spark, SparkTestSession.Cpus, env = Map.empty)
       assert(spark.conf.get(key) == "0",
         "an explicit conf (the probe's distributed-path pin) must survive")
       // nothing set → derived
       spark.conf.unset(key)
-      val audit = Autotune.install(spark, env = Map.empty)
+      val audit = Autotune.install(spark, SparkTestSession.Cpus, env = Map.empty)
       assert(spark.conf.get(key).toLong ==
         Autotune.derive().ccDriverEdgeLimit)
       assert(audit.heapMb > 0)
-      // the shared test session pins shuffle partitions at the builder —
-      // install must NOT overwrite that explicit choice
+      // the shuffle width follows the session's task slots, not the host
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     } finally {
       prior match {
@@ -96,16 +96,17 @@ class AutotuneSpec extends AnyFunSuite {
       // oversized-shuffle spill the floor was added to prevent
       spark.conf.unset(initKey)
       spark.conf.set(shufKey, "999983")
-      Autotune.install(spark, env = Map.empty)
+      Autotune.install(spark, SparkTestSession.Cpus, env = Map.empty)
       assert(spark.conf.get(initKey).toLong >= 999983L,
         "initialPartitionNum must floor at the resolved shuffle.partitions")
       // and with the session's small explicit width (4), the derived
       // 8x-cores floor applies as before
       spark.conf.unset(initKey)
       spark.conf.set(shufKey, "4")
-      Autotune.install(spark, env = Map.empty)
-      assert(spark.conf.get(initKey).toLong ==
-        Autotune.derive().initialShufflePartitions)
+      Autotune.install(spark, SparkTestSession.Cpus, env = Map.empty)
+      assert(spark.conf.get(initKey).toLong == Autotune.derive(
+        Autotune.detectHost().copy(cores = SparkTestSession.Cpus))
+        .initialShufflePartitions)
     } finally {
       priorInit match {
         case Some(v) => spark.conf.set(initKey, v)
@@ -127,16 +128,16 @@ class AutotuneSpec extends AnyFunSuite {
       // widths instead. Unset stays at Spark's 1 MB default (getOption
       // surfaces a registered entry's default, so compare bytes).
       spark.conf.unset(key)
-      Autotune.install(spark, env = Map.empty)
+      Autotune.install(spark, SparkTestSession.Cpus, env = Map.empty)
       assert(org.apache.spark.network.util.JavaUtils
         .byteStringAsBytes(spark.conf.get(key)) == (1L << 20))
       // operator-set conf is respected verbatim — including a value
       // EQUAL to Spark's default (the r14 sentinel ambiguity is gone)
       spark.conf.set(key, "2m")
-      Autotune.install(spark, env = Map.empty)
+      Autotune.install(spark, SparkTestSession.Cpus, env = Map.empty)
       assert(spark.conf.get(key) == "2m")
       spark.conf.set(key, "1m")
-      Autotune.install(spark, env = Map.empty)
+      Autotune.install(spark, SparkTestSession.Cpus, env = Map.empty)
       assert(spark.conf.get(key) == "1m")
     } finally {
       prior match {

@@ -36,6 +36,22 @@ class GraftStatsSpec extends AnyFunSuite {
     assert(session.nonEmpty && session(0).getString(0).nonEmpty)
   }
 
+  test("graft_stats exposes the effective autotune config and budget split") {
+    GraftStats.register(spark)
+    val rows = spark.sql(
+      "SELECT key, value FROM graft_stats WHERE component = 'autotune'")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(rows("committed_mb").toLong > 0)
+    assert(rows("slack_mb").toLong >= 0)
+    assert(Set("true", "false").contains(rows("oversubscribed")))
+    assert(rows("cores") == SparkTestSession.Cpus.toString)
+    // values as the last install resolved them (other suites re-install)
+    Seq("shuffle_partitions", "initial_shuffle_partitions",
+      "broadcast_threshold_bytes", "cc_driver_edge_limit",
+      "max_buffered_rows").foreach(k =>
+      assert(rows.get(k).exists(_.toLongOption.isDefined), s"autotune knob $k"))
+  }
+
   test("graft_stats exposes hot-tier payoff and scan-gate pressure rows") {
     val t = new GraftTable(spark,
       Files.createTempDirectory("graft_stats_").toString, TableSchemas.morVersioned)

@@ -1015,6 +1015,21 @@ class GraftTableSpec extends AnyFunSuite {
     assert(fin.length == 2)
   }
 
+  test("the session's extensions reject an unfiltered read of a guarded root") {
+    val t = freshTable()
+    t.append(sampleRows(10), t0(0))
+    val path = s"${t.root}/${t.meta.name}"
+    GuardedTables.guard(path)
+    try {
+      // no direct ProjectIdGuard call: GraftExtensions runs it at analysis
+      intercept[MissingProjectIdException](t.readRaw().count())
+      assert(t.readRaw().filter(col("project_id") === "1").count() == 3)
+      // a long IN list reaches the rule as an optimized InSet
+      assert(t.readRaw().filter(col("project_id")
+        .isin((1 to 12).map(_.toString): _*)).count() == 6)
+    } finally GuardedTables.unguard(path)
+  }
+
   test("project-id guard rejects unfiltered scans of guarded roots") {
     val t = freshTable()
     t.append(sampleRows(10), t0(0))

@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The shared test session: a graft session like every main's, at a
+  * fixed 4 task slots so test plans do not follow the host. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.DeferExpensiveProjection.install(s)
-    s
-  }
+  val Cpus = 4
+  lazy val spark: SparkSession = GraftSession.build(Cpus)
 }
 
 class RelationalSpec extends AnyFunSuite {
