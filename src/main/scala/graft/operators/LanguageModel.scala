@@ -136,7 +136,7 @@ object LanguageModel {
   def naiveBayes(df: DataFrame, idCol: String, textCol: String,
       labelCol: String): DataFrame = {
     // NOT widened (r15, measured): routing the corpus through a
-    // widenForKernel exchange before the explode shuffles the full text
+    // [[Width.forKernel]] exchange before the explode shuffles the full text
     // bytes once per consuming plan (cond pin + scoring) and measured
     // q78 2.26 → 3.30 s back-to-back — the scan-fused explode is cheaper
     // than moving the text, unlike TextDedup's heavier per-row kernels.

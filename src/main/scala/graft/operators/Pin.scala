@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{classic, DataFrame}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Lineage cut for reused expensive frames (verified pair lists, hashed
   * token sets, quantizer assignments…).
@@ -16,8 +16,12 @@ import org.apache.spark.sql.execution.SQLExecution
   * `checkpoint()` instead: the pinned frame lands in fault-tolerant
   * storage, so a 1000-executor fleet job survives individual executor
   * loss mid-iteration — the production posture for multi-hour dedup or
-  * clustering runs at full corpus scale. */
+  * clustering runs at full corpus scale. A pin keeps the width its plan
+  * produced; an operator that needs another sets it first ([[Width]]). */
 object Pin {
+  /** The name of every RDD [[lazily]] checkpoints. */
+  val LazyName = "Pin.lazily"
+
   private def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf
       .getOption("spark.graft.reliableCheckpoints").exists(_.toBoolean)
@@ -41,10 +45,19 @@ object Pin {
     * (the r14 deferral, narrowed by VERDICT r14 to short-circuiting
     * consumers only — each partition that IS computed persists whole,
     * so full-materializing consumers are exactly the safe set). Keep
-    * [[apply]] for frames a greedy/limit-style loop consumes. */
-  def lazily(df: DataFrame): DataFrame =
-    if (reliable(df)) df.checkpoint(eager = false)
-    else df.localCheckpoint(eager = false)
+    * [[apply]] for frames a greedy/limit-style loop consumes. A probe
+    * touching every partition ([[Width.exceedsCount]]) counts as full.
+    * PinSpec finds each lazy pin's first consumer by [[LazyName]]. */
+  def lazily(df: DataFrame): DataFrame = {
+    val pinned =
+      if (reliable(df)) df.checkpoint(eager = false)
+      else df.localCheckpoint(eager = false)
+    pinned.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.setName(LazyName)
+      case _ =>
+    }
+    pinned
+  }
 
   /** [[lazily]] over several INDEPENDENT frames, constructed from
     * parallel driver threads (guide §2.6 — overlap independent jobs).

@@ -48,7 +48,7 @@ object TextDedup {
       blockCols: Seq[String], threshold: Double,
       widen: Boolean = true): DataFrame =
     // hashedSets widens an under-parallel input before the token-hash
-    // kernel (see [[widenForKernel]]) — shared with the incremental
+    // kernel (see [[Width.forKernel]]) — shared with the incremental
     // path; `widen = false` for per-micro-batch callers, where even the
     // planning-only width probe is per-batch overhead
     setJaccardPairs(hashedSets(df, idCol, textCol, blockCols, widen),
@@ -81,7 +81,7 @@ object TextDedup {
       blockCols: Seq[String], threshold: Double, n: Int = 3): DataFrame =
     // widen an under-parallel input before the shingle kernel (3n
     // element_at + hash per gram — heavier than the token-set kernel)
-    setJaccardPairs(widenForKernel(
+    setJaccardPairs(Width.forKernel(
         df.select((Seq(idCol, textCol) ++ blockCols).distinct.map(col): _*),
         col(idCol))
       .select(Seq(col(idCol).as("__id"),
@@ -126,13 +126,11 @@ object TextDedup {
     // the single most expensive projection — without the checkpoint it
     // re-evaluates in every subtree. O(input) rows of longs, the same
     // materialization every exact set-similarity join implementation makes.
-    // LAZY pin (r15): the first consumer is the width-gate probe
-    // ([[exceedsCount]] — a per-partition capped count whose job still
-    // touches EVERY partition, and a persisted partition materializes
-    // whole when touched), then the frequency pass, prefix build and
-    // verify joins — all full-materializing, so the tokenize+hash+sort
-    // kernel runs inside the gate-probe job instead of a dedicated
-    // blocking pin job per side
+    // LAZY pin (r15): the first consumer is the scale-gate probe
+    // ([[Width.atScale]], which touches every partition), then the
+    // frequency pass, prefix build and verify joins — all
+    // full-materializing, so the tokenize+hash+sort kernel runs inside
+    // the gate-probe job instead of a blocking pin job per side
     def toks(sets: DataFrame) = sets.filter(size(col("__ts")) > 0)
       .withColumn("__n", size(col("__ts")))
       .transform(Pin.lazily(_))
@@ -173,31 +171,16 @@ object TextDedup {
     val joinCond = if (tb.isDefined) sizeAndBlocks
       else sizeAndBlocks && col("a.__id") < col("b.__id")
     // The candidate equi-join FANS OUT far beyond its compressed input:
-    // AQE sizes its reduce tasks by the ~10×-LZ4-compressed (long,long)
-    // prefix rows, so at the sf10 probe 30 coalesced tasks each rotated
-    // ~650 MB of uncompressed candidate output through the shuffle
-    // writer — 19.6 GB of residual map-side spill (VERDICT r13
-    // what's-wrong #3). Above the same corpus-size gate the CC advisory
-    // uses, pin an EXPLICIT width on the join inputs: repartition(w,
-    // __pe) is not AQE-coalescible, and HashPartitioning(__pe) satisfies
-    // the join's required clustering (subset of the equi keys), so it
-    // REPLACES the join's own exchange instead of adding one. Below the
-    // gate the finer tasks are pure scheduling overhead (the measured
-    // +27% CC-gate analogue at 5k docs), so small corpora keep AQE's
-    // sizing; the gate probe is the capped per-partition count over the
-    // already-pinned token frames.
-    val gateDocs = setsA.sparkSession.conf
-      .getOption("spark.graft.jaccard.widthGateDocs").map(_.toLong)
-      .getOrElse(100000L)
-    val widen = exceedsCount(ta, gateDocs) ||
-      tb.exists(exceedsCount(_, gateDocs))
+    // at the sf10 probe AQE's 30 coalesced tasks each rotated ~650 MB of
+    // uncompressed candidate output through the shuffle writer (19.6 GB
+    // of map-side spill). At scale the join inputs take the
+    // [[Width.fanOut]] width, keyed on __pe (an equi key, so it replaces
+    // the join's own exchange); below the gate small corpora keep AQE's
+    // sizing. The gate probes the already-pinned token frames.
+    val widen = Width.atScale(ta) || tb.exists(Width.atScale)
     def widened(df: DataFrame): DataFrame =
       if (!widen) df
-      else df.repartition(math.max(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        df.sparkSession.conf
-          .getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-          .map(_.toInt).getOrElse(0)), col("__pe"))
+      else Width.keyed(df, Width.fanOut(df.sparkSession), col("__pe"))
     val jA = widened(prefA)
     val jB = if (tb.isDefined) widened(prefB) else jA
     val cands = jA.as("a").join(jB.as("b"), joinCond)
@@ -254,7 +237,7 @@ object TextDedup {
     // a duplicate column (ambiguous-reference error — ADVICE r14)
     val slim = df.select(
       (Seq(idCol, textCol) ++ blockCols).distinct.map(col): _*)
-    (if (widen) widenForKernel(slim, col(idCol)) else slim)
+    (if (widen) Width.forKernel(slim, col(idCol)) else slim)
       .select(Seq(col(idCol).as("__id"),
         hashedTokenSet(col(textCol)).as("__ts")) ++ blockCols.map(col): _*)
   }
@@ -655,13 +638,10 @@ object TextDedup {
     // widen BEFORE the rep semi-join (r14): repDocs feeds the candidate
     // generator's per-doc MinHash/token-set kernel — the single most
     // expensive projection of the whole pipeline (96 modular perms per
-    // token). Without the widen, repDocs inherits the SCAN parallelism
-    // (one task per file split — two ~5 s single-task signature stages at
-    // sf0.1's one-file corpus); HashPartitioning(__id) from the widen
-    // also satisfies the semi-join's required clustering should the join
-    // ever be exchange-backed instead of broadcast. See
-    // [[widenForKernel]] for the scale story (no-op on wide scans).
-    val repDocs = widenForKernel(
+    // token) — see [[Width.forKernel]]. HashPartitioning(__id) from the
+    // widen also satisfies the semi-join's required clustering should the
+    // join ever be exchange-backed instead of broadcast.
+    val repDocs = Width.forKernel(
         withHash.select(col("__id"), col("__text")), col("__id"))
       .join(repIds, col("__id") === col("__r"), "left_semi")
 
@@ -736,75 +716,12 @@ object TextDedup {
     * truncated label set is silently-wrong dedup output, the one failure
     * an oracle at test scale cannot catch (the graph depth that breaks it
     * only exists at production scale). */
-  /** True iff `df` holds MORE than `cap` rows, decided by a
-    * short-circuiting per-partition count: each partition stops
-    * consuming at cap+1, no shuffle, one long per partition to the
-    * driver. EXACT for a gate — it can undercount only when some
-    * partition hit its cap, and that cap alone already exceeds `cap` —
-    * while a full count() job on a frame whose size only matters as
-    * over/under is pure waste (the r11 directive-#4 shape; both the CC
-    * driver fast-path gate and the similarity-join width gates ride
-    * this). */
-  private[graft] def exceedsCount(df: DataFrame, cap: Long): Boolean = {
-    // CALLER CONTRACT (VERDICT r14 #5): pass pinned or scan-backed
-    // frames only. `toRdd` executes the plan — on an exchange-bearing
-    // (AQE-wrapped) frame that materializes its shuffle stages, and this
-    // probe's job would then partially execute a plan the caller
-    // re-executes in full. Every current caller passes a [[Pin]]ned
-    // frame (the probe job doubles as the lazy pin's materializer) or a
-    // plain scan.
-    val bound = cap + 1
-    val seen = df.queryExecution.toRdd.mapPartitions { it =>
-      var c = 0L
-      while (it.hasNext && c < bound) { it.next(); c += 1 }
-      Iterator.single(c)
-    }.collect().sum
-    seen > cap
-  }
-
-  /** Widen `df` to the session shuffle width before an EXPENSIVE PER-ROW
-    * KERNEL (token-set hashing, MinHash permutations, shingle builds)
-    * when — and only when — its current plan parallelism is below it.
-    * Kernel cost scales with rows, but the parallelism the kernel
-    * inherits scales with input BYTES (file splits, or whatever an
-    * upstream broadcast join preserved): a one-file gate-scale corpus
-    * runs the whole kernel on ONE task while every other core idles
-    * (measured: two ~5 s single-task signature stages in q26 at sf0.1),
-    * and AQE cannot help — it only coalesces, never widens, and sizes by
-    * compressed bytes anyway. The gate is the ACTUAL partition count of
-    * the frame's physical plan (planning only, no job): at fleet scale a
-    * corpus scan is thousands of splits wide and this is a no-op — no
-    * added shuffle (guide: never pay a corpus-wide exchange the scan
-    * already provides) — while an under-parallel input pays one small
-    * (id, payload) exchange to put every core on the kernel. Explicit
-    * width because repartition(col) alone is AQE-coalescible right back
-    * to one task (the q115 lesson). */
-  private[graft] def widenForKernel(df: DataFrame, key: Column): DataFrame = {
-    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.queryExecution.executedPlan match {
-      // Exchange-bearing frames plan as AdaptiveSparkPlanExec, and
-      // `toRdd` on one is NOT planning-only: getFinalPhysicalPlan
-      // materializes every shuffle/broadcast stage as real jobs whose
-      // results are then discarded when the frame re-plans under the
-      // repartition (ADVICE r14 medium — the r14 probe silently
-      // double-executed every view-backed caller's dedup window). The
-      // final width is AQE-decided at runtime and unknowable here, and
-      // these are exactly the small-compressed-bytes frames AQE
-      // coalesces below kernel width — so widen unconditionally: one
-      // narrow (id, payload) exchange, the documented price of
-      // guaranteed kernel parallelism.
-      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        df.repartition(width, key)
-      // scan-backed frames (no exchange → not AQE-wrapped): the RDD
-      // chain builds lazily, no job — probe and skip the exchange when
-      // the scan is already at/above kernel width (fleet-scale corpora)
-      case _ if df.queryExecution.toRdd.getNumPartitions >= width => df
-      case _ => df.repartition(width, key)
-    }
-  }
-
   def connectedComponents(ids: DataFrame, edges: DataFrame,
       maxIter: Int = 20, jumpAfter: Int = 3): DataFrame = {
+    // `ids` is usually exchange-bearing (a repartitioned corpus, a table
+    // view): the scale gate probes a lazy pin of it, which both labeling
+    // paths then read in full, so the caller's plan runs once per call
+    val idsPin = Pin.lazily(ids)
     // Both the edge materialization below and the propagation loop
     // shuffle (long, long) pair rows that LZ4 compresses ~10×, and AQE
     // coalesces reduce partitions by COMPRESSED bytes — at 94M edges
@@ -818,26 +735,14 @@ object TextDedup {
     val session = ids.sparkSession
     val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val prevAdvisory = session.conf.getOption(advisoryKey)
-    // …but only when the corpus is big enough for those sorts to exist:
-    // at gate scale the finer tasks are pure scheduling overhead
-    // (measured +27% on the q43/q96/q144 bench family at 5k docs), and
-    // the probes measured zero spill at default advisory up to 50k docs
-    // / 9.4M edges — the onset is between there and 500k docs / 94M
-    // edges, so the switch sits at 100k. The gate probe is the capped
-    // per-partition count (VERDICT r13 what's-wrong #4 — no full count()
-    // job on gate-scale calls; above the cap only "over" matters).
-    //
-    // NOTE (ADVICE r13): the advisory is a SESSION conf — a concurrent
-    // query on the same SparkSession inherits the 8m advisory (wider
-    // exchanges, no correctness effect) while a large CC runs. Every
-    // frame this function returns is pinned before the conf is restored,
-    // so nothing of CC's own re-executes under the caller's conf; the
-    // residual cross-talk window is the documented single-heavy-query
-    // posture (DataFrames cannot be re-bound to a child session through
-    // any public API, so isolation would mean re-planning the caller's
-    // plan from SQL — not worth it for a hint-only knob).
-    val scopeAdvisory = exceedsCount(ids, 100000L)
-    if (scopeAdvisory) session.conf.set(advisoryKey, "8m")
+    // …but only [[Width.atScale]]: at gate scale the finer tasks are
+    // pure scheduling overhead (+27% on the q43/q96/q144 bench family at
+    // 5k docs). The advisory is a SESSION conf, so a concurrent query on
+    // the same session inherits it (wider exchanges, no correctness
+    // effect) while a large CC runs; DataFrames cannot be re-bound to a
+    // child session through any public API.
+    val atScale = Width.atScale(idsPin)
+    if (atScale) session.conf.set(advisoryKey, "8m")
     try {
     // materialize the edge list once — it is typically an EXPENSIVE plan
     // (a verified similarity join) that would otherwise recompute every
@@ -848,29 +753,14 @@ object TextDedup {
     // the map side of the first loop exchange and spilled regardless of
     // the advisory (reduce-side sizing cannot reach a map side).
     //
-    // …and the width rides the SAME corpus-size gate as the advisory
-    // (r14): below it the un-coalescible 256-wide repartition was pure
-    // gate-scale overhead — one extra exchange of every edge plus a
-    // 256-partition checkpoint that every later pass re-pays (measured:
-    // 537 ms pin stage + 76/60 ms 256-task collects for a 4.1 MB edge
-    // list at sf0.1; ~16 KB per task is scheduling, not work). Below the
-    // gate the edges keep their producer's AQE-sized width, exactly the
-    // pre-r13 plan the ≤50k-doc probes measured at zero spill; above it
-    // the explicit width stands (the sf10 spill fix, guide §2.5).
-    val symWidth = math.max(
-      ids.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-      ids.sparkSession.conf
-        .getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-        .map(_.toInt).getOrElse(0))
-    // `spark.graft.cc.forceWideEdges` pins the decision for interleaved
-    // same-JVM A/B attribution (QueryAb) on a host whose contention band
-    // exceeds the effect size — not a tuning knob
-    val wideEdges = ids.sparkSession.conf
-      .getOption("spark.graft.cc.forceWideEdges").map(_.toBoolean)
-      .getOrElse(scopeAdvisory)
+    // …and the [[Width.fanOut]] width rides the SAME scale gate as the
+    // advisory (r14): below it the 256-wide repartition was pure
+    // overhead (537 ms pin stage + 76/60 ms 256-task collects for a
+    // 4.1 MB edge list at sf0.1), so the edges keep their producer's
+    // AQE-sized width, which the ≤50k-doc probes measured at zero spill.
     val sym = edges.select(col("id_a").as("__src"), col("id_b").as("__dst"))
       .unionByName(edges.select(col("id_b").as("__src"), col("id_a").as("__dst")))
-      .transform(e => if (wideEdges) e.repartition(symWidth, col("__src"))
+      .transform(e => if (atScale) Width.keyed(e, Width.fanOut(session), col("__src"))
         else e)
       .transform(Pin(_))
     // HYBRID fast path: a near-dup pair graph is usually output-sized —
@@ -888,19 +778,19 @@ object TextDedup {
     // audit (collect rows + union–find map + broadcast label table, see
     // `Autotune.CcDriverBytesPerEdge`), checked against the pinned frame
     // before any transfer.
-    val idType = ids.schema.fields.find(_.name == "__id").map(_.dataType)
+    val idType = idsPin.schema.fields.find(_.name == "__id").map(_.dataType)
     val integral = idType.exists(t =>
       t == org.apache.spark.sql.types.LongType ||
         t == org.apache.spark.sql.types.IntegerType)
-    val driverLimit = ids.sparkSession.conf
+    val driverLimit = session.conf
       .getOption("spark.graft.cc.driverEdgeLimit").map(_.toLong)
       .getOrElse(graft.Autotune.derive().ccDriverEdgeLimit)
     // Gate probe: the short-circuiting per-partition count over the
-    // pinned frame (see [[exceedsCount]]) — above the budget the exact
-    // total is irrelevant, so a full count() job there is pure waste.
-    if (integral && driverLimit > 0 && !exceedsCount(sym, 2 * driverLimit))
-      return driverComponents(ids, sym, idType.get)
-    var labels = ids.select(col("__id"), col("__id").as("__lbl"))
+    // pinned frame (see [[Width.exceedsCount]]) — above the budget the
+    // exact total is irrelevant, so a full count() job there is pure waste.
+    if (integral && driverLimit > 0 && !Width.exceedsCount(sym, 2 * driverLimit))
+      return driverComponents(idsPin, sym, idType.get)
+    var labels = idsPin.select(col("__id"), col("__id").as("__lbl"))
       .transform(Pin(_))
     var converged = false
     var iter = 0
@@ -936,7 +826,7 @@ object TextDedup {
         s"$jumpAfter*2^${maxIter - jumpAfter} exceeded by the graph " +
         "diameter): refusing to return a truncated label set — raise maxIter")
     labels
-    } finally if (scopeAdvisory) prevAdvisory match {
+    } finally if (atScale) prevAdvisory match {
       case Some(v) => session.conf.set(advisoryKey, v)
       case None => session.conf.unset(advisoryKey)
     }
@@ -1009,7 +899,7 @@ object TextDedup {
     // b's misses, not d's, so d contributes full postings), and the
     // |T_d| ≥ τ·|T_b| size filter inside the candidate join (any hit has
     // |T_d| ≥ |∩| ≥ τ·|T_b|).
-    def sets(df: DataFrame) = widenForKernel(
+    def sets(df: DataFrame) = Width.forKernel(
         df.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol).as("__id"), hashedTokenSet(col(textCol)).as("__ts"))
       .filter(size(col("__ts")) > 0)
@@ -1028,22 +918,15 @@ object TextDedup {
     // tokens of b occurs in d — the rarest choice only shrinks candidates.
     // Both sides carry the 1-based POSITION in their rarity-sorted order
     // for the PPJoin position filter below.
-    // explicit width on the rarity agg (r14): its reduce input is ~24 B
-    // (id, n, pe, f) rows that AQE coalesces to ONE task by compressed
-    // bytes, but the reduce does the per-doc collect_list + array_sort
-    // AND (fused downstream) each side's posting/prefix explode —
-    // measured as two ~850 ms single-task stages at sf0.1 while 31 cores
-    // idled. repartition(w, __id) satisfies the groupBy's required
-    // clustering, so it REPLACES the planner's exchange (never adds
-    // one); explicit width because repartition(col) alone is
-    // AQE-coalescible right back to one task. Nothing is lost map-side:
-    // partial collect_list buffers full rows anyway.
-    val rarityWidth = bench.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    def rarityOrdered(t: DataFrame) = t
+    // [[Width.kernel]] width on the rarity agg (r14), keyed on its
+    // groupBy key: its ~24 B (id, n, pe, f) reduce input coalesced to ONE
+    // task while the reduce does the per-doc collect_list + array_sort
+    // and each side's fused posting/prefix explode (two ~850 ms
+    // single-task stages at sf0.1). Nothing is lost map-side: partial
+    // collect_list buffers full rows anyway.
+    def rarityOrdered(t: DataFrame) = Width.keyed(t
       .select(col("__id"), col("__n"), explode(col("__ts")).as("__pe"))
-      .join(freq, "__pe")
-      .repartition(rarityWidth, col("__id"))
+      .join(freq, "__pe"), Width.kernel(bench.sparkSession), col("__id"))
       .groupBy("__id").agg(first(col("__n")).as("__n"),
         array_sort(collect_list(struct(col("__f"), col("__pe"))))
           .as("__ord"))
@@ -1173,7 +1056,7 @@ object TextDedup {
     // the signature groupBy's clustering, so when the widen fires the
     // aggregate runs complete-mode with NO post-explode exchange — the
     // explicit shuffle REPLACES the planner's, it never adds one
-    val tokens = widenForKernel(
+    val tokens = Width.forKernel(
         df.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol).as("__id"),
         explode(tokenSet(col(textCol))).as("__tok"))
@@ -1214,31 +1097,23 @@ object TextDedup {
             .bitwiseAND(lit((1L << width) - 1)).as("key"))
       }: _*)).as("c"))
       .select(col("__id"), col("simhash"), col("c.chunk"), col("c.key"))
-    // EXPLICIT keyed width on the join input and the pair-distinct input
-    // (r15, replacing the r14 session-wide 64 KB AQE floor for this
-    // operator): the banded rows are ~24 B and LZ4-compress ~10×, so AQE
-    // — sizing reduce tasks by COMPRESSED bytes — coalesced the join and
-    // the distinct to 1–2 tasks while the fused work above them (pair
-    // fan-out, hamming verify, distinct build) is heavy per byte: three
-    // measured single-task tail stages, ~1.5 s serial at sf0.1 (the q27
-    // −40% the floor bought; guide §2.5/§2.6 compressed-bytes-vs-heavy-
-    // fused-work mismatch). repartition(w, chunk, key) satisfies BOTH
-    // self-join sides' required clustering, so it REPLACES the planner's
-    // exchange — never adds one — and a user-specified width is exempt
-    // from AQE coalescing (the q115 lesson). Same width source as
-    // [[editDistancePairs]]: the session shuffle width is the configured
-    // kernel parallelism.
-    val w = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val banded = banded0.repartition(w, col("chunk"), col("key"))
-    banded.as("x").join(banded.as("y"),
+    // [[Width.kernel]] width on the join input and the pair-distinct
+    // input (r15): the ~24 B banded rows coalesced the join and the
+    // distinct to 1–2 tasks while the fused pair fan-out, hamming verify
+    // and distinct build above them are heavy per byte (three single-task
+    // tail stages, ~1.5 s serial at sf0.1). Keyed on (chunk, key), the
+    // exchange satisfies BOTH self-join sides and replaces the planner's.
+    val w = Width.kernel(df.sparkSession)
+    val banded = Width.keyed(banded0, w, col("chunk"), col("key"))
+    val pairs = banded.as("x").join(banded.as("y"),
         col("x.chunk") === col("y.chunk") && col("x.key") === col("y.key") &&
           col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      // HashPartitioning(id_a, id_b) is a subset of the distinct's
-      // (id_a, id_b, hamming) clustering, so this replaces the distinct's
-      // own exchange (the r14 containment subset rule)
-      .repartition(w, col("id_a"), col("id_b"))
+    // HashPartitioning(id_a, id_b) is a subset of the distinct's
+    // (id_a, id_b, hamming) clustering, so this replaces the distinct's
+    // own exchange (the r14 containment subset rule)
+    Width.keyed(pairs, w, col("id_a"), col("id_b"))
       .distinct()
       .filter(col("hamming") <= maxDist)
   }
@@ -1274,16 +1149,12 @@ object TextDedup {
     // O(rows × len²) key expansion as ONE task (measured: 45.9 s of the
     // 49.6 s sf10 probe leg in a 1-task stage). An explicit exchange on
     // the id costs one narrow corpus-bytes shuffle and makes the
-    // expansion cluster-wide regardless of file layout.
-    // EXPLICIT width: repartition(col) alone is an AQE-coalescible
-    // exchange, and the corpus is tiny COMPRESSED (1.5 MB at sf10) — AQE
-    // folded it back to ONE partition and the serial stage returned. A
-    // user-specified partition count is exempt from coalescing.
-    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val base = df.filter(length(col(strCol)) > 0)
+    // expansion cluster-wide regardless of file layout. [[Width.kernel]]
+    // width: the corpus is tiny COMPRESSED (1.5 MB at sf10), and AQE
+    // folded a plain repartition(col) back to ONE partition.
+    val base = Width.keyed(df.filter(length(col(strCol)) > 0)
       .select(col(idCol).as("__id"), col(strCol).as("__s"),
-        length(col(strCol)).as("__n"))
-      .repartition(width, col("__id"))
+        length(col(strCol)).as("__n")), Width.kernel(df.sparkSession), col("__id"))
     // NOT pinned (r15, measured): the self-join does run the deletion-
     // key expansion once per side (two Generate subtrees, one under a
     // BroadcastExchange), but the broadcast build computes its copy on

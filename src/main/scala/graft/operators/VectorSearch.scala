@@ -503,7 +503,7 @@ object VectorSearch {
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, threshold: Double, nClusters: Int = 16,
       seed: Long = 42L, assign: Int = 3): DataFrame = {
-    // (__id, __v) pinned ONCE at full shuffle width: five consumers read
+    // (__id, __v) pinned ONCE at [[Width.kernel]] width: five consumers read
     // it (count, sample, both assignment pins, the verify join) — without
     // the pin each re-ran the corpus construction, and worse, the
     // EXPENSIVE per-row cell assignment (interpreted HOF lambdas) was
@@ -513,10 +513,9 @@ object VectorSearch {
     // checkpoint is a barrier the optimizer cannot push a projection
     // through, so assignment always evaluates over the repartitioned
     // blocks.
-    val c = Pin(corpus
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .repartition(corpus.sparkSession.conf
-        .get("spark.sql.shuffle.partitions").toInt))
+    val c = Pin(Width.keyed(corpus
+      .select(col(idCol).as("__id"), col(vecCol).as("__v")),
+      Width.kernel(corpus.sparkSession)))
     val centroids = sphericalCentroids(c, "__v", nClusters, seed)
     if (centroids.isEmpty)
       return corpus.select(col(idCol), lit(0).as("cluster"),

@@ -342,6 +342,25 @@ class GraftTable(
       st.isDirectory || st.getPath.getName.endsWith(".parquet"))
   }
 
+  /** Tenant scope of a maintenance read on a guarded root: `project_id
+    * IN (every project_id= directory in dirs)` keeps every row and passes
+    * the guard like a user's tenant filter, so the guard needs no bypass.
+    * None on an unguarded root, whose plans stay unchanged. */
+  private def allTenants(dirs: Seq[String]): Option[Column] =
+    if (!graft.plans.GuardedTables.isGuarded(Seq(path))) None
+    else {
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      val tenants = dirs.map(new Path(_)).filter(fs.exists).flatMap(p =>
+        fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
+          .filter(_.startsWith("project_id="))
+          .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix("project_id="))))
+        .distinct
+      val (nulls, named) =
+        tenants.partition(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      val in = col("project_id").isin(named: _*)
+      Some(if (nulls.isEmpty) in else in || col("project_id").isNull)
+    }
+
   /** Post-pruning work a scan bounded below by `since` would actually
     * select: (parquet file count, total bytes) under `date=` partitions
     * ≥ `since` across every visible version leg. Pure driver-side
@@ -1118,6 +1137,7 @@ class GraftTable(
         .add(GraftTable.RgKeyColumn, org.apache.spark.sql.types.LongType)
       else liveSchema()
     val rows = spark.read.schema(readSchema).parquet(base)
+      .transform(df => allTenants(Seq(base)).fold(df)(df.filter))
       .select(input_file_name().as("file"), col(column).as("t"),
         keyCol.map(col).getOrElse(lit(null).cast("long")).as("k"))
     // `raw` fields index one term per DISTINCT (file, whole value) — the
@@ -1470,7 +1490,8 @@ class GraftTable(
     val snapSchema = dirsSchema(visibleDirs(cs))
     // resolvedFrom, not a bare union: with partial bases in the snapshot,
     // a leg's subsumed dates must be excluded or the rewrite double-counts
-    writePartitioned(versionDir(upTo + 1), resolvedFrom(cs, None), compactOrder)
+    writePartitioned(versionDir(upTo + 1),
+      resolvedFrom(cs, allTenants(visibleDirs(cs))), compactOrder)
     commit(upTo + 1, baseOf = Some(upTo),
       dates = writtenDateRange(versionDir(upTo + 1)))
     if (maintainCountIndex) {
@@ -1482,6 +1503,7 @@ class GraftTable(
         // column-pruned pass over it (count + max stamp) RESTARTS the chain
         case _ =>
           val r = spark.read.schema(snapSchema).parquet(versionDir(newV))
+            .transform(df => allTenants(Seq(versionDir(newV))).fold(df)(df.filter))
             .agg(count(lit(1)).as("c"),
               max(col(meta.dedupTiebreak)).as("s"))
             .head()
@@ -1509,8 +1531,8 @@ class GraftTable(
     val cs = commits()
     if (cs.isEmpty) return
     val v = cs.last.v + 1
-    writePartitioned(versionDir(v), resolvedFrom(cs, Some(inRange(lo, hi))),
-      compactOrder)
+    val scope = (inRange(lo, hi) +: allTenants(visibleDirs(cs)).toSeq).reduce(_ && _)
+    writePartitioned(versionDir(v), resolvedFrom(cs, Some(scope)), compactOrder)
     commit(v, dates = Some((lo, hi)), pbase = true)
     if (maintainCountIndex) countMarker() match {
       // partial compaction never changes the logical count — carry over

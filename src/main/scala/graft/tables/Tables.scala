@@ -2,6 +2,8 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Width
+
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
   * All query entry points take a scale-factor directory and read the
@@ -48,19 +50,13 @@ object Tables {
         s"events.ts must be legacy-nanos LONG or TIMESTAMP_NTZ, got $other")
     }
   }
-  /** The two training-pipeline corpora fan out to the cluster width
-    * before their (compute-heavy) consumers: the fixture files are a
-    * single parquet row group, so without this every per-document map
-    * stage — minhash signatures, fingerprints, simhash, quality scores —
-    * runs on ONE core regardless of cluster size. The repartition is one
-    * narrow shuffle of (id, text) / (id, vector); at production scale the
-    * table arrives in many row groups and Catalyst's AQE coalesces the
-    * then-redundant exchange to a near-no-op, while a pathologically
-    * merged input (one giant row group after an aggressive compaction)
-    * still fans out — the same reasoning as repartitioning before an
-    * expensive UDF stage. */
+  /** The two training-pipeline corpora, fanned out to kernel width before
+    * their compute-heavy per-document consumers (minhash
+    * signatures, fingerprints, simhash, quality scores): each fixture
+    * file is one parquet row group, so without this every such stage runs
+    * on ONE core. One narrow shuffle of (id, text) / (id, vector). */
   def documents(s: SparkSession, d: String): DataFrame =
-    table(s, d, "documents").repartition(s.sparkContext.defaultParallelism)
+    Width.keyed(table(s, d, "documents"), Width.kernel(s))
   def embeddings(s: SparkSession, d: String): DataFrame =
-    table(s, d, "embeddings").repartition(s.sparkContext.defaultParallelism)
+    Width.keyed(table(s, d, "embeddings"), Width.kernel(s))
 }

@@ -1,10 +1,16 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec,
+  LocalLimitExec, QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Pin
+import graft.operators.{LanguageModel, Pin, TextDedup, VectorSearch}
+import graft.tables.Tables
 
 class PinSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -42,5 +48,87 @@ class PinSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Each lazy pin's scans in `p`, by RDD id, with whether a limit sits
+    * above the scan inside the same stage. An exchange (or a query stage)
+    * between them reads its whole input, so a limit above it does not cut
+    * the pin short. */
+  private def lazyScans(p: SparkPlan, limited: Boolean): Seq[(Int, Boolean)] =
+    p match {
+      case a: AdaptiveSparkPlanExec => lazyScans(a.executedPlan, limited)
+      case s: QueryStageExec => lazyScans(s.plan, limited = false)
+      case r: ReusedExchangeExec => lazyScans(r.child, limited = false)
+      case e: Exchange => e.children.flatMap(lazyScans(_, limited = false))
+      case r: RDDScanExec if r.rdd.name == Pin.LazyName => Seq(r.rdd.id -> limited)
+      case _: CollectLimitExec | _: GlobalLimitExec | _: LocalLimitExec =>
+        p.children.flatMap(lazyScans(_, limited = true))
+      case _ => (p.children ++ p.subqueries).flatMap(lazyScans(_, limited))
+    }
+
+  test("a lazy pin's first consuming plan puts no limit above its scan") {
+    val sf = "/root/testdata/sf0.001"
+    // rdd id -> (action, limited) of the first plan that scanned it
+    val first = scala.collection.concurrent.TrieMap[Int, (String, Boolean)]()
+    val events = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = {
+        lazyScans(qe.executedPlan, limited = false).foreach { case (id, lim) =>
+          first.putIfAbsent(id, (action, lim))
+        }
+        events.incrementAndGet()
+      }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit =
+        events.incrementAndGet()
+    }
+    def settle(): Unit = {
+      var last = -1
+      while (events.get != last) { last = events.get; Thread.sleep(200) }
+    }
+    // the pins `body` created, each with its first consumer and limit flag
+    def pinsOf(body: => Unit): Map[Int, (String, Boolean)] = {
+      settle()
+      val before = first.keySet.toSet
+      body
+      settle()
+      first.filter { case (id, _) => !before(id) }.toMap
+    }
+    def check(name: String)(body: => Unit): Unit = {
+      val pins = pinsOf(body)
+      assert(pins.nonEmpty, s"$name: no lazy pin was consumed")
+      val cut = pins.filter(_._2._2)
+      assert(cut.isEmpty, s"$name: lazy pins first read under a limit: $cut")
+    }
+    val docs = Tables.documents(spark, sf)
+    val half = docs.filter(col("doc_id") % 2 === 0)
+    val rest = docs.filter(col("doc_id") % 2 === 1)
+    val corpus = graft.queries.TrainingData.nearDupCorpus(spark, sf)
+    spark.listenerManager.register(listener)
+    try {
+      check("jaccardPairs")(
+        TextDedup.jaccardPairs(docs, "doc_id", "text", Nil, 0.8).collect())
+      check("jaccardPairsAgainst")(TextDedup.jaccardPairsAgainst(
+        half, rest, "doc_id", "text", Nil, 0.8).collect())
+      check("verifiedMinhashPairs")(TextDedup.verifiedMinhashPairs(
+        docs, "doc_id", "text", bands = 32, rowsPerBand = 3, threshold = 0.9)
+        .collect())
+      check("verifiedMinhashPairsMd5")(TextDedup.verifiedMinhashPairsMd5(
+        docs, "doc_id", "text", bands = 12, rowsPerBand = 8, threshold = 0.9)
+        .collect())
+      check("simhashPairs")(
+        TextDedup.simhashPairs(docs, "doc_id", "text", 3).collect())
+      check("cosineNearDupPairs")(
+        VectorSearch.cosineNearDupPairs(corpus, "vec_id", "v", 64, 0.9).collect())
+      check("bigramSurprisal")(
+        LanguageModel.bigramSurprisal(docs, "doc_id", "text").collect())
+      check("trigramSurprisal")(
+        LanguageModel.trigramSurprisal(docs, "doc_id", "text").collect())
+      check("naiveBayes")(
+        LanguageModel.naiveBayes(docs, "doc_id", "text", "lang").collect())
+      // the check itself: a short-circuiting first consumer is flagged
+      val planted = pinsOf(Pin.lazily(spark.range(1000).toDF().repartition(4)).limit(1).collect())
+      assert(planted.size == 1 && planted.values.forall(_._2),
+        s"a limit(1) first consumer must be flagged: $planted")
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -108,4 +108,26 @@ class TableResolverSpec extends AnyFunSuite {
       ProjectIdGuard(r.read("1", "mor_versioned").queryExecution.analyzed)
     } finally GuardedTables.unguard(s"${r.unifiedRoot}/mor_versioned")
   }
+
+  test("maintenance of a guarded resolver table passes the tenant guard; " +
+      "an unfiltered user read still throws") {
+    val r = freshResolver()
+    val t = r.resolve("1", "mor_versioned")
+    try {
+      // two tenants, two versions each, all on one event date: sweep-dirty
+      for (pid <- Seq("1", "2"); k <- 0 until 2)
+        t.append(rows(pid, 4 + k), Some(java.time.LocalDateTime.of(2024, 3, 2, 0, k)))
+      val swept = t.maintenanceSweep()
+      assert(swept.nonEmpty, "the sweep must find the fragmented dates")
+      t.compact()
+      t.vacuum()
+      // compaction kept every tenant's rows: 5 per tenant (the later,
+      // larger batch wins the overlapping ids)
+      assert(r.read("1", "mor_versioned").count() == 5)
+      assert(r.read("2", "mor_versioned").count() == 5)
+      assert(t.compactBaseDir().isDefined)
+      intercept[MissingProjectIdException](t.readResolved().count())
+      intercept[MissingProjectIdException](t.readRaw().count())
+    } finally GuardedTables.unguard(s"${r.unifiedRoot}/mor_versioned")
+  }
 }

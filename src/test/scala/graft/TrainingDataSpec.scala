@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{TextAnalysis, TextDedup, VectorSearch}
+import graft.operators.{TextAnalysis, TextDedup, VectorSearch, Width}
 import graft.tables.Tables
 
 /** Validates the hash-seeded similarity ops against their exact
@@ -108,34 +108,41 @@ class TrainingDataSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(17)
     val vocab = (1 to 12).map(i => s"w$i")
-    val docsDf = (0 until 40).map { i =>
+    val random = (0 until 40).map { i =>
       (i.toLong,
         Seq.fill(4 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size)))
           .mkString(" "))
-    }.toDF("doc_id", "text").localCheckpoint()
-    def run() = TextDedup.jaccardPairs(docsDf, "doc_id", "text", Nil, 0.8)
+    }
+    // plus two verbatim copies, so the pair set is never empty
+    val docsDf = (random ++ random.take(2).map { case (i, t) => (i + 100L, t) })
+      .toDF("doc_id", "text").localCheckpoint()
+    def run(df: org.apache.spark.sql.DataFrame) =
+      TextDedup.jaccardPairs(df, "doc_id", "text", Nil, 0.8)
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // below the gate: AQE keeps sizing the candidate exchange
-    val small = run()
+    val small = run(docsDf)
     val smallPairs = pairsOf(small)
+    assert(smallPairs.nonEmpty, "fixture should contain near-dup pairs")
     assert(!small.queryExecution.executedPlan.toString
         .contains("REPARTITION_BY_NUM"),
       "gate-scale corpora must not pay the explicit-width exchange")
-    // above the (lowered) gate: the candidate join's inputs carry the
-    // explicit non-coalescible width — VERDICT r13 what's-wrong #3: AQE
-    // sizes this join by its ~10x-compressed input while its OUTPUT fans
-    // out, so the width must be operator-owned at scale
-    spark.conf.set("spark.graft.jaccard.widthGateDocs", "10")
-    try {
-      val wide = run()
-      assert(pairsOf(wide) == smallPairs,
-        "explicit width changed the pair set")
-      assert(wide.queryExecution.executedPlan.toString
-          .contains("REPARTITION_BY_NUM"),
-        "above the gate the candidate join must pin an explicit width")
-    } finally spark.conf.unset("spark.graft.jaccard.widthGateDocs")
+    // above the gate: the same 40 docs plus one unique single-token doc
+    // per row past Width.ScaleGateRows — the fillers pair with nothing,
+    // so the pair set must not move, while the candidate join's inputs
+    // carry the explicit non-coalescible width (AQE sizes this join by
+    // its ~10x-compressed input while its OUTPUT fans out, so the width
+    // must be operator-owned at scale)
+    val fillers = spark.range(Width.ScaleGateRows)
+      .select((col("id") + 1000L).as("doc_id"),
+        concat(lit("u"), col("id").cast("string")).as("text"))
+    val wide = run(docsDf.unionByName(fillers))
+    assert(pairsOf(wide) == smallPairs,
+      "explicit width changed the pair set")
+    assert(wide.queryExecution.executedPlan.toString
+        .contains("REPARTITION_BY_NUM"),
+      "above the gate the candidate join must pin an explicit width")
   }
 
   test("containmentJoin equals local brute force on randomized corpora " +
@@ -385,13 +392,13 @@ class TrainingDataSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       settle(); recordsRead.set(0L)
-      assert(TextDedup.exceedsCount(df, 100L), "80k rows must exceed 100")
+      assert(Width.exceedsCount(df, 100L), "80k rows must exceed 100")
       val bounded = settle()
       // each of the 8 partitions stops within its first vectorized batch
       // or two — a full count() would read all 80k rows
       assert(bounded > 0 && bounded <= 20000,
         s"over-cap gate read $bounded rows — not short-circuiting")
-      assert(!TextDedup.exceedsCount(df, 200000L),
+      assert(!Width.exceedsCount(df, 200000L),
         "under-cap gate must report the exact side")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -399,43 +406,66 @@ class TrainingDataSpec extends AnyFunSuite {
   test("edge-width gate: narrow (gate-scale) and wide (probe-scale) edge " +
       "pins label identically, on both CC paths") {
     import spark.implicits._
-    // the r14 gate: below the 100k-id advisory gate the symmetric-edge
-    // pin keeps its producer's width (no explicit repartition); above it
-    // (or under the forceWideEdges A/B knob) the un-coalescible explicit
-    // width stands. Labels must be identical either way — partitioning
-    // is never allowed to change what min-label propagation computes.
+    // below the Width.ScaleGateRows gate the symmetric-edge pin keeps its
+    // producer's width (no explicit repartition); above it the
+    // un-coalescible Width.fanOut width stands. Labels must be identical
+    // either way — partitioning is never allowed to change what
+    // min-label propagation computes.
     val rnd = new scala.util.Random(13)
     val ids = (0L until 60L).toDF("__id")
     val edges = Seq.fill(45)((rnd.nextLong(60), rnd.nextLong(60)))
       .filter(e => e._1 != e._2).toDF("id_a", "id_b")
-    def labels(): Map[Long, Long] =
-      TextDedup.connectedComponents(ids, edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val narrow = labels() // 60 ids < gate → narrow pin
-    val wide = try {
-      spark.conf.set("spark.graft.cc.forceWideEdges", "true")
-      labels()
-    } finally spark.conf.unset("spark.graft.cc.forceWideEdges")
-    assert(narrow == wide, "edge pin width changed CC labels")
-    val (narrowLoop, wideLoop) = withDistributedCc {
-      val n = labels()
-      val w = try {
-        spark.conf.set("spark.graft.cc.forceWideEdges", "true")
-        labels()
-      } finally spark.conf.unset("spark.graft.cc.forceWideEdges")
-      (n, w)
-    }
+    def labels(idsDf: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      TextDedup.connectedComponents(idsDf, edges)
+        .filter(col("__id") < 60).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val narrow = labels(ids) // 60 ids < gate → narrow pin
+    assert(narrow.size == 60 && narrow.exists { case (k, v) => k != v },
+      "fixture must hold non-trivial components")
+    // a >100k-id frame takes the wide path on its own and labels the ids
+    // the edges touch identically, on the driver path and on the
+    // distributed loop
+    val bigIds = spark.range(Width.ScaleGateRows + 20000)
+      .select(col("id").as("__id"))
+    assert(labels(bigIds) == narrow, "above-gate driver path diverged")
+    val (narrowLoop, wideLoop) = withDistributedCc((labels(ids), labels(bigIds)))
     assert(narrowLoop == narrow && wideLoop == narrow,
       "distributed loop diverged across edge pin widths")
-    // the natural gate flips with corpus size: a >100k-id frame takes
-    // the wide path on its own (no knob) and still labels identically
-    // on the ids the edges touch
-    val bigIds = spark.range(120000).select(col("id").as("__id"))
-    val bigLabels = TextDedup.connectedComponents(bigIds, edges)
-      .filter(col("__id") < 60).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bigLabels == narrow.map { case (k, v) => k -> v },
-      "above-gate wide path diverged on the touched ids")
+  }
+
+  test("connectedComponents runs an exchange-bearing ids input once per " +
+      "call, on both CC paths") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import spark.implicits._
+    // ids shaped like Tables.documents(...).select(doc_id): a parquet scan
+    // under a repartition, so its plan carries an exchange
+    val dir = graft.tables.TempDirs.create("graft_cc_ids_")
+    spark.range(500).select(col("id").as("__id")).write.mode("overwrite").parquet(dir)
+    def ids = spark.read.parquet(dir).repartition(4) // a fresh plan per call
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val events = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+        events.incrementAndGet()
+      }
+    }
+    def settle(): Unit = {
+      var last = -1
+      while (events.get != last) { last = events.get; Thread.sleep(200) }
+    }
+    def stagesReadingIds(): (Int, Long) = {
+      settle(); scans.set(0)
+      val n = TextDedup.connectedComponents(ids, edges).count()
+      settle()
+      (scans.get, n)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(stagesReadingIds() == (1, 500L), "driver path")
+      assert(withDistributedCc(stagesReadingIds()) == (1, 500L), "distributed loop")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("driver union-find fast path labels exactly like the distributed loop") {
