@@ -15,8 +15,47 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: `runMain graft.PlanDump <outDir> [suffix]` with the usual
   * env (`SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`,
   * `SPARK_GRAFT_ONLY=q26_minhash_lsh,...`). Each query lands at
-  * `<outDir>/<name><suffix>.txt` (suffix e.g. `_before` / `_after`). */
+  * `<outDir>/<name><suffix>.txt` (suffix e.g. `_before` / `_after`).
+  *
+  * The written text is masked so that two runs, of one commit or of two,
+  * can be compared with `diff`:
+  *  - JVM identity hash codes (`[[D@1b2c3d4e`, the sign-LSH hyperplanes
+  *    of q29) become `@<hash>`;
+  *  - parquet part-file UUIDs (q49/q99's text-index legs) become `<uuid>`;
+  *  - the random suffix of a fixture's temp directory
+  *    (`/tmp/graft_docstore_9044…`) becomes `<tmp>`;
+  *  - source line numbers (`GraftTable.scala:1063`) become `<line>`;
+  *  - expression ids (`#6550`), exchange `plan_id`s and RDD ids come from
+  *    JVM-wide counters, so they shift with every plan built before; each
+  *    is renumbered in order of first appearance within its plan.
+  *
+  * One known residual stays: q110's plan embeds PCA constants fitted at
+  * plan time, whose last digits change from run to run. */
 object PlanDump {
+  private val IdentityHash = "(?<=[\\w\\];$])@[0-9a-f]{1,8}\\b".r
+  private val Uuid =
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+  private val TempDir = ("(" + java.util.regex.Pattern.quote(
+    new java.io.File(System.getProperty("java.io.tmpdir")).getPath) +
+    "/\\w+?_)\\d+").r
+  private val SourceLine = "(?<=\\.scala:)\\d+".r
+  private val Fixed = Seq(IdentityHash -> "@<hash>", Uuid -> "<uuid>",
+    TempDir -> "$1<tmp>", SourceLine -> "<line>")
+  private val Counters = Seq("#", "plan_id=", "RDD[")
+    .map(p => p -> (java.util.regex.Pattern.quote(p) + "(\\d+)").r)
+
+  /** The run-varying tokens of a plan string replaced by fixed ones. */
+  def mask(plan: String): String = {
+    val fixed = Fixed.foldLeft(plan) { case (txt, (r, to)) =>
+      r.replaceAllIn(txt, to)
+    }
+    Counters.foldLeft(fixed) { case (txt, (prefix, counter)) =>
+      val seen = scala.collection.mutable.Map[String, Int]()
+      counter.replaceAllIn(txt, m => scala.util.matching.Regex.quoteReplacement(
+        prefix + seen.getOrElseUpdate(m.group(1), seen.size)))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r14")
     val suffix = args.lift(1).getOrElse("")
@@ -30,7 +69,7 @@ object PlanDump {
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(mode)
+        val txt = mask(df.queryExecution.explainString(mode))
         Files.writeString(Paths.get(outDir, s"$name$suffix.txt"), txt)
         System.err.println(s"[plandump] $name ok (${txt.length} chars)")
       } catch { case e: Throwable =>

@@ -38,7 +38,9 @@ case class TableSchema(
     // per-field writer options from the schema YAML (reference
     // otel_logs_and_spans.yaml:85-101, writer at src/database.rs:11343+):
     // bloom filters opt-IN on point-lookup columns, dictionary opt-OUT on
-    // high-entropy free-text
+    // high-entropy free-text. parquet writes no bloom for a column chunk
+    // whose pages are all dictionary-encoded (its dictionary answers the
+    // lookup), so a listed low-cardinality column gets none in such files
     bloomFilterColumns: Seq[String] = Seq.empty,
     dictionaryDisabledColumns: Seq[String] = Seq.empty,
     // per-field FTS tokenizer (reference `tantivy: {tokenizer: …}` options,
@@ -92,7 +94,9 @@ object TableSchemas {
       SortKey("id"), SortKey("level"), SortKey("status_code")),
     // mirrors the YAML's bloom_filter: true fields present in this reduced
     // schema (id/parent_id/name/context trace+span ids — the point-lookup
-    // columns behind BASELINE's trace_lookup shape)
+    // columns behind BASELINE's trace_lookup shape). `name` is listed but
+    // gets no bloom while it stays dictionary-encoded, as it does for a
+    // span-name vocabulary
     bloomFilterColumns = Seq("id", "parent_id", "name",
       "context___trace_id", "context___span_id"),
     // the YAML's tokenizer split: identifiers and enums are `raw`

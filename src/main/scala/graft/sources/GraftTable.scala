@@ -59,6 +59,11 @@ object GraftTable {
     * int64 micros (see `rgShadowExpr`); never part of a read schema. */
   val RgKeyColumn = "__rg_key"
 
+  /** Adaptive bloom candidates per column: 1 MB halved down to 1 KB. A
+    * 512 B candidate would be dropped by parquet anyway, since its 1 %
+    * FPP capacity rounds down to zero in parquet's 500-value steps. */
+  val BloomCandidates = 11
+
   /** Free a `localCheckpoint`ed frame's executor blocks eagerly. The
     * blocks belong to the RDD the checkpoint wrapped (LogicalRDD in the
     * analyzed plan); without this they survive until the driver GCs the
@@ -558,18 +563,31 @@ class GraftTable(
 
   /** Per-column parquet writer options from the schema's field opts
     * (reference `build_writer_properties`, `src/database.rs:11343-11420`):
-    * bloom filters opt-IN per point-lookup column (NDV sized to a typical
-    * row group, matching the reference's 1M — a naive global enable would
+    * bloom filters opt-IN per point-lookup column (a global enable would
     * pay bloom buffers on every column), dictionary opt-OUT per high-
     * entropy free-text column. DataFrameWriter options flow into the job's
-    * Hadoop conf, where parquet-mr applies the `#column` suffix per-column. */
+    * Hadoop conf, where parquet-mr applies the `#column` suffix per-column.
+    *
+    * Bloom sizing is per row group. parquet's adaptive filter fills
+    * [[BloomCandidates]] power-of-two bitsets, from
+    * `parquet.bloom.filter.max.bytes` (1 MB) down to ~1 KB, drops each one
+    * whose capacity at the default 1 % FPP falls below the distinct values
+    * seen so far, and writes the smallest survivor. A file never gets a
+    * bigger filter than the cap; a 200-row tenant-day gets ~1 KB. The
+    * adaptive switch is read only as the global key — its `#column` form
+    * is silently ignored — and it applies only to columns with bloom
+    * enabled and no fixed NDV. A fixed NDV does not fit here: the
+    * reference's 1,000,000 suits its large Delta files, but on this
+    * table's one-file-per-(project_id, date) layout it made every file
+    * carry 1 MB per bloom column beside a few KB of data. */
   private def writerOptions: Map[String, String] = {
     val bloom = meta.bloomFilterColumns.flatMap(c => Seq(
       s"parquet.bloom.filter.enabled#$c" -> "true",
-      s"parquet.bloom.filter.expected.ndv#$c" -> "1000000"))
+      s"parquet.bloom.filter.candidates.number#$c" ->
+        GraftTable.BloomCandidates.toString))
     val dict = meta.dictionaryDisabledColumns.map(c =>
       s"parquet.enable.dictionary#$c" -> "false")
-    (bloom ++ dict).toMap
+    (bloom ++ dict).toMap + ("parquet.bloom.filter.adaptive.enabled" -> "true")
   }
 
   /** The one partitioned write every data path (append, full and partial
@@ -1237,7 +1255,10 @@ class GraftTable(
             (col("lo").isNull || col("hi").isNull || col("minnulls") > 0 ||
               col("lo") <= col("hi")))
           .drop("n", "minnulls"))
+          // sorted by file so the leg order (and the plan) does not
+          // follow the aggregation's collect order
           .collect().map(r => (r.getString(0), r.get(1), r.get(2)))
+          .sortBy(_._1)
       val keyCol = rgRangeColumn
       val legSchema =
         if (rgShadowExpr.isDefined) liveSchema()

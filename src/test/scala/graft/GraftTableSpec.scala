@@ -715,20 +715,19 @@ class GraftTableSpec extends AnyFunSuite {
   }
 
   test("schema field options reach the parquet writer: bloom in, dictionary out") {
-    import org.apache.hadoop.fs.Path
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
     val dir = Files.createTempDirectory("graft_bloom_").toString
     val schema = TableSchemas.morVersioned.copy(
       bloomFilterColumns = Seq("id"),
       dictionaryDisabledColumns = Seq("name"))
     val t = new GraftTable(spark, dir, schema)
-    t.append(sampleRows(200), t0(0))
-    val file = Files.walk(java.nio.file.Paths.get(s"$dir/${schema.name}"))
-      .iterator().asScala.find(_.toString.endsWith(".parquet")).get
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(file.toString), spark.sparkContext.hadoopConfiguration))
+    // one tenant-day: a single 200-row file
+    t.append(sampleRows(200).withColumn("project_id", lit("0")), t0(0))
+    val file = ParquetBlooms.files(s"$dir/${schema.name}").head
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     try {
       val cols = reader.getFooter.getBlocks.get(0).getColumns.asScala
         .map(c => c.getPath.toDotString -> c).toMap
@@ -742,6 +741,39 @@ class GraftTableSpec extends AnyFunSuite {
         || cols("id").getEncodings.asScala.nonEmpty,
         "sanity: id column encodings readable")
     } finally reader.close()
+
+    // right-sized: a fixed 1,000,000-value NDV gave this file a 1 MB bitset
+    val small = ParquetBlooms.blooms(file, "id", conf).map(_.getBitsetSize)
+    assert(small.forall(_ <= 4096), s"200-row file carries $small B of id bloom")
+
+    // ...and still grows with the distinct count: 200k ids in one file
+    val big = new GraftTable(spark,
+      Files.createTempDirectory("graft_bloom_big_").toString, schema)
+    val distinct = 200000
+    big.append(spark.range(distinct).select(lit("0").as("project_id"),
+      (lit("2024-03-01 00:00:00").cast("timestamp_ntz")
+        + expr("make_interval(0, 0, 0, 0, 0, 0, cast(id / 4 as decimal(18, 6)))")).as("timestamp"),
+      concat(lit("row-"), col("id")).as("id"),
+      lit("n").as("name")), t0(1))
+    val bigFile = ParquetBlooms.files(s"${big.root}/${schema.name}") match {
+      case Seq(f) => f
+      case fs => fail(s"expected one file, got $fs")
+    }
+    val bigBloom = ParquetBlooms.blooms(bigFile, "id", conf)
+    assert(bigBloom.size == 1 &&
+      bigBloom.head.getBitsetSize >= ParquetBlooms.optimalBytes(distinct),
+      s"${bigBloom.map(_.getBitsetSize)} B < ${ParquetBlooms.optimalBytes(distinct)} B " +
+        s"needed for $distinct ids at 1 % FPP")
+
+    // and still prunes the trace-lookup shape: an id inside each file's
+    // min/max ("row-0" .. "row-99" / "row-99999") but absent from it finds
+    // no row group through the bloom alone; a present id keeps its group
+    for ((f, present) <- Seq(file -> "row-150", bigFile -> "row-123456")) {
+      assert(ParquetBlooms.rowGroupsFor(f, "id", "row-1500a", conf) == 0,
+        s"absent id not pruned by the bloom in $f")
+      assert(ParquetBlooms.rowGroupsFor(f, "id", present, conf) == 1,
+        s"present id $present lost its row group in $f")
+    }
   }
 
   test("write lock serializes concurrent appenders; stale locks are stolen") {
