@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{col, collect_set, count, lit, to_date}
 
 /** In-session write buffer over a [[GraftTable]] — the Spark rendering of
   * the reference's MemBuffer tier (S4/W2,
@@ -51,8 +52,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * ownership, letting a successor open cleanly in-session.
   *
   * Mechanics: each batch is conformed (stamped, date-derived,
-  * schema-projected) at insert time and pinned with `localCheckpoint` —
-  * in durable mode the checkpoint reads back the just-written WAL
+  * schema-projected) at insert time, coalesced to as many partitions as
+  * its planned size fills file splits (`spark.sql.files.maxPartitionBytes`
+  * — one for any batch that fits a split, so one WAL file and one pinned
+  * partition), and pinned with `localCheckpoint`. The pin job itself
+  * reports the batch's row count (and, for [[updateFrom]], the pin of the
+  * DML batch its touched dates) through an `Observation`, so a durable
+  * insert runs two Spark jobs (WAL write, pin) and a non-durable one a
+  * single job. In durable mode the checkpoint reads back the just-written WAL
   * parquet (a bounded local scan), NOT the caller's plan, and the
   * checkpoint rather than the WAL files backs every handed-out frame:
   * a reader that obtained the resolved view BEFORE a flush keeps
@@ -170,8 +177,8 @@ final class BufferedWriteLayer(val table: GraftTable,
           if (fs.exists(new Path(d, "_SUCCESS"))) {
             // pin via checkpoint (not the files): flush truncates the WAL
             // while frames served from this batch may still be alive
-            val df = table.spark.read.parquet(d.toString).localCheckpoint()
-            val n = df.count()
+            val (df, n) =
+              BufferedWriteLayer.pin(table.spark.read.parquet(d.toString))
             if (n > 0) {
               // restore the batch's DML-touched dates from its sidecar —
               // written BEFORE the batch itself, so a committed DML batch
@@ -269,8 +276,8 @@ final class BufferedWriteLayer(val table: GraftTable,
     val t = versionTime.getOrElse(java.time.LocalDateTime
       .now(java.time.ZoneOffset.UTC)
       .truncatedTo(java.time.temporal.ChronoUnit.MICROS))
-    val conformed = table.conformNow(df, t)
-    val (pinned, walDir) =
+    val conformed = BufferedWriteLayer.toSplits(table.conformNow(df, t))
+    val ((pinned, rows), walDir) =
       if (durable) {
         val micros =
           t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000
@@ -300,12 +307,12 @@ final class BufferedWriteLayer(val table: GraftTable,
         conformed.write.parquet(dir) // _SUCCESS commits the record
         // checkpoint the READ-BACK (bounded local scan), so the buffered
         // frame outlives the WAL truncation at flush
-        (table.spark.read.schema(conformed.schema).parquet(dir)
-          .localCheckpoint(), Some(dir))
-      } else (conformed.localCheckpoint(), None)
+        (BufferedWriteLayer.pin(
+          table.spark.read.schema(conformed.schema).parquet(dir)), Some(dir))
+      } else (BufferedWriteLayer.pin(conformed), None)
     val doFlush = synchronized {
       batches ::= ((pinned, walDir, dmlDates))
-      buffered += pinned.count()
+      buffered += rows
       buffered >= maxBufferedRows
     }
     if (doFlush) flush()
@@ -326,23 +333,21 @@ final class BufferedWriteLayer(val table: GraftTable,
       versionTime: Option[java.time.LocalDateTime] = None): Unit = {
     // materialize the batch BEFORE inserting: the batch reads the
     // resolved view, and insert would otherwise re-evaluate that plan
-    // after the buffer already contains the new versions themselves
-    val batch = table.updateFromBatch(readResolved(), source, on,
-      assignments).localCheckpoint()
+    // after the buffer already contains the new versions themselves.
+    //
     // Buffered DML must reach the dirty-bin queue like the direct
     // GraftTable DML paths do — otherwise enrichment through the buffer
     // silently misses priority compaction after flush. The batch's own
-    // touched dates are computed here (a bounded distinct over the pinned
-    // batch — enrichment batches span few dates) and enqueued ATOMICALLY
+    // touched dates are observed on its pin job and enqueued ATOMICALLY
     // with the batch entry inside insert's synchronized block: a
     // concurrent flush either commits the batch with its dates or sees
     // neither, never the dates alone.
-    val touched = batch
-      .select(org.apache.spark.sql.functions.to_date(
-          org.apache.spark.sql.functions.col(table.meta.timeColumn))
-        .cast("string").as("d"))
-      .filter(org.apache.spark.sql.functions.col("d").isNotNull)
-      .distinct().collect().map(_.getString(0)).toSet
+    val dates = new Observation()
+    val batch = table.updateFromBatch(readResolved(), source, on, assignments)
+      .observe(dates, collect_set(
+        to_date(col(table.meta.timeColumn)).cast("string")).as("dates"))
+      .localCheckpoint()
+    val touched = dates.get("dates").asInstanceOf[Iterable[String]].toSet
     insertWithDmlDates(batch, versionTime, touched)
   }
 
@@ -397,6 +402,22 @@ final class BufferedWriteLayer(val table: GraftTable,
 }
 
 object BufferedWriteLayer {
+  /** `df` in as many partitions as its planned size fills file splits
+    * (`spark.sql.files.maxPartitionBytes`). `coalesce` never adds
+    * partitions, so a batch of unknown or large size keeps its own. */
+  private def toSplits(df: DataFrame): DataFrame = {
+    val planned = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    df.coalesce(((planned + split - 1) / split).max(1).min(Int.MaxValue).toInt)
+  }
+
+  /** `localCheckpoint` of `df` and its row count, read from the same job. */
+  private def pin(df: DataFrame): (DataFrame, Long) = {
+    val rows = new Observation()
+    val pinned = df.observe(rows, count(lit(1)).as("rows")).localCheckpoint()
+    (pinned, rows.get("rows").asInstanceOf[Long])
+  }
+
   /** Live durable-layer owners by qualified WAL path — the in-process
     * fast path of the single-owner lock. Cross-process enforcement is the
     * OS FileLock on local filesystems and the no-overwrite `_lock` marker

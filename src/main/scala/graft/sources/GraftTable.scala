@@ -785,7 +785,9 @@ class GraftTable(
   private def rawFrom(dirs: Seq[String], s: StructType,
       keep: Int = 8): DataFrame =
     if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+      // the column order of a partitioned read: partition columns last
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(s.fields.sortBy(f => meta.partitions.indexOf(f.name))))
     else cachedPlan(s"${s.hashCode}|${dirs.mkString(";")}", keep) {
       dirs.map(d => spark.read.schema(s).parquet(d)).reduce(_ unionByName _)
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -329,36 +328,19 @@ class AnnIngestIndexSpec extends AnyFunSuite {
 
   test("20-batch drain: probes never re-hash the base, reads follow the " +
       "batch's bucket mass, segments stay logarithmic") {
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    def settle(): Long = {
-      var last = -1L; var spins = 0
-      while (recordsRead.get() != last && spins < 50) {
-        last = recordsRead.get(); Thread.sleep(100); spins += 1
-      }
-      recordsRead.get()
-    }
     val dir = graft.tables.TempDirs.create("graft_annidx20_")
     val idx = new AnnIngestIndex(spark, dir, "vec_id", "v", Dim,
       threshold = 0.9)
     val batchRows = 50
     val reads = scala.collection.mutable.ArrayBuffer.empty[Long]
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      (0 until 20).foreach { b =>
-        val batch = vecs(b * batchRows, (b + 1) * batchRows, 1000 + b)
-          .localCheckpoint()
-        settle(); recordsRead.set(0L)
-        val hits = idx.probe(batch).count()
-        reads += settle()
-        assert(hits == 0L, "independent gaussians must not near-dup")
-        idx.add(batch)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    (0 until 20).foreach { b =>
+      val batch = vecs(b * batchRows, (b + 1) * batchRows, 1000 + b)
+        .localCheckpoint()
+      val (hits, work) = SparkWork.of(spark)(idx.probe(batch).count())
+      reads += work.recordsRead
+      assert(hits == 0L, "independent gaussians must not near-dup")
+      idx.add(batch)
+    }
     // probe cost follows the batch's bucket mass, not the corpus: the
     // last probe faces 19x batch-1's base, yet reads stay within the
     // bucket-depth growth (keys x depth), far under a full base scan +

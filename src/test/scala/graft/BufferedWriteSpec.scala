@@ -364,6 +364,106 @@ class BufferedWriteSpec extends AnyFunSuite {
     fresh.close()
   }
 
+  /** Run `body` with the session's file split size set to `bytes`. */
+  private def withSplitBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def walFiles(dir: org.apache.hadoop.fs.Path): Int =
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
+
+  test("a small insert is one partition and one pin job: a durable one " +
+      "writes one WAL file in one more job") {
+    val batch = rows(0 until 512, "buffered")
+    assert(batch.rdd.getNumPartitions > 1, "the batch arrives spread out")
+    val tbl = freshTable()
+    val buf = new BufferedWriteLayer(tbl, durable = true)
+    // one task per job: one partition written, one pinned
+    val (_, durable) = SparkWork.of(spark)(buf.insert(batch, t(1)))
+    assert(durable.jobs == 2 && durable.tasks == 2, s"durable insert ran $durable")
+    assert(fsList(tbl).map(walFiles) == Seq(1), "one WAL file per batch")
+    assert(buf.bufferedRows == 512)
+    buf.close()
+
+    val mem = new BufferedWriteLayer(freshTable())
+    val (_, inMemory) = SparkWork.of(spark)(mem.insert(batch, t(1)))
+    assert(inMemory.jobs == 1 && inMemory.tasks == 1,
+      s"non-durable insert ran $inMemory")
+    assert(mem.bufferedRows == 512)
+  }
+
+  test("a batch larger than one file split keeps more than one partition") {
+    withSplitBytes(1024) {
+      val batch = rows(0 until 512, "big")
+      val mem = new BufferedWriteLayer(freshTable())
+      val (_, work) = SparkWork.of(spark)(mem.insert(batch, t(1)))
+      assert(work.jobs == 1 && work.tasks > 1, s"pinned in one partition: $work")
+      assert(mem.bufferedRows == 512)
+      val tbl = freshTable()
+      val buf = new BufferedWriteLayer(tbl, durable = true)
+      buf.insert(batch, t(1))
+      assert(fsList(tbl).map(walFiles).head > 1, "WAL written in one file")
+      assert(buf.bufferedRows == 512)
+      assert(buf.readResolved().count() == 512)
+      buf.close()
+    }
+  }
+
+  test("buffered updateFrom pins its batch and reads its dates in the same " +
+      "job, with no separate date job") {
+    val tbl = freshTable()
+    val buf = new BufferedWriteLayer(tbl)
+    // 2024-03-01 and 2024-03-02, minutes apart around midnight
+    val spread = rows(0 until 40, "buffered")
+      .withColumn("timestamp", col("timestamp") + expr("interval 23 hours 40 minutes"))
+    buf.insert(spread, t(0))
+    import spark.implicits._
+    val src = Seq("row-1", "row-30", "row-999").toDF("sid")
+    val (_, work) = SparkWork.of(spark)(buf.updateFrom(src,
+      col("t.id") === col("s.sid"), Map("name" -> lit("enriched")), t(1)))
+    assert(work.actions == Seq("localCheckpoint", "localCheckpoint"),
+      s"updateFrom ran ${work.actions}")
+    assert(buf.bufferedRows == 42)
+    val batchDates = buf.readResolved().filter(col("name") === "enriched")
+      .select(col("date").cast("string")).collect().map(_.getString(0)).toSet
+    assert(batchDates == Set("2024-03-01", "2024-03-02"))
+    buf.flush()
+    assert(tbl.dmlDirtyDates() == batchDates,
+      s"queued ${tbl.dmlDirtyDates()}, the batch holds $batchDates")
+  }
+
+  test("bufferedRows stays exact across inserts, enrichment and recovery") {
+    import spark.implicits._
+    val tbl = freshTable()
+    val buf = new BufferedWriteLayer(tbl, durable = true)
+    buf.insert(rows(0 until 30, "a"), t(0))
+    assert(buf.bufferedRows == 30)
+    buf.insert(rows(20 until 45, "b"), t(1)) // 10 re-sent identities
+    assert(buf.bufferedRows == 55, "re-sent rows are buffered rows too")
+    buf.insert(rows(Nil, "empty"), t(2))
+    assert(buf.bufferedRows == 55)
+    def enrich(ids: Seq[String], m: Int) = buf.updateFrom(ids.toDF("sid"),
+      col("t.id") === col("s.sid"), Map("name" -> lit(s"e$m")), t(m))
+    enrich(Seq("row-3", "row-25", "row-44"), 3)
+    assert(buf.bufferedRows == 58)
+    enrich(Seq("row-999"), 4) // matches nothing
+    assert(buf.bufferedRows == 58)
+    buf.simulateCrash()
+    val recovered = new BufferedWriteLayer(tbl, durable = true)
+    assert(recovered.bufferedRows == 58, "WAL replay counts every batch")
+    assert(recovered.readResolved().count() == 45)
+    recovered.flush()
+    assert(recovered.bufferedRows == 0L)
+    recovered.close()
+  }
+
   test("over a partial base the buffered view reads no more files than " +
       "the table view, and equals it after flush") {
     val tbl = freshTable()

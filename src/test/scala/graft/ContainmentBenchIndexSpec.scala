@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,19 +81,6 @@ class ContainmentBenchIndexSpec extends AnyFunSuite {
 
   test("drain: bench-side reads follow the batch, not the drained " +
       "corpus; the bench is never re-tokenized") {
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    def settle(): Long = {
-      var last = -1L; var spins = 0
-      while (recordsRead.get() != last && spins < 50) {
-        last = recordsRead.get(); Thread.sleep(100); spins += 1
-      }
-      recordsRead.get()
-    }
     val dir = graft.tables.TempDirs.create("graft_cbi_drain_")
     val idx = new ContainmentBenchIndex(spark, dir, tau = 0.95)
     // a LARGE bench (2000 docs): per-batch recompute would pay its
@@ -102,17 +88,13 @@ class ContainmentBenchIndexSpec extends AnyFunSuite {
     val b = bench(2000).localCheckpoint()
     idx.build(sets(b))
     val reads = scala.collection.mutable.ArrayBuffer.empty[Long]
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      (0 until 8).foreach { k =>
-        val batch = docs(k * 50, (k + 1) * 50).localCheckpoint()
-        val bs = graft.operators.Pin(sets(batch))
-        settle(); recordsRead.set(0L)
-        val hits = idx.probe(bs).count()
-        reads += settle()
-        assert(hits == 0L, "disjoint-token docs must not be contained")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    (0 until 8).foreach { k =>
+      val batch = docs(k * 50, (k + 1) * 50).localCheckpoint()
+      val bs = graft.operators.Pin(sets(batch))
+      val (hits, work) = SparkWork.of(spark)(idx.probe(bs).count())
+      reads += work.recordsRead
+      assert(hits == 0L, "disjoint-token docs must not be contained")
+    }
     // every batch's tokens miss the bench vocabulary entirely, so the
     // pushed filters prune the bench scans to near-nothing — far below
     // one bench re-tokenize per batch (2000 docs × 20 tokens = 40k rows)

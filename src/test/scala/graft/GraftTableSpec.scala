@@ -126,6 +126,13 @@ class GraftTableSpec extends AnyFunSuite {
     assert(t.readResolved().count() == 100)
   }
 
+  test("an empty table's view has the column order of a written one") {
+    val t = freshTable()
+    val empty = t.readResolved().columns.toSeq
+    t.append(sampleRows(5), t0(0))
+    assert(t.readResolved().columns.toSeq == empty)
+  }
+
   test("DML rejects assignments to identity/partition columns") {
     // the dedup window partitions by (dedupKeys, partitions, date): a new
     // version written under a different tenant/identity would not

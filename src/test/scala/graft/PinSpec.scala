@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec,
   LocalLimitExec, QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -17,37 +16,21 @@ class PinSpec extends AnyFunSuite {
 
   test("lazilyAll: jobs of the pinned frames run under the caller's job group") {
     val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    // listener events post asynchronously: wait until the count stops
-    // moving (listenerBus.waitUntilEmpty is private[spark])
-    def settle(): Unit = {
-      var last = -1
-      while (groups.size != last) { last = groups.size; Thread.sleep(200) }
-    }
-    sc.addSparkListener(listener)
     try {
       // two rounds under different groups: construction threads left over
       // from the first round must not carry its group into the second
       for (group <- Seq("pin-group-a", "pin-group-b")) {
         sc.setJobGroup(group, "Pin.lazilyAll propagation")
-        settle()
-        groups.clear()
-        val pinned = Pin.lazilyAll(Seq(2, 3).map(m =>
-          spark.range(1000).groupBy((col("id") % m).as("k")).count()))
-        assert(pinned.map(_.count()) == Seq(2L, 3L))
-        settle()
-        val seen = groups.toArray.toSeq
+        val (_, work) = SparkWork.of(spark) {
+          val pinned = Pin.lazilyAll(Seq(2, 3).map(m =>
+            spark.range(1000).groupBy((col("id") % m).as("k")).count()))
+          assert(pinned.map(_.count()) == Seq(2L, 3L))
+        }
+        val seen = work.jobGroups
         assert(seen.nonEmpty, "pinning must have run jobs")
         assert(seen.forall(_ == group), s"jobs under $group saw groups $seen")
       }
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    } finally sc.clearJobGroup()
   }
 
   /** Each lazy pin's scans in `p`, by RDD id, with whether a limit sits
@@ -70,27 +53,19 @@ class PinSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     // rdd id -> (action, limited) of the first plan that scanned it
     val first = scala.collection.concurrent.TrieMap[Int, (String, Boolean)]()
-    val events = new java.util.concurrent.atomic.AtomicInteger
     val listener = new QueryExecutionListener {
-      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
         lazyScans(qe.executedPlan, limited = false).foreach { case (id, lim) =>
           first.putIfAbsent(id, (action, lim))
         }
-        events.incrementAndGet()
-      }
-      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit =
-        events.incrementAndGet()
-    }
-    def settle(): Unit = {
-      var last = -1
-      while (events.get != last) { last = events.get; Thread.sleep(200) }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     // the pins `body` created, each with its first consumer and limit flag
     def pinsOf(body: => Unit): Map[Int, (String, Boolean)] = {
-      settle()
+      SparkWork.drain(spark)
       val before = first.keySet.toSet
       body
-      settle()
+      SparkWork.drain(spark)
       first.filter { case (id, _) => !before(id) }.toMap
     }
     def check(name: String)(body: => Unit): Unit = {

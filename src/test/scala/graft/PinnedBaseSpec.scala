@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,41 +59,22 @@ class PinnedBaseSpec extends AnyFunSuite {
 
   test("10-batch drain: non-merge adds read only the batch, while the " +
       "base grows 10x (listener-verified)") {
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
     val base = new PinnedBase(empty)
     val batchRows = 200
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // listener events post asynchronously (waitUntilEmpty is
-      // private[spark]): settle by spinning until the counter stops moving
-      def settle(): Long = {
-        var last = -1L; var spins = 0
-        while (recordsRead.get() != last && spins < 50) {
-          last = recordsRead.get(); Thread.sleep(100); spins += 1
-        }
-        recordsRead.get()
+    (0 until 10).foreach { b =>
+      val fragsBefore = base.fragments
+      val (_, work) = SparkWork.of(spark)(
+        base.add(frame(b * batchRows, (b + 1) * batchRows)))
+      val read = work.recordsRead
+      if (base.fragments > fragsBefore) {
+        // non-merge batch: the add's jobs read the batch, not the base
+        // (localCheckpoint reads its own input once; allow slack for
+        // the count job over the freshly-pinned blocks)
+        assert(read <= 3L * batchRows,
+          s"non-merge batch $b read $read rows with ${b * batchRows} " +
+            "base rows resident — the add is scanning the base")
       }
-      (0 until 10).foreach { b =>
-        val fragsBefore = base.fragments
-        settle()
-        recordsRead.set(0L)
-        base.add(frame(b * batchRows, (b + 1) * batchRows))
-        val read = settle()
-        if (base.fragments > fragsBefore) {
-          // non-merge batch: the add's jobs read the batch, not the base
-          // (localCheckpoint reads its own input once; allow slack for
-          // the count job over the freshly-pinned blocks)
-          assert(read <= 3L * batchRows,
-            s"non-merge batch $b read $read rows with ${b * batchRows} " +
-              "base rows resident — the add is scanning the base")
-        }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(base.current.count() == 10L * batchRows)
   }
 }

@@ -190,27 +190,12 @@ class PruningSpec extends AnyFunSuite {
     // materialization, no count+fetch double execution). Measured at the
     // task level: an unpruned probe reads all 240 rows; a pruned one
     // reads the newest day's 24 plus its own ≤ 24 checkpointed rows back.
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
     val want20 = brute(20)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(paged(20) == want20)
-      // listener events post asynchronously: wait until the counter stops
-      // moving (listenerBus.waitUntilEmpty is private[spark])
-      var last = -1L
-      var spins = 0
-      while (read.get() != last && spins < 50) {
-        last = read.get(); Thread.sleep(100); spins += 1
-      }
-      assert(read.get() <= 80,
-        s"recentPage(20) read ${read.get()} records — pruning or " +
-          "single-execution regressed (unpruned scan would read 240)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (page20, work) = SparkWork.of(spark)(paged(20))
+    assert(page20 == want20)
+    assert(work.recordsRead <= 80,
+      s"recentPage(20) read ${work.recordsRead} records — pruning or " +
+        "single-execution regressed (unpruned scan would read 240)")
 
     // k=60 spans >2 days → geometric widening, still exact
     assert(paged(60) == brute(60))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -268,35 +267,18 @@ class TextIngestIndexSpec extends AnyFunSuite {
 
   test("20-batch drain: probe cost follows the batch, not the corpus; " +
       "segments stay logarithmic; maintenance amortized-log") {
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    def settle(): Long = {
-      var last = -1L; var spins = 0
-      while (recordsRead.get() != last && spins < 50) {
-        last = recordsRead.get(); Thread.sleep(100); spins += 1
-      }
-      recordsRead.get()
-    }
     val dir = graft.tables.TempDirs.create("graft_txtidx20_")
     val idx = new TextIngestIndex(spark, dir, Seq("lang"), threshold = 0.9)
     val batchDocs = 50
     val reads = scala.collection.mutable.ArrayBuffer.empty[Long]
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      (0 until 20).foreach { b =>
-        val batch = docs(b * batchDocs, (b + 1) * batchDocs).localCheckpoint()
-        val bs = graft.operators.Pin(sets(batch))
-        settle(); recordsRead.set(0L)
-        val hits = idx.probe(bs).count()
-        reads += settle()
-        assert(hits == 0L, "disjoint-token docs must not near-dup")
-        idx.add(bs)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    (0 until 20).foreach { b =>
+      val batch = docs(b * batchDocs, (b + 1) * batchDocs).localCheckpoint()
+      val bs = graft.operators.Pin(sets(batch))
+      val (hits, work) = SparkWork.of(spark)(idx.probe(bs).count())
+      reads += work.recordsRead
+      assert(hits == 0L, "disjoint-token docs must not near-dup")
+      idx.add(bs)
+    }
     // probe cost follows the batch's token mass: the last probe faces a
     // 19x larger base, but its tokens appear in no committed segment, so
     // the pushed filters prune (dictionary/stats) the vocab and pref

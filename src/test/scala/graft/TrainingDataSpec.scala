@@ -371,36 +371,19 @@ class TrainingDataSpec extends AnyFunSuite {
 
   test("exceedsCount gate short-circuits: over-cap decision reads a " +
       "bounded prefix per partition, never the full frame") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    def settle(): Long = {
-      var last = -1L; var spins = 0
-      while (recordsRead.get() != last && spins < 50) {
-        last = recordsRead.get(); Thread.sleep(100); spins += 1
-      }
-      recordsRead.get()
-    }
     val dir = graft.tables.TempDirs.create("graft_cappedcount_")
     spark.range(80000).repartition(8)
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      settle(); recordsRead.set(0L)
-      assert(Width.exceedsCount(df, 100L), "80k rows must exceed 100")
-      val bounded = settle()
-      // each of the 8 partitions stops within its first vectorized batch
-      // or two — a full count() would read all 80k rows
-      assert(bounded > 0 && bounded <= 20000,
-        s"over-cap gate read $bounded rows — not short-circuiting")
-      assert(!Width.exceedsCount(df, 200000L),
-        "under-cap gate must report the exact side")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (over, work) = SparkWork.of(spark)(Width.exceedsCount(df, 100L))
+    assert(over, "80k rows must exceed 100")
+    val bounded = work.recordsRead
+    // each of the 8 partitions stops within its first vectorized batch
+    // or two — a full count() would read all 80k rows
+    assert(bounded > 0 && bounded <= 20000,
+      s"over-cap gate read $bounded rows — not short-circuiting")
+    assert(!Width.exceedsCount(df, 200000L),
+      "under-cap gate must report the exact side")
   }
 
   test("edge-width gate: narrow (gate-scale) and wide (probe-scale) edge " +
@@ -435,7 +418,6 @@ class TrainingDataSpec extends AnyFunSuite {
 
   test("connectedComponents runs an exchange-bearing ids input once per " +
       "call, on both CC paths") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
     import spark.implicits._
     // ids shaped like Tables.documents(...).select(doc_id): a parquet scan
     // under a repartition, so its plan carries an exchange
@@ -443,29 +425,13 @@ class TrainingDataSpec extends AnyFunSuite {
     spark.range(500).select(col("id").as("__id")).write.mode("overwrite").parquet(dir)
     def ids = spark.read.parquet(dir).repartition(4) // a fresh plan per call
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val scans = new java.util.concurrent.atomic.AtomicInteger
-    val events = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
-        events.incrementAndGet()
-      }
-    }
-    def settle(): Unit = {
-      var last = -1
-      while (events.get != last) { last = events.get; Thread.sleep(200) }
-    }
     def stagesReadingIds(): (Int, Long) = {
-      settle(); scans.set(0)
-      val n = TextDedup.connectedComponents(ids, edges).count()
-      settle()
-      (scans.get, n)
+      val (n, work) = SparkWork.of(spark)(
+        TextDedup.connectedComponents(ids, edges).count())
+      (work.fileScanStages, n)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(stagesReadingIds() == (1, 500L), "driver path")
-      assert(withDistributedCc(stagesReadingIds()) == (1, 500L), "distributed loop")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stagesReadingIds() == (1, 500L), "driver path")
+    assert(withDistributedCc(stagesReadingIds()) == (1, 500L), "distributed loop")
   }
 
   test("driver union-find fast path labels exactly like the distributed loop") {
