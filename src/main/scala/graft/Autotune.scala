@@ -29,11 +29,13 @@ import org.apache.spark.sql.SparkSession
   *    ingest ~40% with no analytics win, so the derivation keeps Spark's
   *    10 MB default and the knob stays an explicit operator override.
   *  - WAL buffer cap ([[graft.sources.BufferedWriteLayer]] default
-  *    `maxBufferedRows`) — buffered batches are pinned via localCheckpoint
-  *    in executor storage; derived as ~25% of heap at a conservative
-  *    bytes/row estimate, with admission honoring the same 1.2× recovery
-  *    ceiling the audit charges (a crashed predecessor's WAL replay may
-  *    reconstruct up to the cap before the auto-flush fires).
+  *    `maxBufferedRows`) — buffered batches are pinned as compressed
+  *    in-memory column buffers in executor storage; derived so the
+  *    buffer's heap at the 1.2× recovery ceiling the audit charges stays
+  *    within 8% of heap (a crashed predecessor's WAL replay may
+  *    reconstruct up to the cap before the auto-flush fires), at a
+  *    bytes/row figure that counts all the heap a buffered batch keeps,
+  *    not just its block.
   *  - connected-components driver fast-path bound
   *    (`spark.graft.cc.driverEdgeLimit`) — charged at the FULL driver
   *    footprint of the fast path, not just the collect: the collected Row
@@ -77,7 +79,14 @@ object Autotune {
 
   /** Conservative planning estimates, deliberately pessimistic: the audit
     * exists to warn BEFORE the allocator finds out. */
-  private val BufferBytesPerRow = 200L // wide telemetry row, long strings
+  // the heap a buffered batch keeps, per row: its column-buffer block
+  // plus its relation's fixed cost (the plan nodes and per-column stats
+  // schema of one InMemoryRelation) and, when durable, the session's
+  // listing of its WAL read-back. Measured for 512-row
+  // otel_logs_and_spans batches (AutotuneSpec): up to ~375 B non-durable,
+  // ~470 B durable; headroom for long strings. A smaller batch costs more per
+  // row, as the relation's cost is per batch.
+  private[graft] val BufferBytesPerRow = 600L
   // Full driver-side footprint of the CC fast path, per edge: collected
   // Row array (~96 B with boxing) + union–find HashMap (≤2 vertices/edge
   // × ~84 B boxed entry) + label-tuple seq (~128 B) + the broadcast label

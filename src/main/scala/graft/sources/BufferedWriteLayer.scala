@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions.{col, collect_set, count, lit, to_date}
+import org.apache.spark.sql.graftbridge.CacheBridge
+import org.apache.spark.storage.StorageLevel
 
 /** In-session write buffer over a [[GraftTable]] — the Spark rendering of
   * the reference's MemBuffer tier (S4/W2,
@@ -55,27 +57,44 @@ import org.apache.spark.sql.functions.{col, collect_set, count, lit, to_date}
   * schema-projected) at insert time, coalesced to as many partitions as
   * its planned size fills file splits (`spark.sql.files.maxPartitionBytes`
   * — one for any batch that fits a split, so one WAL file and one pinned
-  * partition), and pinned with `localCheckpoint`. The pin job itself
-  * reports the batch's row count (and, for [[updateFrom]], the pin of the
-  * DML batch its touched dates) through an `Observation`, so a durable
-  * insert runs two Spark jobs (WAL write, pin) and a non-durable one a
-  * single job. In durable mode the checkpoint reads back the just-written WAL
-  * parquet (a bounded local scan), NOT the caller's plan, and the
-  * checkpoint rather than the WAL files backs every handed-out frame:
-  * a reader that obtained the resolved view BEFORE a flush keeps
-  * working after flush truncates the WAL (the spill's lifetime and the
-  * frames' lifetimes must not be coupled). Reads never recompute the
+  * partition), and pinned as compressed in-memory column buffers
+  * (Spark's cached-batch format at `MEMORY_AND_DISK`, read through an
+  * `InMemoryRelation`). The pin job itself reports the batch's row count
+  * through an `Observation` (and [[updateFrom]]'s `localCheckpoint` of
+  * the DML batch its touched dates), so a durable insert runs two Spark
+  * jobs (WAL write, pin) and a non-durable one a single job. In durable
+  * mode the pin reads back the just-written WAL parquet (a bounded local
+  * scan), NOT the caller's plan, and the pinned blocks rather than the
+  * WAL files back every handed-out frame: a reader that obtained the
+  * resolved view BEFORE a flush keeps working after flush truncates the
+  * WAL (the spill's lifetime and the frames' lifetimes must not be
+  * coupled). The buffers are local-checkpointed, so a pinned frame keeps
+  * neither the plan nor the rows it was built from, and a lost block
+  * fails the read rather than recomputing it: reads never recompute the
   * caller's upstream plan and the buffered rows are immutable from the
-  * moment they become visible.
+  * moment they become visible. The relation is built directly, never
+  * through `persist()`, so it is not registered in the session's
+  * `CacheManager`: nothing has to `unpersist` it at flush (which would
+  * pull the blocks from under those frames), no other query's plan is
+  * rewritten to read it, and `ContextCleaner` frees the blocks once no
+  * frame references the batch. `MEMORY_AND_DISK` spills a block under
+  * memory pressure and never evicts it.
   * Buffered batches resolve against storage through the same
   * keep-greatest dedup window as committed versions — a buffered update
   * of a stored identity wins by stamp, exactly as if it had been
   * committed.
   *
-  * Scale: the buffer holds checkpointed partitions on executors (or WAL
-  * parquet on table storage), never driver memory; `maxBufferedRows`
-  * bounds it with an auto-flush, playing the reference's buffer-pressure
-  * flush trigger (`flush_interval_secs` / pressure sawtooth, BASELINE.md).
+  * Scale: the buffer holds its rows as pinned column buffers in executor
+  * block storage (and WAL parquet on table storage), never in driver
+  * collections. Each column is compressed on its own, a null costs a
+  * 4-byte position rather than an 8-byte slot, and a read decodes only
+  * the columns it asks for: a 512-row `otel_logs_and_spans` batch pins
+  * in ~62 KB (~121 B/row), and every probe, read, enrichment and flush
+  * reads that block. Each batch also keeps its relation, a fixed cost
+  * per batch that `graft.Autotune` charges with the block. `maxBufferedRows`
+  * bounds the buffer with an auto-flush, playing the reference's
+  * buffer-pressure flush trigger (`flush_interval_secs` / pressure
+  * sawtooth, BASELINE.md).
   */
 final class BufferedWriteLayer(val table: GraftTable,
     // default derived from host heap (explicit-override-wins via
@@ -175,7 +194,7 @@ final class BufferedWriteLayer(val table: GraftTable,
       fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
         .sortBy(_.getName).foreach { d =>
           if (fs.exists(new Path(d, "_SUCCESS"))) {
-            // pin via checkpoint (not the files): flush truncates the WAL
+            // pin the rows (not the files): flush truncates the WAL
             // while frames served from this batch may still be alive
             val (df, n) =
               BufferedWriteLayer.pin(table.spark.read.parquet(d.toString))
@@ -305,8 +324,8 @@ final class BufferedWriteLayer(val table: GraftTable,
           } finally out.close()
         }
         conformed.write.parquet(dir) // _SUCCESS commits the record
-        // checkpoint the READ-BACK (bounded local scan), so the buffered
-        // frame outlives the WAL truncation at flush
+        // pin the READ-BACK (bounded local scan), so the buffered frame
+        // outlives the WAL truncation at flush
         (BufferedWriteLayer.pin(
           table.spark.read.schema(conformed.schema).parquet(dir)), Some(dir))
       } else (BufferedWriteLayer.pin(conformed), None)
@@ -411,10 +430,15 @@ object BufferedWriteLayer {
     df.coalesce(((planned + split - 1) / split).max(1).min(Int.MaxValue).toInt)
   }
 
-  /** `localCheckpoint` of `df` and its row count, read from the same job. */
+  /** `df` stored as compressed in-memory column buffers, and its row count,
+    * both from one job: the job that builds the buffers also fulfils the
+    * count's `Observation` (a `noop` write drives it, reading every row and
+    * keeping none). */
   private def pin(df: DataFrame): (DataFrame, Long) = {
     val rows = new Observation()
-    val pinned = df.observe(rows, count(lit(1)).as("rows")).localCheckpoint()
+    val pinned = CacheBridge.inMemoryColumnar(df, StorageLevel.MEMORY_AND_DISK)
+    pinned.observe(rows, count(lit(1)).as("rows"))
+      .write.format("noop").mode(SaveMode.Overwrite).save()
     (pinned, rows.get("rows").asInstanceOf[Long])
   }
 

@@ -217,4 +217,50 @@ class AutotuneSpec extends AnyFunSuite {
       env = Map("SPARK_GRAFT_ANN_PLANES" -> "16",
         "SPARK_GRAFT_ANN_TABLES" -> "8")) == (16, 8))
   }
+
+  test("the heap a buffered otel batch keeps fits the buffer budget's " +
+      "bytes per row") {
+    // what BufferBytesPerRow budgets: the heap a flush frees, per buffered
+    // row — the batch's block, its relation and, for a durable batch, the
+    // session's listing of its WAL read-back
+    val sc = spark.sparkContext
+    val rt = Runtime.getRuntime
+    def heapAfterGc(): Long = {
+      (1 to 3).foreach(_ => System.gc())
+      rt.totalMemory - rt.freeMemory
+    }
+    // ids only: a key set view of getPersistentRDDs would hold the RDDs
+    def persisted(): Set[Int] = sc.getPersistentRDDs.keysIterator.toSet
+    val batches = 32
+    for (durable <- Seq(false, true)) {
+      val tbl = new sources.GraftTable(spark,
+        java.nio.file.Files.createTempDirectory("graft_pin_heap_").toString,
+        schema.TableSchemas.otelLogsAndSpans)
+      val buf = new sources.BufferedWriteLayer(tbl, durable = durable)
+      // warm the plans and generated code; the flush's write also drops
+      // file listings earlier reads left in the session
+      buf.insert(OtelBatch(spark))
+      buf.flush()
+      val before = persisted()
+      (1 to batches).foreach(_ => buf.insert(OtelBatch(spark)))
+      val pins = persisted() -- before
+      assert(pins.size == batches && buf.bufferedRows == batches * 512L)
+      val held = heapAfterGc()
+      buf.flush()
+      // the blocks go once ContextCleaner sees the flushed frames collected
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (persisted().exists(pins) && System.nanoTime < deadline) {
+        System.gc()
+        Thread.sleep(100)
+      }
+      assert(!persisted().exists(pins),
+        "flushed batches must release their blocks")
+      val perRow = (held - heapAfterGc()) / (batches * 512L)
+      info(s"durable=$durable: a buffered 512-row batch keeps " +
+        s"${perRow * 512} B of heap, $perRow B/row")
+      assert(perRow <= Autotune.BufferBytesPerRow,
+        s"durable=$durable: $perRow B/row")
+      buf.close()
+    }
+  }
 }

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.SparkException
+import org.apache.spark.sql.TestPins
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -99,6 +102,20 @@ class BufferedWriteSpec extends AnyFunSuite {
     buf.flush() // truncates the WAL records that fed the buffered legs
     assert(v.collect().toSet == before,
       "a pre-flush resolved frame must not die with the WAL files")
+  }
+
+  test("non-durable frames handed out before flush survive it") {
+    val tbl = freshTable()
+    tbl.append(rows(0 until 10, "stored"), t(0))
+    val buf = new BufferedWriteLayer(tbl)
+    buf.insert(rows(10 until 15, "buffered"), t(1))
+    val v = buf.readResolved()
+    val before = v.collect().toSet
+    buf.flush() // the buffer lets go of its pinned batch
+    buf.insert(rows(15 until 20, "later"), t(2))
+    buf.flush()
+    assert(v.collect().toSet == before,
+      "a pre-flush resolved frame must keep reading its pinned batch")
   }
 
   test("a WAL record without its commit marker is discarded at recovery") {
@@ -428,7 +445,7 @@ class BufferedWriteSpec extends AnyFunSuite {
     val src = Seq("row-1", "row-30", "row-999").toDF("sid")
     val (_, work) = SparkWork.of(spark)(buf.updateFrom(src,
       col("t.id") === col("s.sid"), Map("name" -> lit("enriched")), t(1)))
-    assert(work.actions == Seq("localCheckpoint", "localCheckpoint"),
+    assert(work.actions == Seq("localCheckpoint", "overwrite"),
       s"updateFrom ran ${work.actions}")
     assert(buf.bufferedRows == 42)
     val batchDates = buf.readResolved().filter(col("name") === "enriched")
@@ -501,5 +518,102 @@ class BufferedWriteSpec extends AnyFunSuite {
     buf.flush()
     assert(tbl.readResolved().collect().toSet == before,
       "flush must not change the resolved view")
+  }
+
+  test("a tenant-filtered read of a buffered batch reads at most half the " +
+      "bytes of the same rows pinned as whole rows") {
+    val dir = Files.createTempDirectory("graft_buf_cost_").toString
+    val tbl = new GraftTable(spark, dir, TableSchemas.otelLogsAndSpans)
+    val buf = new BufferedWriteLayer(tbl)
+    buf.insert(OtelBatch(spark), t(1))
+    val view = buf.readResolved() // empty table: every byte read is the pin
+    val tenant = col("project_id") === "tenant-01"
+    val (n, pinned) = SparkWork.of(spark)(view.filter(tenant).count())
+    // the form a `localCheckpoint` pin stores: deserialized whole rows
+    val rowForm = view.localCheckpoint()
+    val (m, whole) = SparkWork.of(spark)(rowForm.filter(tenant).count())
+    assert(n == 128 && m == n)
+    assert(pinned.inputBytes > 0 && pinned.inputBytes * 2 <= whole.inputBytes,
+      s"the buffered read took ${pinned.inputBytes} B, the row form " +
+        s"${whole.inputBytes} B")
+  }
+
+  test("pinning never registers a plan in the session's cache manager") {
+    spark.catalog.clearCache() // start from an empty registry
+    val tbl = freshTable()
+    val buf = new BufferedWriteLayer(tbl, durable = true)
+    buf.insert(rows(0 until 20, "a"), t(0))
+    buf.insert(rows(10 until 30, "b"), t(1))
+    import spark.implicits._
+    buf.updateFrom(Seq("row-3").toDF("sid"), col("t.id") === col("s.sid"),
+      Map("name" -> lit("enriched")), t(2))
+    assert(buf.readResolved().count() == 30)
+    buf.flush()
+    assert(TestPins.cacheManagerIsEmpty(spark),
+      "a buffered batch must not live in the cache manager's registry")
+    buf.close()
+  }
+
+  test("a non-durable pin keeps its column buffers and none of the " +
+      "caller's plan") {
+    val buf = new BufferedWriteLayer(freshTable())
+    buf.insert(rows(0 until 20, "local"), t(0)) // a local relation's rows
+    val pins = TestPins.pins(buf.readResolved())
+    assert(pins.size == 1)
+    val (plan, blocks) = pins.head
+    assert(plan.find(_.isInstanceOf[LocalTableScanExec]).isEmpty,
+      s"the pinned batch keeps the caller's plan:\n$plan")
+    assert(blocks.isCheckpointed,
+      "the buffers' lineage to the caller's plan must be cut")
+    assert(buf.readResolved().count() == 20)
+  }
+
+  test("a lost pinned block fails the read instead of recomputing the " +
+      "caller's plan") {
+    val buf = new BufferedWriteLayer(freshTable())
+    buf.insert(rows(0 until 20, "local"), t(0))
+    val pins = TestPins.pins(buf.readResolved())
+    assert(pins.size == 1)
+    pins.head._2.unpersist(blocking = true)
+    val e = intercept[SparkException](buf.readResolved().count())
+    assert(e.getMessage.contains("not found"), e.getMessage)
+  }
+
+  test("variant payloads read back identical buffered, replayed from the " +
+      "WAL and flushed") {
+    val dir = Files.createTempDirectory("graft_buf_variant_").toString
+    val tbl = new GraftTable(spark, dir, TableSchemas.otelLogsAndSpans)
+    val batch = OtelBatch(spark, 64).withColumn("n", pmod(hash(col("id")), lit(1000)))
+      .select(col("*"),
+        parse_json(format_string(
+          """[{"name":"exception","attributes":{"code":%d}}]""", col("n")))
+          .as("events"),
+        parse_json(format_string(
+          """{"http":{"status":%d,"route":"/v1/%s"},"ok":%b}""",
+          col("n") % 5 + 200, col("name"), col("n") % 2 === 0))
+          .as("attributes"))
+      .drop("n")
+    def payloads(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), to_json(col("events")), to_json(col("attributes")))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .toSet
+    val want = payloads(batch)
+    assert(want.size == 64 && want.forall(p => p._2 != null && p._3 != null))
+
+    val buf = new BufferedWriteLayer(tbl, durable = true)
+    buf.insert(batch, t(1))
+    assert(payloads(buf.readResolved()) == want, "buffered")
+    buf.simulateCrash()
+    val recovered = new BufferedWriteLayer(tbl, durable = true)
+    assert(recovered.bufferedRows == 64)
+    assert(payloads(recovered.readResolved()) == want, "replayed from the WAL")
+    recovered.flush()
+    assert(payloads(tbl.readResolved()) == want, "flushed")
+    // the files' schema is the table's: no planner-only field metadata
+    // (a variant column's extraction context) leaks into their footers
+    val written = spark.read.parquet(s"$dir/${tbl.meta.name}/v00001").schema
+    assert(written.forall(_.metadata == org.apache.spark.sql.types.Metadata.empty),
+      s"flushed schema ${written.json}")
+    recovered.close()
   }
 }
