@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
+import org.apache.spark.sql.graftbridge.ListedRelation
+
 import graft.schema.TableSchema
 
 /** Merge-on-read table over partitioned parquet with a commit-marker log —
@@ -23,9 +25,16 @@ import graft.schema.TableSchema
   *    within partitions by the declared sort keys (files advertise the
   *    order; parquet min/max stats become tight so time-range scans prune),
   *    and writes `partitionBy(project_id, date)`;
-  *  - **readRaw** unions the latest compaction base with every append
+  *  - a **snapshot** is the latest compaction base plus every append
   *    committed after the base's cut-off — concurrent appends during a
-  *    compaction are never lost and never double-counted;
+  *    compaction are never lost and never double-counted. Its files are
+  *    listed once on the driver (each committed version directory is
+  *    listed once per table and memoized: its files never change) and
+  *    read as ONE parquet relation over that listing, the reference's
+  *    single storage scan over a snapshot's file list. A partial
+  *    compaction base takes over its dates by directory selection: the
+  *    older legs' `date=` directories it covers are left out of the
+  *    listing. **readRaw** is that relation;
   *  - **readResolved** is the read-side dedup view: one `row_number` window
   *    over the dedup keys ordered by tiebreak DESC NULLS LAST, then the
   *    tombstone filter — exactly DedupExec's keep-greatest semantics
@@ -49,10 +58,13 @@ import graft.schema.TableSchema
   * readers are fully concurrent with everything.
   *
   * Scale notes: every operation is partition-parallel; nothing collects to
-  * the driver except the marker listing (one RPC per read). The dedup
-  * window shuffles by dedupKeys only when a scan spans file boundaries with
-  * the same key — at 100 TB the (project_id, date) partitioning bounds each
-  * window partition to one tenant-day.
+  * the driver except file-system metadata — the marker listing (one RPC
+  * per read) and the directory listing of each version not seen before.
+  * Spark packs the small files of every leg into shared splits, so a
+  * scan's task count follows the bytes it reads, not the leg count. The
+  * dedup window shuffles by dedupKeys only when a scan spans file
+  * boundaries with the same key — at 100 TB the (project_id, date)
+  * partitioning bounds each window partition to one tenant-day.
   */
 object GraftTable {
   /** Physical-only shadow column carrying the lead sort key as pushable
@@ -76,14 +88,13 @@ object GraftTable {
       case _ =>
     }
 
-  /** Cached scan plans per (session, table): a bounded LRU of
-    * (fingerprint → plan) entries — the current snapshot's legs and the
-    * leg unions the resolved view composes of them. */
-  private val snapshotCache =
-    scala.collection.concurrent.TrieMap[(Int, String), List[(String, org.apache.spark.sql.DataFrame)]]()
+  /** Partition directories of each committed version, per table path —
+    * see `Snapshot.listed`. */
+  private val listings = scala.collection.concurrent.TrieMap[String,
+    scala.collection.concurrent.TrieMap[Int, Seq[ListedRelation.Dir]]]()
 
   /** Schema effective at a committed version, memoized — see
-    * [[GraftTable.dirsSchema]] for the immutability argument. */
+    * [[GraftTable.Snapshot.schema]] for the immutability argument. */
   private val schemaCache =
     scala.collection.concurrent.TrieMap[(String, Int), org.apache.spark.sql.types.StructType]()
 
@@ -231,23 +242,51 @@ class GraftTable(
         s"${meta.name}: version $v already committed by another writer")
   }
 
-  /** Event-date range of one just-written version directory — a
-    * driver-side listing (two levels deep, no file reads) bounded by the
-    * BATCH's partitions (tenants × touched days), done once at write time
-    * so readers never need it. None when the write created no `date=`
-    * directory. */
-  private def writtenDateRange(dir: String): Option[DateRange] = {
-    val p = new Path(dir)
-    val ds = if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).filter(_.isDirectory).toSeq.flatMap(proj =>
-        fs.listStatus(proj.getPath).map(_.getPath.getName).toSeq
-          .filter(_.startsWith("date=")).map(_.stripPrefix("date=")))
-    if (ds.isEmpty) None
-    else Some((java.time.LocalDate.parse(ds.min),
-      java.time.LocalDate.parse(ds.max)))
+  /** Event-date range of one just-written version — its listing
+    * ([[listLeg]], bounded by the BATCH's partitions: tenants × touched
+    * days), made once at write time so readers never need it. None when
+    * the write created no `date=` directory. */
+  private def writtenDateRange(v: Int): Option[DateRange] = {
+    val ds = listLeg(v).flatMap(dateOf).sortBy(_.toEpochDay)
+    if (ds.isEmpty) None else Some((ds.head, ds.last))
   }
 
   private def versionDir(v: Int): String = f"$path/v$v%05d"
+
+  /** The partition directories of version `v` that hold data files,
+    * listed on the driver down the `meta.partitions` levels (no Spark
+    * job, no file reads), in name order. Values are unescaped directory
+    * names; the default partition's is null. */
+  private def listLeg(v: Int): Seq[ListedRelation.Dir] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
+    def data(n: String) = !n.startsWith("_") && !n.startsWith(".")
+    def walk(dir: Path, cols: Seq[String], values: Vector[String]): Seq[ListedRelation.Dir] =
+      cols match {
+        case Seq() =>
+          val files = fs.listStatus(dir).toSeq.filter(f => f.isFile && data(f.getPath.getName))
+            .sortBy(_.getPath.getName)
+          if (files.isEmpty) Nil else Seq(ListedRelation.Dir(values, dir, files))
+        case c +: rest =>
+          fs.listStatus(dir).toSeq
+            .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$c="))
+            .sortBy(_.getPath.getName)
+            .flatMap { st =>
+              val raw = unescapePathName(st.getPath.getName.drop(c.length + 1))
+              walk(st.getPath, rest,
+                values :+ (if (raw == DEFAULT_PARTITION_NAME) null else raw))
+            }
+      }
+    val root = new Path(versionDir(v))
+    if (!fs.exists(root)) Nil
+    else walk(fs.makeQualified(root), meta.partitions, Vector.empty)
+  }
+
+  private val dateLevel = meta.partitions.indexOf("date")
+
+  /** The `date` partition value of a listed directory, if it has one. */
+  private def dateOf(d: ListedRelation.Dir): Option[java.time.LocalDate] =
+    if (dateLevel < 0) None
+    else Option(d.values(dateLevel)).map(java.time.LocalDate.parse)
 
   // ------------------------------------------------------ schema log --
 
@@ -300,16 +339,15 @@ class GraftTable(
         base +: cs.filter(c => c.baseOf.isEmpty && c.v > base.baseOf.get)
     }
 
-  private def visibleDirs(cs: Seq[Commit]): Seq[String] =
-    visibleCommits(cs).map(c => versionDir(c.v))
-
   /** The visible snapshot of a commit list with its partial-base
     * coverage, computed once: for each leg, the date ranges a NEWER
     * partial base subsumes. A date inside one is served by the newest
     * covering base, never by this leg — the one rule the resolved view
     * ([[resolvedFrom]]), the scan gate's work estimate
-    * ([[selectedFileWork]]) and maintenance ([[maintenanceSweep]]) share. */
-  private class Snapshot(cs: Seq[Commit]) {
+    * ([[selectedFileWork]]) and maintenance ([[maintenanceSweep]]) share.
+    * The snapshot's files are listed once, on the driver, and read as one
+    * relation ([[scan]]). */
+  private class Snapshot(val cs: Seq[Commit]) {
     val vis: Seq[Commit] = visibleCommits(cs)
     private val coverage: Map[Int, Seq[DateRange]] = {
       val pbases = vis.filter(_.pbase)
@@ -324,80 +362,91 @@ class GraftTable(
         .filterNot(ds => isCovered(c, java.time.LocalDate.parse(ds)))
     /** Legs that still serve a date. A leg with a recorded range serves
       * the dates no newer partial base covers. A range-less leg is
-      * decided by its directory: an empty write (a delete matching
-      * nothing) holds no rows and is skipped, while rows whose dates the
+      * decided by its listing: an empty write (a delete matching
+      * nothing) holds no file and is skipped, while rows whose dates the
       * marker does not name (a layout without `date=` directories, or a
       * marker written before range recording) keep the leg, on every
       * date. */
-    val live: Seq[Commit] = vis.filter(c =>
-      if (c.dates.isEmpty) holdsData(c.v) else liveDates(c).hasNext)
+    lazy val live: Seq[Commit] = vis.filter(c =>
+      if (c.dates.isEmpty) listed(c).nonEmpty else liveDates(c).hasNext)
     /** Every date the snapshot serves, newest first, from marker ranges
       * alone (a range may include absent dates, which scan zero files);
       * None when a live leg's dates are unknown. */
     def dates: Option[Seq[String]] =
       if (live.exists(_.dates.isEmpty)) None
       else Some(live.flatMap(liveDates).distinct.sorted.reverse)
-  }
+    /** Schema of the snapshot: the one recorded at its NEWEST version
+      * (schema only ever widens, and parquet's read-by-name fills evolved
+      * columns with null over older files). Memoized per committed
+      * version — a schema file for a version ≤ v can never appear after v
+      * commits (versions are dense and the file is written before its
+      * version's marker), so the mapping is immutable. */
+    def schema: StructType =
+      if (vis.isEmpty) meta.schema
+      else {
+        val v = vis.map(_.v).max
+        GraftTable.schemaCache.getOrElseUpdate((path, v), schemaAt(v))
+      }
+    /** The directories the snapshot reads: every listed directory of a
+      * live leg except a `date=` one that a newer partial base covers. */
+    lazy val dirs: Seq[ListedRelation.Dir] = live.flatMap(c =>
+      listed(c).filterNot(d => dateOf(d).exists(isCovered(c, _))))
 
-  /** Whether a committed version directory holds data: a write that
-    * matched no rows creates no partition directory and no data file. */
-  private def holdsData(v: Int): Boolean = {
-    val p = new Path(versionDir(v))
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory || st.getPath.getName.endsWith(".parquet"))
+    /** The snapshot's raw rows under schema `s` as ONE parquet relation
+      * over [[dirs]]: Spark packs every leg's small files into shared
+      * splits, and `project_id`/`date` predicates prune directories
+      * across all legs at once. Every column is nullable, as in
+      * `spark.read.schema(s).parquet`; partition columns come last. */
+    def scan(s: StructType): DataFrame = ListedRelation.parquet(spark,
+      s"${meta.name}@" + live.map(c => f"v${c.v}%05d").mkString(","),
+      live.map(c => fs.makeQualified(new Path(versionDir(c.v)))), s,
+      meta.partitions, dirs)
+
+    /** Leg `c`'s listing, memoized per table: files in a committed
+      * version never change, so each leg is listed once and a new commit
+      * lists only its own leg. On a miss, the entries of legs this
+      * snapshot shows no more are dropped — no later snapshot shows them
+      * either. */
+    private def listed(c: Commit): Seq[ListedRelation.Dir] = {
+      val cache = GraftTable.listings.getOrElseUpdate(path,
+        scala.collection.concurrent.TrieMap.empty)
+      cache.getOrElse(c.v, {
+        val newest = vis.map(_.v).max
+        cache.keys.filter(v => v < newest && !vis.exists(_.v == v))
+          .foreach(cache.remove)
+        val legDirs = listLeg(c.v)
+        cache.put(c.v, legDirs)
+        legDirs
+      })
+    }
   }
 
   /** Tenant scope of a maintenance read on a guarded root: `project_id
-    * IN (every project_id= directory in dirs)` keeps every row and passes
-    * the guard like a user's tenant filter, so the guard needs no bypass.
-    * None on an unguarded root, whose plans stay unchanged. */
-  private def allTenants(dirs: Seq[String]): Option[Column] =
+    * IN (every project_id value the snapshot reads)` keeps every row and
+    * passes the guard like a user's tenant filter, so the guard needs no
+    * bypass. None on an unguarded root, whose plans stay unchanged. */
+  private def allTenants(snap: Snapshot): Option[Column] =
     if (!graft.plans.GuardedTables.isGuarded(Seq(path))) None
     else {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val tenants = dirs.map(new Path(_)).filter(fs.exists).flatMap(p =>
-        fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-          .filter(_.startsWith("project_id="))
-          .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix("project_id="))))
-        .distinct
-      val (nulls, named) =
-        tenants.partition(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-      val in = col("project_id").isin(named: _*)
-      Some(if (nulls.isEmpty) in else in || col("project_id").isNull)
+      val level = meta.partitions.indexOf("project_id")
+      val tenants = snap.dirs.map(_.values(level)).distinct
+      val in = col("project_id").isin(tenants.filter(_ != null): _*)
+      Some(if (tenants.contains(null)) in || col("project_id").isNull else in)
     }
 
   /** Post-pruning work a scan bounded below by `since` would actually
-    * select: (parquet file count, total bytes) under `date=` partitions
-    * ≥ `since` across every visible version leg. Pure driver-side
-    * metadata (the same directory listings plan building performs), used
-    * by [[ScanGate]]'s depth-proxy refinement — the reference computes
-    * the identical measure from the pruned `FileScanConfig`
+    * select: (parquet file count, total bytes) of the snapshot's
+    * directories ([[Snapshot.dirs]], so nothing a newer partial base
+    * covers) with `date` ≥ `since` — the same listing the snapshot's
+    * relation is built from, summed without a Spark job. Used by
+    * [[ScanGate]]'s depth-proxy refinement — the reference computes the
+    * identical measure from the pruned `FileScanConfig`
     * (`selected_file_work`, `src/database.rs:11911-11916`). */
-  private[sources] def selectedFileWork(
+  private[graft] def selectedFileWork(
       since: java.time.LocalDate): (Long, Long) = {
-    var files = 0L; var bytes = 0L
-    // a date covered by a NEWER partial base is never read from this leg,
-    // so its files are not work this scan selects — counting them would
-    // over-gate a pruned-small deep scan on a partially-compacted table
-    val snap = new Snapshot(commits())
-    snap.live.foreach { c =>
-      val p = new Path(versionDir(c.v))
-      if (fs.exists(p)) fs.listStatus(p).filter(_.isDirectory).foreach { proj =>
-        fs.listStatus(proj.getPath).filter(_.isDirectory).foreach { dp =>
-          val n = dp.getPath.getName
-          if (n.startsWith("date=")) {
-            val d = java.time.LocalDate.parse(n.stripPrefix("date="))
-            if (!d.isBefore(since) && !snap.isCovered(c, d))
-              fs.listStatus(dp.getPath).filter(_.isFile).foreach { f =>
-                if (f.getPath.getName.endsWith(".parquet")) {
-                  files += 1; bytes += f.getLen
-                }
-              }
-          }
-        }
-      }
-    }
-    (files, bytes)
+    val files = new Snapshot(commits()).dirs
+      .filter(d => dateOf(d).forall(!_.isBefore(since))).flatMap(_.files)
+    (files.size.toLong, files.map(_.getLen).sum)
   }
 
   // --------------------------------------------------------- write lock --
@@ -667,7 +716,7 @@ class GraftTable(
       evolvedTo: Option[StructType] = None): Unit = {
     writePartitioned(versionDir(v), prepared, sortCols)
     evolvedTo.foreach(writeSchemaFile(v, _))
-    commit(v, dates = writtenDateRange(versionDir(v)))
+    commit(v, dates = writtenDateRange(v))
   }
 
   // --------------------------------------------------- logical count (A6) --
@@ -755,61 +804,19 @@ class GraftTable(
 
   // --------------------------------------------------------------- read --
 
-  /** Raw physical rows of the current snapshot — all versions, tombstones
-    * included. Empty table → empty DataFrame with the declared schema.
+  /** Raw physical rows of the current snapshot — every version it
+    * serves, tombstones included; dates a newer partial base covers come
+    * from that base only. Empty table → empty DataFrame with the declared
+    * columns.
     *
-    * Each version directory becomes its own scan leg (one union, the
-    * reference's UnionExec over mem∪hot∪delta legs, S1): partition
-    * discovery runs per leg, so `project_id`/`date` predicates prune
-    * directories inside every leg, and compaction keeps the leg count
-    * bounded. */
-  def readRaw(): DataFrame = rawFrom(visibleDirs(commits()))
-
-  /** Schema effective for a set of version dirs: the one recorded at the
-    * NEWEST version in the set (schema only ever widens, and parquet's
-    * read-by-name fills evolved columns with null over older files).
-    * Memoized per committed version — a schema file for a version ≤ v can
-    * never appear after v commits (versions are dense and the file is
-    * written before its version's marker), so the mapping is immutable
-    * and each read-path plan build skips the extra `_schema` listing. */
-  private def dirsSchema(dirs: Seq[String]): StructType =
-    if (dirs.isEmpty) meta.schema
-    else {
-      val v = dirs.map(_.split('/').last.drop(1).toInt).max
-      GraftTable.schemaCache.getOrElseUpdate((path, v), schemaAt(v))
-    }
-
-  private def rawFrom(dirs: Seq[String]): DataFrame =
-    rawFrom(dirs, dirsSchema(dirs))
-
-  private def rawFrom(dirs: Seq[String], s: StructType,
-      keep: Int = 8): DataFrame =
-    if (dirs.isEmpty)
-      // the column order of a partitioned read: partition columns last
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(s.fields.sortBy(f => meta.partitions.indexOf(f.name))))
-    else cachedPlan(s"${s.hashCode}|${dirs.mkString(";")}", keep) {
-      dirs.map(d => spark.read.schema(s).parquet(d)).reduce(_ unionByName _)
-    }
-
-  /** Memoize a scan plan per (session, table) under fingerprint `ck`:
-    * building one performs driver-side partition discovery over every
-    * (tenant, day) dir of every leg — at fleet scale that listing dwarfs
-    * a point query. Files inside a committed version dir are immutable,
-    * so a hit can never be stale (the reference's ListingTable/plan-cache
-    * role). A per-table LRU of `keep` entries: the resolved view sizes
-    * it to hold every live leg plus the leg unions composed of them, so
-    * a read of an unchanged snapshot is one hit per union whatever its
-    * leg count, and a new commit re-lists only its own leg. */
-  private def cachedPlan(ck: String, keep: Int)(
-      build: => DataFrame): DataFrame = {
-    val key = (System.identityHashCode(spark), path)
-    def entries = GraftTable.snapshotCache.getOrElse(key, Nil)
-    val df = entries.find(_._1 == ck).map(_._2).getOrElse(build)
-    // re-read: `build` may have cached the legs it composes
-    GraftTable.snapshotCache.put(key,
-      ((ck, df) :: entries.filterNot(_._1 == ck)).take(keep max 8))
-    df
+    * Every live version directory's files are read as ONE relation over
+    * the snapshot's listing ([[Snapshot.scan]]; the reference's single
+    * storage scan over the snapshot's file list, S1): `project_id`/`date`
+    * predicates prune directories across all legs at once, and Spark
+    * packs the legs' small files into shared splits. */
+  def readRaw(): DataFrame = {
+    val snap = new Snapshot(commits())
+    snap.scan(snap.schema)
   }
 
   /** The merge-on-read view: latest version per identity, tombstones out.
@@ -829,7 +836,7 @@ class GraftTable(
   def readResolved(): DataFrame = resolvedView(None)
 
   /** The resolved view, optionally restricted to a set of `date` partition
-    * values. The restriction is applied to the RAW legs (where `date` is
+    * values. The restriction is applied to the RAW scan (where `date` is
     * a partition column, so directories prune before IO) and is exact:
     * `date` derives from the time column, which is a dedup key, so every
     * version of an identity lives in one date partition and the window
@@ -848,52 +855,35 @@ class GraftTable(
     * never the historical bulk. Falls back to the full window when no base
     * exists or more than 64 dates are touched. */
   private def resolvedView(restrict: Option[Seq[String]]): DataFrame =
-    resolvedFrom(commits(), restrict.map(ds => col("date").isin(ds: _*)))
+    resolvedFrom(new Snapshot(commits()),
+      restrict.map(ds => col("date").isin(ds: _*)))
 
   private def expandDates(r: DateRange): Seq[String] =
     Iterator.iterate(r._1)(_.plusDays(1)).takeWhile(!_.isAfter(r._2))
       .map(_.toString).toSeq
 
-  /** `date BETWEEN lo AND hi` — the partition predicate a partial base
-    * rewrites and, negated, every older leg's exclusion. */
-  private def inRange(lo: java.time.LocalDate, hi: java.time.LocalDate): Column =
-    col("date").between(lit(lo.toString).cast("date"), lit(hi.toString).cast("date"))
-
-  /** The one resolved-view constructor over a commit list, also
-    * handling PARTIAL compaction bases: each leg is read under an
-    * anti-range exclusion predicate (`NOT date BETWEEN lo AND hi` for
-    * every newer partial base — the reference's mem∪storage per-bucket
-    * exclusion filters, J3/`src/database.rs:13097-13114`), so a date is
-    * served by exactly its newest covering base plus later appends;
-    * legs that serve no date are skipped. `schemaOv` overrides the
-    * snapshot schema (time travel). `pending` is an uncommitted
-    * in-memory leg (the mem buffer): it records no dates, so it can
-    * conflict with any identity and takes the full window over every
-    * leg. */
-  private def resolvedFrom(cs: Seq[Commit], restrict: Option[Column],
+  /** The one resolved-view constructor over a snapshot. All its rows
+    * come from ONE relation ([[Snapshot.scan]]), which already leaves out
+    * every `date=` directory a newer partial base covers (the reference's
+    * mem∪storage per-bucket exclusion, J3/`src/database.rs:13097-13114`,
+    * done as directory selection), so a date is served by exactly its
+    * newest covering base plus later appends. `restrict` filters above
+    * the scan and Catalyst pushes it into the directory pruning.
+    * `schemaOv` overrides the snapshot schema (time travel). `pending` is
+    * an uncommitted in-memory leg (the mem buffer): it records no dates,
+    * so it can conflict with any identity and takes the full window over
+    * every leg.
+    *
+    * With appends on top of materialized legs, the date-bounded window
+    * reads the relation twice: outside the touched dates (where only
+    * materialized legs hold files) straight off the scan, inside them
+    * through the dedup window. */
+  private def resolvedFrom(snap: Snapshot, restrict: Option[Column],
       schemaOv: Option[StructType] = None,
       pending: Option[DataFrame] = None): DataFrame = {
-    val snap = new Snapshot(cs)
-    val s = schemaOv.getOrElse(dirsSchema(snap.vis.map(c => versionDir(c.v))))
     def bound(df: DataFrame): DataFrame =
       restrict.map(df.filter).getOrElse(df)
-    // the plan cache holds every live leg and the unions of them
-    val keep = snap.live.size + 8
-    def leg(c: Commit): DataFrame =
-      snap.covered(c).foldLeft(rawFrom(Seq(versionDir(c.v)), s, keep)) {
-        case (df, (lo, hi)) => df.filter(!inRange(lo, hi))
-      }
-    // one cached plan per leg set; `restrict` filters above the union and
-    // Catalyst pushes it into every leg's scan
-    def union(legs: Seq[Commit]): DataFrame = bound(legs match {
-      case Seq() => rawFrom(Nil, s)
-      case Seq(c) => leg(c)
-      case _ => cachedPlan(s"legs|${s.hashCode}|" + legs.map(c =>
-          versionDir(c.v) + snap.covered(c).mkString).mkString(";"), keep) {
-        legs.map(leg).reduce(_ unionByName _)
-      }
-    })
-    val stored = union(snap.live)
+    val stored = bound(snap.scan(schemaOv.getOrElse(snap.schema)))
     if (pending.isDefined) return tombstoneFilter(dedup(
       stored.unionByName(bound(pending.get), allowMissingColumns = true)))
 
@@ -907,8 +897,7 @@ class GraftTable(
     else if (materialized.isEmpty || appends.exists(_.dates.isEmpty) ||
         touched.size > 64)
       tombstoneFilter(dedup(stored))
-    else union(materialized)
-      .filter(!col("date").isin(touched: _*))
+    else stored.filter(!col("date").isin(touched: _*))
       .unionByName(tombstoneFilter(dedup(
         stored.filter(col("date").isin(touched: _*)))))
   }
@@ -919,8 +908,7 @@ class GraftTable(
     * directories a later compaction subsumed (Delta's retention contract);
     * version numbers are dense (1..current), so a gap in the surviving
     * markers proves the snapshot is gone and raises instead of silently
-    * returning a partial table. Bypasses the snapshot cache, which holds
-    * only the CURRENT snapshot's plan. */
+    * returning a partial table. */
   def readResolvedAsOf(asOf: Int): DataFrame = {
     val cs = commits().filter(_.v <= asOf)
     val covered = visibleCommits(cs).iterator.flatMap(c =>
@@ -930,7 +918,7 @@ class GraftTable(
         "(vacuumed, or never committed)")
     // the snapshot's OWN schema (Delta's time-travel contract): columns
     // evolved after `asOf` are not visible in the as-of view
-    resolvedFrom(cs, None, Some(schemaAt(asOf)))
+    resolvedFrom(new Snapshot(cs), None, Some(schemaAt(asOf)))
   }
 
   /** Change-data-feed-style diff between two committed snapshots (the
@@ -1016,16 +1004,16 @@ class GraftTable(
     * Stored legs keep their partial-base exclusions ([[resolvedFrom]]). */
   def readResolvedWith(pending: DataFrame,
       pendingTime: java.time.LocalDateTime): DataFrame = {
-    val cs = commits()
-    resolvedFrom(cs, None, pending = Some(
-      conform(pending, Some(pendingTime), dirsSchema(visibleDirs(cs)))))
+    val snap = new Snapshot(commits())
+    resolvedFrom(snap, None, pending = Some(
+      conform(pending, Some(pendingTime), snap.schema)))
   }
 
   /** The resolved view unioned with rows ALREADY conformed by
     * [[conformNow]] — the buffered write layer's read path, where each
     * buffered batch carries its own insert-time stamp. */
   private[sources] def readResolvedWithConformed(pending: DataFrame): DataFrame =
-    resolvedFrom(commits(), None, pending = Some(pending))
+    resolvedFrom(new Snapshot(commits()), None, pending = Some(pending))
 
   /** Recent-page top-k (T1, the reference's
     * `optimizers/ordered_union_for_topk.rs` early-terminating TopK):
@@ -1097,12 +1085,12 @@ class GraftTable(
     * ([[graft.plans.CountFastPath]]): a compacted snapshot IS the resolved
     * view, so physical row counts are logical row counts. */
   def compactBaseDir(): Option[String] =
-    compactBase(commits()).map(b => versionDir(b.v))
+    compactBase(new Snapshot(commits())).map(b => versionDir(b.v))
 
   /** The full base when it is the only live leg ([[Snapshot.live]]) —
     * later empty writes hold no rows and leave the snapshot compacted. */
-  private def compactBase(cs: Seq[Commit]): Option[Commit] =
-    new Snapshot(cs).live match {
+  private def compactBase(snap: Snapshot): Option[Commit] =
+    snap.live match {
       case Seq(b) if b.baseOf.isDefined => Some(b)
       case _ => None
     }
@@ -1141,7 +1129,8 @@ class GraftTable(
     meta.ftsTokenizers.getOrElse(column, "ngram3")
 
   def buildTextIndex(column: String): Unit = {
-    val b = compactBase(commits()).getOrElse(throw new IllegalStateException(
+    val snap = new Snapshot(commits())
+    val b = compactBase(snap).getOrElse(throw new IllegalStateException(
       s"${meta.name}: text index requires a compacted-only snapshot"))
     val base = versionDir(b.v)
     // Row-group parity (reference tantivy row-ordinal selections,
@@ -1157,7 +1146,7 @@ class GraftTable(
         .add(GraftTable.RgKeyColumn, org.apache.spark.sql.types.LongType)
       else liveSchema()
     val rows = spark.read.schema(readSchema).parquet(base)
-      .transform(df => allTenants(Seq(base)).fold(df)(df.filter))
+      .transform(df => allTenants(snap).fold(df)(df.filter))
       .select(input_file_name().as("file"), col(column).as("t"),
         keyCol.map(col).getOrElse(lit(null).cast("long")).as("k"))
     // `raw` fields index one term per DISTINCT (file, whole value) — the
@@ -1207,7 +1196,7 @@ class GraftTable(
     val grams = toks.filter(_.length >= 3).flatMap(_.sliding(3)).distinct
     val raw = ftsTokenizer(column) == "raw"
     val indexed = for {
-      b <- compactBase(commits())
+      b <- compactBase(new Snapshot(commits()))
       base = versionDir(b.v)
       idx = textIndexDir(b.v, column)
       if (if (raw) toks.nonEmpty else grams.nonEmpty) &&
@@ -1486,15 +1475,15 @@ class GraftTable(
     * appends committed while the compaction ran stay visible (their
     * version exceeds the recorded cut-off). */
   def compact(): Unit = withWriteLock {
-    val cs = commits()
+    val snap = new Snapshot(commits())
     // Idempotence (reference e2e `zorder_idempotence.rs`: the second
     // OPTIMIZE must not churn files): a snapshot that IS exactly the
     // newest full base has nothing to rewrite — re-sorting already
     // z-ordered, already-resolved files would replace every file with an
     // identical-content copy, breaking vacuum retention and object-store
     // cache warmth for zero gain.
-    if (cs.nonEmpty && compactBase(cs).isEmpty) {
-      compactLocked(cs)
+    if (snap.cs.nonEmpty && compactBase(snap).isEmpty) {
+      compactLocked(snap)
       // a FULL base consolidates every date — nothing queued remains dirty
       if (dmlDirtyDates().nonEmpty) storeDmlDirty(Set.empty)
     }
@@ -1508,15 +1497,11 @@ class GraftTable(
       Seq(graft.functions.ZOrderKey(meta.zOrderColumns.map(col)))
     else sortCols
 
-  private def compactLocked(cs: Seq[Commit]): Unit = {
-    val upTo = cs.last.v
-    val snapSchema = dirsSchema(visibleDirs(cs))
-    // resolvedFrom, not a bare union: with partial bases in the snapshot,
-    // a leg's subsumed dates must be excluded or the rewrite double-counts
+  private def compactLocked(snap: Snapshot): Unit = {
+    val upTo = snap.cs.last.v
     writePartitioned(versionDir(upTo + 1),
-      resolvedFrom(cs, allTenants(visibleDirs(cs))), compactOrder)
-    commit(upTo + 1, baseOf = Some(upTo),
-      dates = writtenDateRange(versionDir(upTo + 1)))
+      resolvedFrom(snap, allTenants(snap)), compactOrder)
+    commit(upTo + 1, baseOf = Some(upTo), dates = writtenDateRange(upTo + 1))
     if (maintainCountIndex) {
       val newV = upTo + 1
       countMarker() match {
@@ -1525,8 +1510,9 @@ class GraftTable(
         // broken chain: the compacted base IS the resolved view, so one
         // column-pruned pass over it (count + max stamp) RESTARTS the chain
         case _ =>
-          val r = spark.read.schema(snapSchema).parquet(versionDir(newV))
-            .transform(df => allTenants(Seq(versionDir(newV))).fold(df)(df.filter))
+          val base = new Snapshot(commits())
+          val r = base.scan(base.schema)
+            .transform(df => allTenants(base).fold(df)(df.filter))
             .agg(count(lit(1)).as("c"),
               max(col(meta.dedupTiebreak)).as("s"))
             .head()
@@ -1545,17 +1531,21 @@ class GraftTable(
     * reference's "hot tail passes / date consolidation", W6,
     * `src/database.rs:5675+`), never the table size; [[compact]], by
     * contrast, is a full-table rewrite. Readers treat the partial base as
-    * the newest content for its range via per-leg anti-range exclusions
-    * ([[resolvedFrom]]), and the date-bounded window makes reads of the
-    * compacted range windowless again. */
+    * the newest content for its range: their snapshot leaves out every
+    * older leg's directory in the range ([[Snapshot.dirs]]), and the
+    * date-bounded window makes reads of the compacted range windowless
+    * again. */
   def compactRange(lo: java.time.LocalDate,
       hi: java.time.LocalDate): Unit = withWriteLock {
     require(!hi.isBefore(lo), s"compactRange: $hi before $lo")
-    val cs = commits()
-    if (cs.isEmpty) return
-    val v = cs.last.v + 1
-    val scope = (inRange(lo, hi) +: allTenants(visibleDirs(cs)).toSeq).reduce(_ && _)
-    writePartitioned(versionDir(v), resolvedFrom(cs, Some(scope)), compactOrder)
+    require(dateLevel >= 0, s"compactRange: ${meta.name} has no date partition")
+    val snap = new Snapshot(commits())
+    if (snap.cs.isEmpty) return
+    val v = snap.cs.last.v + 1
+    val inRange = col("date").between(
+      lit(lo.toString).cast("date"), lit(hi.toString).cast("date"))
+    val scope = (inRange +: allTenants(snap).toSeq).reduce(_ && _)
+    writePartitioned(versionDir(v), resolvedFrom(snap, Some(scope)), compactOrder)
     commit(v, dates = Some((lo, hi)), pbase = true)
     if (maintainCountIndex) countMarker() match {
       // partial compaction never changes the logical count — carry over

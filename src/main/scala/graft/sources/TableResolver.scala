@@ -20,9 +20,9 @@ import graft.schema.TableSchema
   *    vice versa;
   *  - resolved handles are cached per (root, table) — the
   *    `fast_resolve_cache` role. A [[GraftTable]] handle is cheap (paths +
-  *    schema), but handle identity keeps the snapshot plan cache
-  *    ([[GraftTable.snapshotCache]]) and ts→date rule registration warm
-  *    instead of re-registering per query. Commit visibility needs no
+  *    schema), but handle identity keeps the ts→date rule registration
+  *    warm instead of re-registering per query (version listings are
+  *    memoized per table path, whatever the handle). Commit visibility needs no
   *    refresh protocol here: every read lists the commit-marker dir, so a
   *    cached handle always sees the latest committed version (the
   *    `refresh_cached_table` staleness dance is a delta-handle artifact the

@@ -9,10 +9,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** The Spark work one block ran: the Dataset actions that finished (by
   * name, e.g. `count`, `collect`, `localCheckpoint`), jobs started with
   * their job groups, tasks ended, bytes and records read from storage,
-  * and completed stages that scanned files. */
+  * and completed stages that scanned files, with the task count of each. */
 final case class SparkWork(actions: Seq[String], jobs: Int,
     jobGroups: Seq[String], tasks: Int, inputBytes: Long, recordsRead: Long,
-    fileScanStages: Int)
+    fileScanStageTasks: Seq[Int]) {
+  def fileScanStages: Int = fileScanStageTasks.size
+}
 
 object SparkWork {
   /** Run `body` and count the work of everything that ran meanwhile. The
@@ -45,10 +47,10 @@ object SparkWork {
     private var tasks = 0
     private var inputBytes = 0L
     private var recordsRead = 0L
-    private var fileScanStages = 0
+    private var fileScanStageTasks = Vector.empty[Int]
 
     def work: SparkWork = synchronized(SparkWork(actions, jobs.size, jobs,
-      tasks, inputBytes, recordsRead, fileScanStages))
+      tasks, inputBytes, recordsRead, fileScanStageTasks))
 
     object Actions extends QueryExecutionListener {
       override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
@@ -70,7 +72,8 @@ object SparkWork {
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       synchronized {
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) fileScanStages += 1
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          fileScanStageTasks :+= e.stageInfo.numTasks
       }
   }
 }
