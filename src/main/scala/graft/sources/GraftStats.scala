@@ -43,7 +43,11 @@ object GraftStats {
         (t.meta.name, "partitions", t.meta.partitions.mkString(",")),
         (t.meta.name, "dedup_keys", t.meta.dedupKeys.mkString(",")),
         (t.meta.name, "logical_count",
-          t.logicalCount().map(_.toString).getOrElse("")))
+          t.logicalCount().map(_.toString).getOrElse(""))) ++
+        // driver-side file skipping: what the sketches saved and cost
+        t.skippingStats.map { case (k, v) =>
+          (s"skipping.${t.meta.name}@${t.root}", k, v.toString)
+        }
     }
     // the reference's hot-tier and admission suppression/throughput rows
     // (`stats_table.rs` exposes demotion payoff and gate pressure the same

@@ -1,12 +1,14 @@
 package graft.sources
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import org.apache.spark.sql.graftbridge.ListedRelation
+import org.apache.spark.sql.graftbridge.{JoinKeys, ListedRelation}
 
 import graft.schema.TableSchema
 
@@ -88,15 +90,27 @@ object GraftTable {
       case _ =>
     }
 
-  /** Partition directories of each committed version, per table path —
-    * see `Snapshot.listed`. */
-  private val listings = scala.collection.concurrent.TrieMap[String,
-    scala.collection.concurrent.TrieMap[Int, Seq[ListedRelation.Dir]]]()
+  /** One committed version's partition directories, and the bloom
+    * sketches the driver has read of its files ([[BloomSketch]]), keyed
+    * by (file, column): memoized together, so a leg's sketches leave the
+    * memo with its listing — see `Snapshot.leg`. */
+  private final class Leg(val dirs: Seq[ListedRelation.Dir]) {
+    val sketches = TrieMap[(Path, String), BloomSketch.Sketch]()
+  }
+
+  /** Each committed version's [[Leg]], per table path. */
+  private val listings = TrieMap[String, TrieMap[Int, Leg]]()
+
+  /** Driver-side file skipping per table path: files tested against
+    * their sketches, files skipped, bytes read to build sketches. */
+  private final class SkipCounters {
+    val considered, skipped, readBytes = new java.util.concurrent.atomic.AtomicLong
+  }
+  private val skipCounters = TrieMap[String, SkipCounters]()
 
   /** Schema effective at a committed version, memoized — see
     * [[GraftTable.Snapshot.schema]] for the immutability argument. */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap[(String, Int), org.apache.spark.sql.types.StructType]()
+  private val schemaCache = TrieMap[(String, Int), StructType]()
 
   /** Stale-lock threshold: a held lock is heartbeaten at TTL/6, so only a
     * crashed writer's lock ever crosses it. */
@@ -394,29 +408,64 @@ class GraftTable(
 
     /** The snapshot's raw rows under schema `s` as ONE parquet relation
       * over [[dirs]]: Spark packs every leg's small files into shared
-      * splits, and `project_id`/`date` predicates prune directories
-      * across all legs at once. Every column is nullable, as in
-      * `spark.read.schema(s).parquet`; partition columns come last. */
+      * splits, `project_id`/`date` predicates prune directories across
+      * all legs at once, and a pushed lookup on a bloom column skips the
+      * files whose blooms rule it out ([[skipper]]). Every column is
+      * nullable, as in `spark.read.schema(s).parquet`; partition columns
+      * come last. */
     def scan(s: StructType): DataFrame = ListedRelation.parquet(spark,
       s"${meta.name}@" + live.map(c => f"v${c.v}%05d").mkString(","),
       live.map(c => fs.makeQualified(new Path(versionDir(c.v)))), s,
-      meta.partitions, dirs)
+      meta.partitions, dirs, skipper)
+
+    /** Keeps a file only if, for every pushed lookup on a bloom column,
+      * its sketch may hold one of the lookup's values. Each file's
+      * sketch is read on the driver once, on first use, and memoized with
+      * its leg. */
+    private def skipper: ListedRelation.Skipper = filters =>
+      BloomSketch.lookups(filters, meta.bloomFilterColumns.toSet) match {
+        case Seq() => None
+        case lookups =>
+          val counters = GraftTable.skipCounters.getOrElseUpdate(path,
+            new GraftTable.SkipCounters)
+          val columns = lookups.map(_._1).distinct
+          val legOf = live.iterator.map(leg)
+            .flatMap(l => l.dirs.iterator.flatMap(_.files).map(_.getPath -> l)).toMap
+          Some { file =>
+            val keep = legOf.get(file.getPath).forall { l =>
+              val missing = columns.filterNot(c => l.sketches.contains((file.getPath, c)))
+              if (missing.nonEmpty) {
+                val (read, bytes) = BloomSketch.read(file, missing,
+                  spark.sparkContext.hadoopConfiguration)
+                read.foreach { case (c, sk) => l.sketches.put((file.getPath, c), sk) }
+                counters.readBytes.addAndGet(bytes)
+              }
+              lookups.forall { case (c, vs) =>
+                BloomSketch.mayHold(l.sketches((file.getPath, c)), vs)
+              }
+            }
+            counters.considered.incrementAndGet()
+            if (!keep) counters.skipped.incrementAndGet()
+            keep
+          }
+      }
+
+    private def listed(c: Commit): Seq[ListedRelation.Dir] = leg(c).dirs
 
     /** Leg `c`'s listing, memoized per table: files in a committed
       * version never change, so each leg is listed once and a new commit
       * lists only its own leg. On a miss, the entries of legs this
       * snapshot shows no more are dropped — no later snapshot shows them
-      * either. */
-    private def listed(c: Commit): Seq[ListedRelation.Dir] = {
-      val cache = GraftTable.listings.getOrElseUpdate(path,
-        scala.collection.concurrent.TrieMap.empty)
+      * either — and their sketches with them. */
+    private def leg(c: Commit): GraftTable.Leg = {
+      val cache = GraftTable.listings.getOrElseUpdate(path, TrieMap.empty)
       cache.getOrElse(c.v, {
         val newest = vis.map(_.v).max
         cache.keys.filter(v => v < newest && !vis.exists(_.v == v))
           .foreach(cache.remove)
-        val legDirs = listLeg(c.v)
-        cache.put(c.v, legDirs)
-        legDirs
+        val l = new GraftTable.Leg(listLeg(c.v))
+        cache.put(c.v, l)
+        l
       })
     }
   }
@@ -447,6 +496,21 @@ class GraftTable(
     val files = new Snapshot(commits()).dirs
       .filter(d => dateOf(d).forall(!_.isBefore(since))).flatMap(_.files)
     (files.size.toLong, files.map(_.getLen).sum)
+  }
+
+  /** Driver-side file skipping of this table ([[BloomSketch]]), over the
+    * session so far: files tested against their sketches, files skipped,
+    * bytes the driver read to build sketches, and the bytes of the
+    * sketches held now. Task-side scan metrics do not count the driver's
+    * reads. */
+  private[graft] def skippingStats: Seq[(String, Long)] = {
+    val c = GraftTable.skipCounters.get(path)
+    def n(f: GraftTable.SkipCounters => java.util.concurrent.atomic.AtomicLong) =
+      c.fold(0L)(f(_).get)
+    val held = GraftTable.listings.get(path).fold(0L)(
+      _.values.iterator.flatMap(_.sketches.values).map(_.bytes).sum)
+    Seq("files_considered" -> n(_.considered), "files_skipped" -> n(_.skipped),
+      "sketch_read_bytes" -> n(_.readBytes), "sketch_bytes_held" -> held)
   }
 
   // --------------------------------------------------------- write lock --
@@ -1333,6 +1397,13 @@ class GraftTable(
     * MAX_UPDATE_SOURCE_ROWS cap — the join is distributed, and Catalyst
     * broadcasts the source side when it is small.
     *
+    * The target reads only the identities the source names
+    * ([[restrictedTo]]): each equi-join key on a target column becomes an
+    * `IN` of the source's keys, which pushes below the dedup window, and
+    * the scan skips every file whose `id` bloom rules all of them out. A
+    * source with more than `Width.ScaleGateRows` distinct keys joins the
+    * whole view.
+    *
     * `targetClamp` is the reference's flush-watermark predicate clamp
     * (`src/dml_coalescer.rs:420-424`): a target-side prune (time window)
     * that pushes below the dedup window so the scan reads only the
@@ -1350,28 +1421,49 @@ class GraftTable(
   /** The UPDATE…FROM new-version batch against an EXPLICIT target view —
     * shared by [[updateFrom]] (storage view) and the buffered layer's
     * enrichment path (mem∪storage view), so the two cannot diverge on
-    * the join/projection semantics. Returns the rows to version-append;
-    * the caller picks where they land (committed version vs buffer). */
+    * the join/projection semantics or on the key restriction. Returns the
+    * rows to version-append; the caller picks where they land (committed
+    * version vs buffer). */
   private[sources] def updateFromBatch(target: DataFrame, source: DataFrame,
       on: Column, assignments: Map[String, Column]): DataFrame = {
     requireValueAssignments(assignments, "UPDATE FROM")
-    val joined = target.alias("t").join(source.alias("s"), on, "inner")
+    val joined = restrictedTo(target, source, on).alias("t")
+      .join(source.alias("s"), on, "inner")
     val projected = targetCols.map { c =>
       assignments.get(c).map(_.as(c)).getOrElse(col(s"t.$c").as(c))
     }
     joined.select(projected: _*)
   }
 
+  /** `target` (joined as `t`) without the rows no `source` row (joined as
+    * `s`) can match on `on`: an `IN` of the source's distinct keys per
+    * equi-join pair whose target side is a plain column
+    * ([[JoinKeys.restrictions]]; a local source is read on the driver,
+    * any other by one collect of at most `Width.ScaleGateRows` + 1 keys).
+    * An `IN` on a dedup-window key pushes below the window into the
+    * snapshot's scan, where [[Snapshot.scan]] skips the files that hold
+    * none of the keys. Null-safe pairs and a source above the bound add
+    * no filter, so the join plan stays as it was. */
+  private def restrictedTo(target: DataFrame, source: DataFrame,
+      on: Column): DataFrame =
+    JoinKeys.restrictions(target.alias("t").join(source.alias("s"), on, "inner"),
+      target, graft.operators.Width.ScaleGateRows.toInt).foldLeft(target)(_ filter _)
+
   /** MERGE (reference `perform_delta_merge_update`, `src/dml.rs:1272+`),
     * version-append flavor: matched target identities get updated versions,
     * unmatched source rows are inserted. `keys` are the equi-join columns;
-    * both legs land in one appended version. */
+    * both legs land in one appended version. Both legs read the resolved
+    * view restricted to the source's keys ([[restrictedTo]]), so a small
+    * source opens only the files that can hold its identities; the
+    * left-anti leg is unchanged by it, since a target row outside the
+    * source's keys matches no source row. */
   def merge(source: DataFrame, keys: Seq[String],
       whenMatched: Map[String, Column],
       insertUnmatched: Boolean = true,
       versionTime: Option[java.time.LocalDateTime] = None): Unit = {
     requireValueAssignments(whenMatched, "MERGE")
-    val resolved = readResolved()
+    val resolved = restrictedTo(readResolved(), source,
+      keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _))
     val matched = resolved.alias("t")
       .join(source.alias("s"), keys, "inner")
     val updated = targetCols.map { c =>
@@ -1396,7 +1488,11 @@ class GraftTable(
     markDmlDirty()
   }
 
-  /** Version-append DELETE: append tombstone versions. */
+  /** Version-append DELETE: append tombstone versions. A predicate on
+    * dedup-window keys (`id IN (…)`, a tenant, a time range) pushes below
+    * the window into the snapshot's scan, where directory pruning and the
+    * `id` bloom sketches ([[Snapshot.scan]]) leave only the files that can
+    * hold matching rows; any other predicate filters the resolved view. */
   def delete(predicate: Column,
       versionTime: Option[java.time.LocalDateTime] = None): Unit = {
     val t = meta.tombstoneColumn.getOrElse(

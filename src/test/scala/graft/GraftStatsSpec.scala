@@ -89,6 +89,26 @@ class GraftStatsSpec extends AnyFunSuite {
     assert(bufRows("buffered_rows") == "2" && bufRows("durable") == "true")
   }
 
+  test("graft_stats reports driver-side file skipping after an id lookup") {
+    val t = new GraftTable(spark,
+      Files.createTempDirectory("graft_stats_skip_").toString,
+      TableSchemas.morVersioned.copy(bloomFilterColumns = Seq("id")))
+    // two tenants, so two files; each id lives in one of them
+    t.append(spark.range(40).select(
+      (col("id") % 2).cast("string").as("project_id"),
+      lit("2024-03-01 00:00:00").cast("timestamp_ntz").as("timestamp"),
+      concat(lit("r"), col("id")).as("id"),
+      lit("n").as("name")),
+      Some(java.time.LocalDateTime.of(2024, 3, 2, 0, 0)))
+    assert(t.readResolved().filter(col("id") === "r7").count() == 1)
+    GraftStats.register(spark, Seq(t))
+    val rows = spark.sql("SELECT key, value FROM graft_stats WHERE component = " +
+      s"'skipping.mor_versioned@${t.root}'")
+      .collect().map(r => r.getString(0) -> r.getString(1).toLong).toMap
+    assert(rows("files_considered") == 2 && rows("files_skipped") == 1, rows)
+    assert(rows("sketch_read_bytes") > 0 && rows("sketch_bytes_held") > 0, rows)
+  }
+
   test("tenant guard accepts project_id carried in a join condition") {
     val t = new GraftTable(spark,
       Files.createTempDirectory("graft_guard_join_").toString,
