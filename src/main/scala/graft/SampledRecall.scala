@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.VectorSearch
+import graft.operators.{Pin, VectorSearch}
 import graft.queries.TrainingData
 import graft.tables.Tables
 
@@ -32,9 +32,8 @@ object SampledRecall {
     // apply), not re-parameterized operator calls
     def res(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
 
-    val exact = res("q28_cosine_topk")
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint()
+    val exact = Pin(res("q28_cosine_topk")
+      .select(col("query_id"), col("neighbor_id")))
     val nExact = exact.count().toDouble
 
     def recall(approx: DataFrame): Double =
@@ -50,7 +49,7 @@ object SampledRecall {
     // (cosine ≈ 0.997, far above the 0.95 threshold), how many did the
     // cell-blocked dedup actually collapse (not both members kept)?
     val corpus = TrainingData.nearDupCorpus(spark, dir)
-    val dedup = res("q75_semantic_dedup").localCheckpoint()
+    val dedup = Pin(res("q75_semantic_dedup"))
     val planted = corpus.filter(col("vec_id") < 1000000 &&
         col("vec_id") % 20 === 0)
       .select(col("vec_id").as("lo"), (col("vec_id") + 1000000L).as("hi"))
@@ -71,9 +70,8 @@ object SampledRecall {
     // planted-pair elimination of the forced path next to the shipped one.
     val corpusN = corpus.count()
     val forcedK = math.max(300, (corpusN / 128).toInt)
-    val dedup2 = VectorSearch.semanticDedup(corpus, "vec_id", "v", Dim,
-        0.95, nClusters = forcedK)
-      .localCheckpoint()
+    val dedup2 = Pin(VectorSearch.semanticDedup(corpus, "vec_id", "v", Dim,
+        0.95, nClusters = forcedK))
     val kept2 = dedup2.filter(col("keep")).select(col("vec_id"))
     val bothKept2 = planted
       .join(kept2.select(col("vec_id").as("lo")), Seq("lo"), "left_semi")
@@ -123,8 +121,7 @@ object SampledRecall {
     * rank granularity alone is ~1 row, so the ROW error is the
     * scale-free quality signal while ε is the fleet-scale one. */
   def tdigestRankEps(spark: SparkSession, dir: String): (Double, Double) = {
-    val est = SparkEntry.queries("q22_percentile_tdigest")(spark, dir)
-      .localCheckpoint()
+    val est = Pin(SparkEntry.queries("q22_percentile_tdigest")(spark, dir))
     val ev = Tables.events(spark, dir)
       .select(graft.functions.F.time_bucket("1 day", col("ts")).as("day"),
         col("event_type"), col("value"))

@@ -112,11 +112,13 @@ object BpeTrainer {
         segmented = Pin(segmented.withColumn("segs",
           applyMerge(col("segs"), a, b)))
         // Pin is eager, so the previous iteration's vocab copy is no
-        // longer needed — release it or k merges hold k cached vocabs
-        prev.unpersist()
+        // longer needed — release it or k merges hold k pinned vocabs
+        // until the driver collects the frames
+        Pin.release(prev)
         rank += 1
       }
     }
+    Pin.release(segmented)
     learned.toSeq.toDF("rank", "left", "right", "merged", "freq")
   }
 

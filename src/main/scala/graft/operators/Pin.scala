@@ -1,57 +1,48 @@
 package graft.operators
 
-import org.apache.spark.sql.{classic, DataFrame}
+import org.apache.spark.sql.{classic, DataFrame, SaveMode}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graftbridge.CacheBridge
+import org.apache.spark.storage.StorageLevel
 
-/** Lineage cut for reused expensive frames (verified pair lists, hashed
-  * token sets, quantizer assignments…).
+/** The one place that stores, checkpoints or frees a frame (PinSpec scans
+  * `graft` for any other): operator frames reused by several jobs, served
+  * pages, micro-batches, buffered batches and hot-tier slices.
   *
-  * Default `localCheckpoint`: executor-memory materialization, no disk
-  * round-trip — the right trade for interactive and batch jobs, at the
-  * cost that an executor loss kills the job instead of recomputing
-  * (acceptable when the job retries wholesale).
+  * Two choices: when — eager [[apply]], or [[lazily]] / [[lazilyAll]],
+  * stored by the first consuming job; and form — deserialized rows, or
+  * compressed column buffers through [[columns]] (read through an
+  * `InMemoryRelation`, column-pruned).
   *
-  * `spark.graft.reliableCheckpoints=true` (with a
-  * `SparkContext.setCheckpointDir` set) routes through reliable
-  * `checkpoint()` instead: the pinned frame lands in fault-tolerant
-  * storage, so a 1000-executor fleet job survives individual executor
-  * loss mid-iteration — the production posture for multi-hour dedup or
-  * clustering runs at full corpus scale. A pin keeps the width its plan
-  * produced; an operator that needs another sets it first ([[Width]]). */
+  * Every pin is stored at `MEMORY_AND_DISK` (spilled, never evicted), and
+  * a lost block fails the read instead of recomputing the upstream plan,
+  * so a pinned frame's rows never change. No pin is registered in the
+  * session's `CacheManager`, so Spark never substitutes one into another
+  * query; `ContextCleaner` frees its blocks once the driver drops the
+  * frame, and [[release]] at once. There are no reliable checkpoints:
+  * nothing here needs a pin to outlive an executor. A pin keeps the
+  * width its plan produced ([[Width]]). */
 object Pin {
   /** The name of every RDD [[lazily]] checkpoints. */
   val LazyName = "Pin.lazily"
 
-  private def reliable(df: DataFrame): Boolean =
-    df.sparkSession.conf
-      .getOption("spark.graft.reliableCheckpoints").exists(_.toBoolean)
+  def apply(df: DataFrame): DataFrame = df.localCheckpoint()
 
-  def apply(df: DataFrame): DataFrame =
-    if (reliable(df)) df.checkpoint() else df.localCheckpoint()
-
-  /** LAZY pin (r15): same lineage cut and single-execution guarantee,
-    * but the checkpoint materializes inside the FIRST consuming job
-    * instead of a dedicated blocking driver round-trip — pin-heavy
-    * pipelines (the LM model frames, the LSH keyed frame) paid one
-    * serial job per eager pin, pure scheduling latency at gate scale
-    * (VERDICT r14 #4/#5).
+  /** The lineage cut of [[apply]], stored inside the FIRST consuming job
+    * instead of a blocking job of its own (r15; one serial job per eager
+    * pin was pure scheduling latency at gate scale, VERDICT r14 #4/#5).
     *
     * ONLY safe when every consumer FULLY materializes the frame
-    * (aggregations, broadcast builds, shuffle/equi joins): a
-    * short-circuiting consumer (isEmpty / limit / take) runs a job over
-    * a PARTIAL partition set, a later job computes the rest in a
-    * separate execution, and a nondeterministic upstream could then
-    * break the exactly-once-per-row contract the pin exists to provide
-    * (the r14 deferral, narrowed by VERDICT r14 to short-circuiting
-    * consumers only — each partition that IS computed persists whole,
-    * so full-materializing consumers are exactly the safe set). Keep
-    * [[apply]] for frames a greedy/limit-style loop consumes. A probe
-    * touching every partition ([[Width.exceedsCount]]) counts as full.
-    * PinSpec finds each lazy pin's first consumer by [[LazyName]]. */
+    * (aggregations, broadcast builds, shuffle/equi joins, a probe of every
+    * partition such as [[Width.exceedsCount]]): a short-circuiting
+    * consumer (isEmpty / limit / take) computes a partial partition set,
+    * a later job computes the rest, and a nondeterministic upstream then
+    * breaks the exactly-once-per-row contract. Keep [[apply]] for frames
+    * a greedy or limit-style loop consumes. PinSpec finds each lazy pin's
+    * first consumer by [[LazyName]]. */
   def lazily(df: DataFrame): DataFrame = {
-    val pinned =
-      if (reliable(df)) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
+    val pinned = df.localCheckpoint(eager = false)
     pinned.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.setName(LazyName)
       case _ =>
@@ -59,21 +50,14 @@ object Pin {
     pinned
   }
 
-  /** [[lazily]] over several INDEPENDENT frames, constructed from
-    * parallel driver threads (guide §2.6 — overlap independent jobs).
-    * Even a lazy checkpoint materializes its plan's intermediate
-    * shuffle stages at construction (AQE's doExecute resolves the final
-    * plan eagerly; only the last stage + the persist defer to the first
-    * consumer), so N pins built sequentially still serialize N rounds
-    * of map-stage jobs. Built concurrently, their stages back-fill each
-    * other's idle cores; Spark's scheduler handles multi-threaded job
-    * submission natively. Frames must not depend on one another.
-    *
-    * Each construction thread runs with the CALLER's active session and
-    * local properties (job group, description, scheduler pool), so the
-    * jobs it submits stay cancellable with the caller's job group and
-    * attributed to it — a pooled thread would otherwise carry whatever
-    * properties it inherited when it was created. */
+  /** [[lazily]] over several INDEPENDENT frames, constructed from parallel
+    * driver threads: a lazy checkpoint still runs its plan's intermediate
+    * shuffle stages at construction (AQE resolves the final plan eagerly),
+    * so built one after another N pins serialize N rounds of map-stage
+    * jobs, while built concurrently their stages fill each other's idle
+    * cores. Each thread runs with the caller's active session and local
+    * properties (job group, description, scheduler pool), so its jobs stay
+    * cancellable with, and attributed to, the caller's job group. */
   def lazilyAll(dfs: Seq[DataFrame]): Seq[DataFrame] = {
     val pool = java.util.concurrent.Executors.newCachedThreadPool()
     try dfs.map { df =>
@@ -84,5 +68,24 @@ object Pin {
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     }
     finally pool.shutdown()
+  }
+
+  /** Eager pin of `df` as compressed column buffers, and its row count,
+    * both from one job: a `noop` write reads every row through the
+    * buffers and keeps none, and the buffers count the rows they store.
+    * The pinned frame keeps neither `df`'s plan nor the rows it held. */
+  def columns(df: DataFrame): (DataFrame, Long) = {
+    val (pinned, rows) = CacheBridge.inMemoryColumnar(df, StorageLevel.MEMORY_AND_DISK)
+    pinned.write.format("noop").mode(SaveMode.Overwrite).save()
+    (pinned, rows.value)
+  }
+
+  /** Free the blocks of a pin made here, now rather than when the driver
+    * collects the frame. Only for a frame nobody else holds: a read of a
+    * released pin fails (its blocks are gone and it never recomputes). */
+  def release(df: DataFrame): Unit = df.queryExecution.logical.foreach {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: InMemoryRelation => r.cacheBuilder.clearCache()
+    case _ =>
   }
 }

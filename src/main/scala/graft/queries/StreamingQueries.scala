@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
-import graft.operators.TextAnalysis
+import graft.operators.{Pin, TextAnalysis}
 import graft.schema.TableSchemas
 import graft.sources.GraftTable
 import graft.streaming.StreamingAnalytics
@@ -684,8 +684,8 @@ object StreamingQueries {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // widen = false: micro-batch frames — the kernel is cheaper
           // than the per-batch width probe (see hashedSets)
-          val newSets = graft.operators.Pin(graft.operators.TextDedup
-            .hashedSets(batch.localCheckpoint(), "doc_id", "text",
+          val newSets = Pin(graft.operators.TextDedup
+            .hashedSets(Pin(batch), "doc_id", "text",
               Seq("lang"), widen = false))
           val blocked = idx.probe(newSets)
             .select(col("new_id").as("doc_id")).distinct()
@@ -739,7 +739,7 @@ object StreamingQueries {
       val r = graft.tables.TempDirs.create("graft_stream_semdedup_")
       // id-ordered thirds by RANK, not id value: the planted dup ids sit
       // 1M above the base ids, so value thirds would leave a batch empty
-      val corpus = graft.operators.Pin(TrainingData.nearDupCorpus(s, dir)
+      val corpus = Pin(TrainingData.nearDupCorpus(s, dir)
         .withColumn("__b", ntile(3).over(
           org.apache.spark.sql.expressions.Window.orderBy("vec_id"))))
       (1 to 3).foreach { b =>
@@ -771,7 +771,7 @@ object StreamingQueries {
         .option("checkpointLocation", r + "/chk")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-          val batch = batch0.localCheckpoint()
+          val batch = Pin(batch0)
           val blocked = idx.probe(batch)
             .select(col("new_id").as("vec_id")).distinct()
           val clean = batch.join(blocked, Seq("vec_id"), "left_anti")
@@ -780,7 +780,7 @@ object StreamingQueries {
           val surv = graft.operators.TextDedup.greedySurvivors(
             clean.select(col("vec_id").as("__id")),
             within.select("id_a", "id_b"))
-          val keepers = graft.operators.Pin(
+          val keepers = Pin(
             clean.join(surv.select(col("__id").as("vec_id")), "vec_id"))
           keepers.select(col("vec_id"))
             .write.mode("overwrite").parquet(s"$r/out/batch_$batchId")
@@ -811,7 +811,7 @@ object StreamingQueries {
     containBuilt.getOrElseUpdate(dir, {
       val r = graft.tables.TempDirs.create("graft_stream_contain_")
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = graft.operators.Pin(docs.filter(col("doc_id") % 20 === 0))
+      val bench = Pin(docs.filter(col("doc_id") % 20 === 0))
       val corpus = docs.filter(col("doc_id") % 20 =!= 0)
       val maxId = docs.agg(max("doc_id")).head.getLong(0) + 1
       (0 until 3).foreach { b =>
@@ -841,7 +841,7 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           idx.probe(graft.operators.TextDedup.hashedSets(
-              batch.localCheckpoint(), "doc_id", "text", Nil,
+              Pin(batch), "doc_id", "text", Nil,
               widen = false))
             .select(col("bench_id"), col("doc_id"),
               round(col("containment"), 6).as("containment"))

@@ -1,10 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
-import org.apache.spark.sql.functions.{col, collect_set, count, lit, to_date}
-import org.apache.spark.sql.graftbridge.CacheBridge
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{col, collect_set, to_date}
+
+import graft.operators.Pin
 
 /** In-session write buffer over a [[GraftTable]] — the Spark rendering of
   * the reference's MemBuffer tier (S4/W2,
@@ -57,28 +57,20 @@ import org.apache.spark.storage.StorageLevel
   * schema-projected) at insert time, coalesced to as many partitions as
   * its planned size fills file splits (`spark.sql.files.maxPartitionBytes`
   * — one for any batch that fits a split, so one WAL file and one pinned
-  * partition), and pinned as compressed in-memory column buffers
-  * (Spark's cached-batch format at `MEMORY_AND_DISK`, read through an
-  * `InMemoryRelation`). The pin job itself reports the batch's row count
-  * through an `Observation` (and [[updateFrom]]'s `localCheckpoint` of
-  * the DML batch its touched dates), so a durable insert runs two Spark
-  * jobs (WAL write, pin) and a non-durable one a single job. In durable
-  * mode the pin reads back the just-written WAL parquet (a bounded local
-  * scan), NOT the caller's plan, and the pinned blocks rather than the
-  * WAL files back every handed-out frame: a reader that obtained the
-  * resolved view BEFORE a flush keeps working after flush truncates the
-  * WAL (the spill's lifetime and the frames' lifetimes must not be
-  * coupled). The buffers are local-checkpointed, so a pinned frame keeps
-  * neither the plan nor the rows it was built from, and a lost block
-  * fails the read rather than recomputing it: reads never recompute the
-  * caller's upstream plan and the buffered rows are immutable from the
-  * moment they become visible. The relation is built directly, never
-  * through `persist()`, so it is not registered in the session's
-  * `CacheManager`: nothing has to `unpersist` it at flush (which would
-  * pull the blocks from under those frames), no other query's plan is
-  * rewritten to read it, and `ContextCleaner` frees the blocks once no
-  * frame references the batch. `MEMORY_AND_DISK` spills a block under
-  * memory pressure and never evicts it.
+  * partition), and pinned as compressed column buffers
+  * ([[graft.operators.Pin.columns]]). The pin job itself yields the
+  * batch's row count (and [[updateFrom]]'s row pin of the DML batch its
+  * touched dates, through an `Observation`), so a durable insert runs two
+  * Spark jobs (WAL write, pin) and a non-durable one a single job. In
+  * durable mode the pin reads back the just-written WAL parquet (a
+  * bounded local scan), NOT the caller's plan, and the pinned blocks
+  * rather than the WAL files back every handed-out frame: a reader that
+  * obtained the resolved view BEFORE a flush keeps working after flush
+  * truncates the WAL. A pinned batch keeps neither the plan nor the rows
+  * it was built from and never recomputes, so buffered rows are immutable
+  * from the moment they become visible. Flush does not release a batch,
+  * which would pull its blocks from under those frames: `ContextCleaner`
+  * frees them once no frame references the batch.
   * Buffered batches resolve against storage through the same
   * keep-greatest dedup window as committed versions — a buffered update
   * of a stored identity wins by stamp, exactly as if it had been
@@ -197,7 +189,7 @@ final class BufferedWriteLayer(val table: GraftTable,
             // pin the rows (not the files): flush truncates the WAL
             // while frames served from this batch may still be alive
             val (df, n) =
-              BufferedWriteLayer.pin(table.spark.read.parquet(d.toString))
+              Pin.columns(table.spark.read.parquet(d.toString))
             if (n > 0) {
               // restore the batch's DML-touched dates from its sidecar —
               // written BEFORE the batch itself, so a committed DML batch
@@ -326,9 +318,9 @@ final class BufferedWriteLayer(val table: GraftTable,
         conformed.write.parquet(dir) // _SUCCESS commits the record
         // pin the READ-BACK (bounded local scan), so the buffered frame
         // outlives the WAL truncation at flush
-        (BufferedWriteLayer.pin(
+        (Pin.columns(
           table.spark.read.schema(conformed.schema).parquet(dir)), Some(dir))
-      } else (BufferedWriteLayer.pin(conformed), None)
+      } else (Pin.columns(conformed), None)
     val doFlush = synchronized {
       batches ::= ((pinned, walDir, dmlDates))
       buffered += rows
@@ -362,12 +354,13 @@ final class BufferedWriteLayer(val table: GraftTable,
     // concurrent flush either commits the batch with its dates or sees
     // neither, never the dates alone.
     val dates = new Observation()
-    val batch = table.updateFromBatch(readResolved(), source, on, assignments)
+    val batch = Pin(table.updateFromBatch(readResolved(), source, on, assignments)
       .observe(dates, collect_set(
-        to_date(col(table.meta.timeColumn)).cast("string")).as("dates"))
-      .localCheckpoint()
+        to_date(col(table.meta.timeColumn)).cast("string")).as("dates")))
     val touched = dates.get("dates").asInstanceOf[Iterable[String]].toSet
-    insertWithDmlDates(batch, versionTime, touched)
+    // the insert pins its own copy; nothing reads the row pin after it
+    try insertWithDmlDates(batch, versionTime, touched)
+    finally Pin.release(batch)
   }
 
   /** The table's resolved view INCLUDING buffered rows. */
@@ -428,18 +421,6 @@ object BufferedWriteLayer {
     val planned = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
     df.coalesce(((planned + split - 1) / split).max(1).min(Int.MaxValue).toInt)
-  }
-
-  /** `df` stored as compressed in-memory column buffers, and its row count,
-    * both from one job: the job that builds the buffers also fulfils the
-    * count's `Observation` (a `noop` write drives it, reading every row and
-    * keeping none). */
-  private def pin(df: DataFrame): (DataFrame, Long) = {
-    val rows = new Observation()
-    val pinned = CacheBridge.inMemoryColumnar(df, StorageLevel.MEMORY_AND_DISK)
-    pinned.observe(rows, count(lit(1)).as("rows"))
-      .write.format("noop").mode(SaveMode.Overwrite).save()
-    (pinned, rows.get("rows").asInstanceOf[Long])
   }
 
   /** Live durable-layer owners by qualified WAL path — the in-process

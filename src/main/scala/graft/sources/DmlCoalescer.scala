@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Pin
+
 /** Deferred, batched `UPDATE … FROM` — the reference's DML coalescer
   * (`/root/reference/src/dml_coalescer.rs:1-35`), re-expressed for the
   * version-append MOR table.
@@ -155,9 +157,9 @@ final class DmlCoalescer(autoDrainAfter: Int = 64,
           .reduce(_ unionByName _)
         val w = Window.partitionBy(keyCols.map(col): _*)
           .orderBy(col("_coalesce_seq"))
-        val rounds = unioned
-          .withColumn("_coalesce_round", row_number().over(w))
-          .persist()
+        // lazy: the first consumer is the full max aggregation below
+        val rounds = Pin.lazily(unioned
+          .withColumn("_coalesce_round", row_number().over(w)))
         try {
           // null max ⇒ every source in the group was empty: zero rounds,
           // the statement folds away as a no-op instead of NPEing
@@ -178,7 +180,7 @@ final class DmlCoalescer(autoDrainAfter: Int = 64,
               Some(base.plusNanos(1000L * stampIdx)), clamp)
             stampIdx += 1
           }
-        } finally rounds.unpersist()
+        } finally Pin.release(rounds)
         okGroups += 1
         okStatements += g.sources.size
         nStatements -= g.sources.size

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import org.apache.spark.sql.graftbridge.{JoinKeys, ListedRelation}
 
+import graft.operators.Pin
 import graft.schema.TableSchema
 
 /** Merge-on-read table over partitioned parquet with a commit-marker log —
@@ -77,18 +78,6 @@ object GraftTable {
     * 512 B candidate would be dropped by parquet anyway, since its 1 %
     * FPP capacity rounds down to zero in parquet's 500-value steps. */
   val BloomCandidates = 11
-
-  /** Free a `localCheckpoint`ed frame's executor blocks eagerly. The
-    * blocks belong to the RDD the checkpoint wrapped (LogicalRDD in the
-    * analyzed plan); without this they survive until the driver GCs the
-    * frame and the ContextCleaner drains — an executor-memory leak when
-    * the frame was a discarded probe. The frame is unusable after. */
-  private[graft] def dropCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** One committed version's partition directories, and the bloom
     * sketches the driver has read of its files ([[BloomSketch]]), keyed
@@ -1098,7 +1087,8 @@ class GraftTable(
     * With a gate attached ([[attachGate]]): every probe runs under
     * admission control, classified by how deep its date selection
     * reaches (the exhausted-widening fallback is an unbounded scan), and
-    * each probe MATERIALIZES its page (`localCheckpoint` of ≤ k rows)
+    * each probe MATERIALIZES its page (a row [[graft.operators.Pin]] of
+    * ≤ k rows)
     * inside its one admitted execution — a satisfying probe IS the
     * served result, so gated serving has no count+fetch double execution
     * and no commit race between probe and serve; the caller receives an
@@ -1123,25 +1113,25 @@ class GraftTable(
       val sel = dates.take(n)
       val lb = lookbackTo(sel)
       // ONE execution per widening step, gated or not: the probe
-      // MATERIALIZES its page (`localCheckpoint` of ≤ k rows), the
-      // widening test reads the checkpointed frame, and a satisfying
+      // MATERIALIZES its page (a row `Pin` of ≤ k rows), the widening
+      // test reads the pinned frame, and a satisfying
       // probe IS the served result — no count+fetch double scan and no
       // commit race between probe and serve. (A date selection holding
       // ≥ k rows is complete: every unselected date is strictly older
       // than every selected row, so its limit-k page is the global one.)
       val probe = gateOpt match {
-        case Some(_) => gatedAction(lb)(page(resolvedView(Some(sel))).localCheckpoint())
-        case None => page(resolvedView(Some(sel))).localCheckpoint()
+        case Some(_) => gatedAction(lb)(Pin(page(resolvedView(Some(sel)))))
+        case None => Pin(page(resolvedView(Some(sel))))
       }
       if (probe.count() >= k) return probe
-      // a failed probe's checkpointed rows are dead the moment we widen:
-      // free the executor blocks now instead of leaking them until the
-      // driver GCs the frame (several widening steps per serving call)
-      GraftTable.dropCheckpoint(probe)
+      // a failed probe's pinned rows are dead the moment we widen: free
+      // the executor blocks now instead of leaking them until the driver
+      // GCs the frame (several widening steps per serving call)
+      Pin.release(probe)
       n *= 2
     }
-    if (gateOpt.isEmpty) page(readResolved()).localCheckpoint()
-    else gatedAction(None)(page(readResolved()).localCheckpoint())
+    if (gateOpt.isEmpty) Pin(page(readResolved()))
+    else gatedAction(None)(Pin(page(readResolved())))
   }
 
   /** The single base directory when the current snapshot is exactly one
@@ -1351,8 +1341,7 @@ class GraftTable(
     // (candidate files only); the unindexed fallback is a full-corpus
     // scan, which classifies as an unbounded lookback.
     if (gateOpt.isEmpty) result
-    else gatedAction(if (indexed.isDefined) Some(0L) else None)(
-      result.localCheckpoint())
+    else gatedAction(if (indexed.isDefined) Some(0L) else None)(Pin(result))
   }
 
   // ---------------------------------------------------------------- DML --

@@ -2,86 +2,67 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.GraftClock
+import graft.operators.Pin
 
 /** S5: the hot tier — a fast-path serving layer for recent data
-  * (reference `/root/reference/src/hot_tier.rs`, 1856 LoC), re-expressed
-  * for Spark's execution model.
+  * (reference `/root/reference/src/hot_tier.rs`), re-expressed for Spark.
   *
   * The reference demotes freshly-flushed parquet into mmap'd Arrow-IPC
   * files on local NVMe and splices them into the scan as a `MemorySource`
-  * leg, so dashboard-width queries never touch the object store. Spark's
-  * native analogue of "recent slice pinned in fast storage" is a
-  * persisted DataFrame: the resolved view restricted to a retention
-  * window, materialized by the write path with `MEMORY_AND_DISK`, serving
-  * every in-window read without commit listing, parquet IO, or the dedup
-  * window. What carries over from the reference is not the storage medium
-  * but the *policy* layer, which is where all the hard-won semantics live:
+  * leg. Here a slice is the resolved view restricted to a retention
+  * window, pinned by the write path as compressed column buffers
+  * ([[graft.operators.Pin.columns]]); it serves every in-window read
+  * without commit listing, parquet IO or the dedup window. A slice lives
+  * outside the session's `CacheManager`: only the frames [[read]] hands
+  * out read it, and Spark never substitutes it into another query. What
+  * carries over from the reference is the *policy* layer:
   *
-  *  - **Write-side population** ([[demote]]): the tier is fed by the
-  *    flush/commit path, never by queries — exactly the reference's
-  *    demotion-rides-the-flush model. A read finding no valid slice
-  *    falls through to the cold scan; it never builds one itself. This
-  *    is what makes the waste accounting below meaningful: a slice CAN
-  *    die without ever serving a query.
-  *  - **Multiple retention windows** (`hot_tier.rs:299-738` demotes per
-  *    bucket): one slice per configured retention, and a read is served
-  *    by the NARROWEST slice that covers its lookback — a 6 h dashboard
-  *    and a 48 h dashboard each hit their own slice, so the 6 h read
-  *    never scans 48 h of cached rows. Narrower slices are built FROM the
-  *    widest persisted slice (a subset by construction), so extra windows
-  *    cost a cached-scan filter, not another parquet read.
+  *  - **Write-side population** ([[demote]]): the flush/commit path feeds
+  *    the tier, never a query; a read finding no valid slice serves cold.
+  *    So a slice CAN die without serving a query, which the waste
+  *    accounting below measures.
+  *  - **Multiple retention windows** (`hot_tier.rs:299-738`): one slice
+  *    per retention; a read is served by the NARROWEST slice covering its
+  *    lookback, so a 6 h dashboard never scans 48 h of rows. Narrower
+  *    slices are built FROM the widest one, a filter instead of a parquet
+  *    read.
   *  - **Lookback gate** (`hot_tier.rs:171-201`): a scan reaching deeper
-  *    than `lookbackWindows × max-retention` skips the tier entirely —
-  *    the hot leg would shave a sliver off a scan already dominated by
-  *    the cold bulk. The threshold is a MULTIPLE of the window, not the
-  *    window itself, so a "last 6h" dashboard against 6h retention
-  *    (whose lookback lands a few micros over the window by the time the
-  *    scan plans) still qualifies. An UNbounded lookback always skips;
-  *    retention 0 with no extra windows (tier off) rejects everything.
-  *  - **DML invalidation**: a hot slice is an immutable snapshot of one
-  *    committed version; ANY table mutation (append, update, compaction)
-  *    drops every slice wholesale — the reference's "demoted file is a
-  *    pre-DML snapshot" rule. Staleness is checked on EVERY read,
-  *    including deep/unbounded ones that skip the tier, so an
-  *    invalidated slice's storage unpins promptly instead of riding
-  *    until the next in-window read or demotion.
-  *  - **Adaptive suppression** (`hot_tier.rs:115-157`): under a workload
-  *    that rewrites the table continuously, demotion builds slices that
-  *    are invalidated before any query reads them — pure waste that
-  *    looks healthy from the outside. Each table is judged on its own
-  *    builds: once `probeBuilds` builds accumulate and ≥ `wastePct`% of
-  *    them died unread, demotion stops for `cooldownMicros` (reads fall
-  *    through to the cold path; correctness unaffected). After the
-  *    cooldown the re-probe is a single build — re-testing is cheap, so
-  *    a table whose churn stopped recovers immediately, with no restart
-  *    and no config.
-  *  - **Budget ceiling** (`HotTierLimits`): a slice that materializes
-  *    over `maxHotRows` is dropped rather than pinned — the reference's
-  *    `leg_budget_bytes`, expressed in rows because Spark's persisted
-  *    size is only known post-materialization.
+  *    than `lookbackWindows × max-retention` skips the tier — the hot leg
+  *    would shave a sliver off a scan dominated by the cold bulk. A
+  *    multiple, so a "last 6h" dashboard against 6 h retention (a few
+  *    micros over by plan time) still qualifies. An unbounded lookback
+  *    always skips; retention 0 with no extra windows turns the tier off.
+  *  - **DML invalidation**: a slice snapshots one committed version; ANY
+  *    mutation drops every slice (the reference's "demoted file is a
+  *    pre-DML snapshot" rule), checked on EVERY read. A dropped slice
+  *    whose frame never left the tier (never served, never the source of
+  *    a narrower build) is released at once, as are oversize builds and
+  *    builds raced by DML. A handed-out slice is only forgotten, and
+  *    `ContextCleaner` frees it once no reader holds the frame: a released
+  *    columnar block fails the read instead of recomputing, so releasing
+  *    it would fail a reader racing the demotion (e.g. streaming ingest).
+  *  - **Adaptive suppression** (`hot_tier.rs:115-157`): under continuous
+  *    rewrites demotion builds slices that die unread. Once `probeBuilds`
+  *    builds accumulate and ≥ `wastePct`% of them died unread, demotion
+  *    stops for `cooldownMicros` (reads serve cold); the re-probe after
+  *    it is a single build, so a table whose churn stopped recovers.
+  *  - **Budget ceiling**: a slice over `maxHotRows` is dropped rather than
+  *    kept — the reference's `leg_budget_bytes`, in rows because a pin's
+  *    size is only known once built.
   *
-  * Locking: [[demote]] materializes the slice (a Spark job, potentially
-  * seconds) OUTSIDE the tier monitor — it snapshots the version/cutoff
-  * under the lock, builds and counts unlocked, then re-takes the lock
-  * and installs only if the snapshot version is still current (a build
-  * raced by DML counts as a wasted build, which is exactly what it is).
-  * Concurrent [[read]]s therefore never stall behind an in-flight
-  * demotion; at worst they serve cold, which is always correct.
+  * Locking: [[demote]] builds slices (Spark jobs) OUTSIDE the tier
+  * monitor — it snapshots the version under the lock, builds unlocked,
+  * then installs only if that version is still current (a build raced by
+  * DML counts as wasted). Reads never stall behind a demotion.
   *
-  * Accounting simplification, deliberate: `hot_served` (and the
-  * slice-level served count that feeds waste conviction) increments when
-  * the serving DataFrame is HANDED OUT, not when its plan executes — the
-  * reference accounts at scan execution. A caller that builds but never
-  * runs the plan still marks the slice as read; at the tier's one-table
-  * scope the planned-but-never-run frame is not a real workload shape,
-  * and a plan-time count keeps the read path free of listener plumbing.
+  * `hot_served` (and the served count behind waste conviction) counts a
+  * frame when it is HANDED OUT, not when it executes as in the reference:
+  * a plan-time count keeps the read path free of listener plumbing.
   *
-  * Reads through the tier are always CORRECT regardless of policy state:
-  * every path resolves the same merge-on-read view; the tier only
-  * chooses which physical plan serves it.
+  * Every path resolves the same merge-on-read view; the tier only chooses
+  * which physical plan serves it, so reads are correct in every state.
   */
 class HotTier(
     val table: GraftTable,
@@ -124,8 +105,10 @@ class HotTier(
     (retentionMicros +: extraRetentions).filter(_ > 0).distinct
       .sorted(Ordering[Long].reverse)
 
+  // `lent`: the frame has left the tier (served, or the source of a
+  // narrower build), so only ContextCleaner may free its blocks
   private final class Slice(val version: Int, val cutoff: Long,
-      val df: DataFrame) { var served = 0L }
+      val df: DataFrame) { var served = 0L; var lent = false }
 
   // pinned slices keyed by retention window (each snapshots one version)
   private var built: Map[Long, Slice] = Map.empty
@@ -181,13 +164,15 @@ class HotTier(
     if (missing.isEmpty) return false // already current
 
     // materialize OUTSIDE the monitor — reads proceed (cold) meanwhile.
-    // Widest window first; narrower windows filter the widest persisted
+    // Widest window first; narrower windows filter the widest pinned
     // frame instead of re-reading parquet (subset by construction) —
-    // including a widest slice ALREADY pinned for this version (its
-    // staleness was just checked under the monitor).
+    // including a widest slice ALREADY pinned for this version that
+    // covers a missing window (its staleness was just checked under the
+    // monitor; lent, so a read invalidating it mid-build cannot release it)
     var widest: Option[(Long, DataFrame)] = // (cutoff, frame)
       synchronized(built.values.toSeq.sortBy(_.cutoff).headOption
-        .map(s => (s.cutoff, s.df)))
+        .filter(s => missing.exists(now - _ >= s.cutoff))
+        .map { s => s.lent = true; (s.cutoff, s.df) })
     var staged = List.empty[(Long, Long, DataFrame, Long)] // (ret, cutoff, df, n)
     missing.sorted(Ordering[Long].reverse).foreach { ret =>
       val cutoff = now - ret
@@ -195,12 +180,10 @@ class HotTier(
         case Some((wc, wdf)) if wc <= cutoff => wdf
         case _ => table.readResolved()
       }
-      val df = src.filter(col(tsCol) >= tsLit(cutoff))
-        .repartition(math.max(1, slicePartitions))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = df.count() // materializes the slice
+      val (df, n) = Pin.columns(src.filter(col(tsCol) >= tsLit(cutoff))
+        .repartition(math.max(1, slicePartitions)))
       if (n > maxHotRows) {
-        df.unpersist(blocking = false)
+        Pin.release(df)
         synchronized {
           windowBuilds += 1; ctr("builds") += 1
           // an oversize build never pays off; it counts toward waste
@@ -223,7 +206,7 @@ class HotTier(
         windowBuilds += 1; ctr("builds") += 1
         if (stillCurrent) built += ret -> new Slice(v, cutoff, df)
         else {
-          df.unpersist(blocking = false)
+          Pin.release(df)
           windowWasted += 1; ctr("wasted_builds") += 1
         }
       }
@@ -247,7 +230,7 @@ class HotTier(
         .getOrElse(table.readResolved())
     }
     // staleness check BEFORE the lookback early-return: a deep/unbounded
-    // read must still unpin a DML-invalidated slice, or its persisted
+    // read must still unpin a DML-invalidated slice, or its pinned
     // storage rides until the next demotion despite being unservable
     if (built.nonEmpty) invalidateIfStale(table.currentVersion())
     if (skipForLookback(lookbackMicros)) return cold
@@ -256,8 +239,7 @@ class HotTier(
     // narrowest covering slice = the LARGEST cutoff still ≤ since
     built.values.filter(_.cutoff <= s).toSeq.sortBy(-_.cutoff).headOption match {
       case Some(sl) =>
-        sl.served += 1
-        ctr("hot_served") += 1
+        serve(sl)
         // at exactly the slice's cutoff the filter admits every row —
         // serve the cached frame bare so the plan is a pure InMemory scan
         if (s == sl.cutoff) sl.df
@@ -265,18 +247,24 @@ class HotTier(
       case None =>
         // deeper than every slice: widest slice + cold gap leg
         val sl = built.values.toSeq.minBy(_.cutoff)
-        sl.served += 1
-        ctr("hot_served") += 1
+        serve(sl)
         val gap = table.readResolved()
           .filter(col(tsCol) >= tsLit(s) && col(tsCol) < tsLit(sl.cutoff))
         gap.unionByName(sl.df)
     }
   }
 
+  private def serve(sl: Slice): Unit = {
+    sl.served += 1; sl.lent = true
+    ctr("hot_served") += 1
+  }
+
+  private def drop(sl: Slice): Unit = if (!sl.lent) Pin.release(sl.df)
+
   private def invalidateIfStale(v: Int): Unit = {
     val (live, dead) = built.partition(_._2.version == v)
     dead.values.foreach { sl =>
-      sl.df.unpersist(blocking = false)
+      drop(sl)
       if (sl.served == 0) { windowWasted += 1; ctr("wasted_builds") += 1 }
     }
     built = live
@@ -294,9 +282,10 @@ class HotTier(
       windowBuilds = 0; windowWasted = 0
     }
 
-  /** Drop every pinned slice (shutdown / external memory pressure). */
+  /** Drop every pinned slice (shutdown / external memory pressure); a
+    * slice whose frame was handed out is left to `ContextCleaner`. */
   def release(): Unit = synchronized {
-    built.values.foreach(_.df.unpersist(blocking = false))
+    built.values.foreach(drop)
     built = Map.empty
   }
 }

@@ -68,7 +68,7 @@ import org.apache.spark.sql.functions._
   * Ordering contract: [[probe]] returns a LAZY frame over the current
   * segment files; a subsequent [[add]] may LSM-merge and DELETE absorbed
   * segment directories, so the probe result must be fully consumed (or
-  * pinned via `localCheckpoint()`) BEFORE the next add/remove. The q148
+  * pinned with [[graft.operators.Pin]]) BEFORE the next add/remove. The q148
   * pipeline materializes within the batch, which satisfies this. */
 final class AnnIngestIndex(spark: SparkSession, root: String,
     idCol: String, vecCol: String, dim: Int, threshold: Double,

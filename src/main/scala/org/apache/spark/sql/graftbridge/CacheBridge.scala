@@ -10,6 +10,7 @@ import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, DefaultCachedBatchSerializer, InMemoryRelation}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 /** Bridge to Spark's in-memory columnar relation, which is `private[sql]`
   * API. Lives under the `org.apache.spark.sql` package tree like
@@ -19,15 +20,17 @@ object CacheBridge {
 
   /** `df`'s rows as compressed column buffers (Spark's default cached
     * batch format), stored at `level` by the first action over the
-    * returned frame. The frame keeps the buffers and nothing of `df`: the
+    * returned frame, with the count of the rows the buffers store (filled
+    * by that action). The frame keeps the buffers and nothing of `df`: the
     * buffers are local-checkpointed, so once that action has stored them
     * their lineage back to `df`'s plan is cut, the plan and any rows it
     * holds can be collected, and a lost block fails the read instead of
     * recomputing `df`. Unlike `persist()`, nothing is registered in the
     * session's `CacheManager`: `ContextCleaner` frees the blocks once no
-    * frame references them. `level` must use disk, as local checkpoints
-    * need (a block spills, never is evicted). */
-  def inMemoryColumnar(df: DataFrame, level: StorageLevel): DataFrame = {
+    * frame references them, and the relation's `clearCache` frees them at
+    * once. `level` must use disk, as local checkpoints need (a block
+    * spills, never is evicted). */
+  def inMemoryColumnar(df: DataFrame, level: StorageLevel): (DataFrame, LongAccumulator) = {
     require(level.useDisk, s"$level cannot hold a local checkpoint")
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val qe = ds.queryExecution
@@ -39,8 +42,9 @@ object CacheBridge {
     val output = qe.analyzed.output
     val buffers = ds.sparkSession.withActive(new ColumnBuffers(level, plan,
       PinnedScan(output, plan.outputPartitioning, plan.outputOrdering)))
-    classic.Dataset.ofRows(ds.sparkSession, InMemoryRelation(output,
-      buffers, qe.optimizedPlan.outputOrdering, qe.optimizedPlan.stats))
+    (classic.Dataset.ofRows(ds.sparkSession, InMemoryRelation(output,
+      buffers, qe.optimizedPlan.outputOrdering, qe.optimizedPlan.stats)),
+      buffers.rowCountStats)
   }
 
   /** The cached-relation builder over `source`'s rows that lets go of
@@ -70,6 +74,13 @@ object CacheBridge {
 
     override def isCachedColumnBuffersLoaded: Boolean =
       synchronized(buffers != null && buffers.isCheckpointed)
+
+    // the inherited clearCache frees the builder's own buffers, which
+    // these never are; the buffers stay referenced, so a later read fails
+    // on the missing blocks instead of rebuilding from a dropped source
+    override def clearCache(blocking: Boolean): Unit = synchronized {
+      if (buffers != null) buffers.unpersist(blocking)
+    }
   }
 
   /** The shape of a plan whose rows live in [[ColumnBuffers]]; it is never

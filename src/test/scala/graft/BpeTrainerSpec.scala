@@ -56,6 +56,16 @@ class BpeTrainerSpec extends AnyFunSuite {
     assert(real(200000) == real(0))
   }
 
+  test("the distributed merge loop leaves at most one vocab pin behind") {
+    val sc = spark.sparkContext
+    def stored() = sc.getRDDStorageInfo.map(_.id).toSet
+    val before = stored()
+    val merges = BpeTrainer.train(corpus, "text", merges = 4, maxLocalVocab = 0)
+    assert(merges.count() == 4)
+    val left = stored() -- before
+    assert(left.size <= 1, s"merge-loop pins still stored: $left")
+  }
+
   test("train stops early when no pair remains") {
     import spark.implicits._
     val tiny = Seq((1L, "ab ab")).toDF("doc_id", "text")

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.time.{LocalDateTime, ZoneOffset}
 
+import org.apache.spark.sql.TestPins
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,6 +47,10 @@ class HotTierSpec extends AnyFunSuite {
     GraftClock.set(micros(t))
     try f finally GraftClock.reset()
   }
+
+  /** Ids of the RDDs holding stored blocks in the session. */
+  private def stored(): Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
 
   test("in-window read serves the pinned slice and matches the cold answer") {
     withClock(LocalDateTime.of(2024, 3, 4, 0, 0)) {
@@ -185,6 +190,56 @@ class HotTierSpec extends AnyFunSuite {
       // slice + cold gap leg
       assert(tier.read(Some(72 * H)).count() == 72)
       assert(tier.stats("hot_served") == 4 && tier.stats("cold_served") == 0)
+    }
+  }
+
+  test("slices live outside the session's cache manager") {
+    withClock(LocalDateTime.of(2024, 3, 4, 0, 0)) {
+      spark.catalog.clearCache() // start from an empty registry
+      val t = freshTable()
+      t.append(hourlyRows(72), t0(0))
+      val tier = new HotTier(t, retentionMicros = 24 * H,
+        extraRetentions = Seq(6 * H))
+      assert(tier.demote())
+      assert(tier.read(Some(6 * H)).count() == 6)
+      assert(TestPins.cacheManagerIsEmpty(spark),
+        "a hot slice must not live in the cache manager's registry")
+    }
+  }
+
+  test("an oversize or never-served slice's blocks are freed at once") {
+    withClock(LocalDateTime.of(2024, 3, 4, 0, 0)) {
+      val t = freshTable()
+      t.append(hourlyRows(72), t0(0))
+      val before = stored()
+      val small = new HotTier(t, retentionMicros = 24 * H, maxHotRows = 5)
+      assert(!small.demote())
+      assert(stored() -- before == Set.empty, "the oversize slice kept its blocks")
+      val tier = new HotTier(t, retentionMicros = 24 * H)
+      assert(tier.demote())
+      val slice = stored() -- before
+      assert(slice.nonEmpty, "demotion stored no slice")
+      t.update(col("id") === "row-70", Map("name" -> lit("renamed")), t0(1))
+      tier.read(Some(24 * H)) // the staleness check invalidates the slice
+      assert((stored() intersect slice) == Set.empty,
+        "an invalidated slice nobody was served kept its blocks")
+    }
+  }
+
+  test("a served slice outlives its invalidation for the frame's holder") {
+    withClock(LocalDateTime.of(2024, 3, 4, 0, 0)) {
+      val t = freshTable()
+      t.append(hourlyRows(72), t0(0))
+      val tier = new HotTier(t, retentionMicros = 24 * H)
+      assert(tier.demote())
+      val hot = tier.read(Some(24 * H)) // handed out, not yet executed
+      val preDml = names(t.readResolved()
+        .filter(col("timestamp") >= lit("2024-03-03 00:00:00").cast("timestamp_ntz")))
+      t.update(col("id") === "row-70", Map("name" -> lit("renamed")), t0(1))
+      assert(tier.demote()) // drops the stale slice, pins the new version
+      assert(tier.stats("slices") == 1 && tier.stats("builds") == 2)
+      assert(names(hot) == preDml && !preDml.exists(_._2 == "renamed"))
+      assert(TestPins.pins(hot).map(_._2.id).toSet.subsetOf(stored()))
     }
   }
 

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.spark.sql.TestPins
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan that keeps one way to build a graft session and one way to
@@ -13,24 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * do not run.
   */
 class OneSessionSpec extends AnyFunSuite {
+  import SourceScan.sources
 
-  private def sources(root: String): Seq[(Path, String)] = {
-    val dir = Paths.get(root)
-    assert(Files.isDirectory(dir), s"$root not found from ${Paths.get("").toAbsolutePath}")
-    val walk = Files.walk(dir)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
-    finally walk.close()
-  }
-
-  private def hits(files: Seq[(Path, String)], pattern: String): Seq[String] = {
-    val re = pattern.r
-    files.flatMap { case (p, text) =>
-      text.linesIterator.zipWithIndex.collect {
-        case (line, i) if re.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
-      }
-    }
-  }
+  private def hits(files: Seq[(java.nio.file.Path, String)], pattern: String): Seq[String] =
+    SourceScan.hits(files, pattern).map(_._1)
 
   test("SparkSession's builder is called only in GraftSession.scala") {
     val all = sources("src/main/scala") ++ sources("src/test/scala")
@@ -40,6 +23,18 @@ class OneSessionSpec extends AnyFunSuite {
       outside.mkString("\n"))
     assert(hits(all, """SparkSession\s*\.\s*builder""").nonEmpty,
       "the scan must see GraftSession's own builder call")
+  }
+
+  test("a session's status store keeps at most RetainedExecutions executions") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val spark = SparkTestSession.spark
+    (0 until GraftSession.RetainedExecutions + 10).foreach(i => spark.range(i).collect())
+    // the store trims on a background thread once it holds more
+    eventually(timeout(30.seconds)) {
+      val held = TestPins.sqlExecutions(spark)
+      assert(held <= GraftSession.RetainedExecutions, s"$held executions held")
+    }
   }
 
   test("main code injects no optimizer rule through spark.experimental") {

@@ -14,6 +14,19 @@ import graft.tables.Tables
 class PinSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  test("frames are stored, checkpointed and freed only in Pin.scala") {
+    import SourceScan.{hits, sources}
+    val all = sources("src/main/scala/graft")
+    val isPin = (p: java.nio.file.Path) => p.getFileName.toString == "Pin.scala"
+    val pattern = """localCheckpoint\(|\.checkpoint\(|\.persist\(|\.cache\(\)|""" +
+      """unpersist\(|CacheBridge\."""
+    val outside = hits(all.filterNot(f => isPin(f._1)), pattern)
+    assert(outside.isEmpty,
+      s"pin frames through graft.operators.Pin:\n${outside.map(_._1).mkString("\n")}")
+    assert(hits(all.filter(f => isPin(f._1)), pattern).nonEmpty,
+      "the scan must see Pin.scala's own calls")
+  }
+
   test("lazilyAll: jobs of the pinned frames run under the caller's job group") {
     val sc = spark.sparkContext
     try {

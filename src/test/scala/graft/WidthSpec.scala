@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SourceScan.{hits, sources}
 import graft.operators.Width
 
 /** Keeps the operators' parallelism decisions in one place,
@@ -18,24 +17,6 @@ class WidthSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private val roots = Seq("src/main/scala/graft/operators", "src/main/scala/graft/tables")
-
-  private def sources(root: String): Seq[(Path, String)] = {
-    val dir = Paths.get(root)
-    assert(Files.isDirectory(dir), s"$root not found from ${Paths.get("").toAbsolutePath}")
-    val walk = Files.walk(dir)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
-    finally walk.close()
-  }
-
-  /** (`file:line: text`, matched text) of every match of `pattern`. */
-  private def hits(files: Seq[(Path, String)], pattern: String): Seq[(String, String)] =
-    files.flatMap { case (p, text) =>
-      pattern.r.findAllMatchIn(text).map { m =>
-        val line = text.substring(0, m.start).count(_ == '\n') + 1
-        (s"$p:$line: ${text.linesIterator.drop(line - 1).next().trim}", m.matched)
-      }
-    }
 
   private def isWidth(p: Path) = p.getFileName.toString == "Width.scala"
 
@@ -53,9 +34,8 @@ class WidthSpec extends AnyFunSuite {
     }
   }
 
-  test("operators read no graft session conf but the CC edge limit and the checkpoint mode") {
-    // `reliableCheckpoints` chooses where Pin stores a frame, not a width
-    val allowed = Set("spark.graft.cc.driverEdgeLimit", "spark.graft.reliableCheckpoints")
+  test("operators read no graft session conf but the CC edge limit") {
+    val allowed = Set("spark.graft.cc.driverEdgeLimit")
     val reads = hits(sources("src/main/scala/graft/operators"), """"spark\.graft\.[A-Za-z.]+"""")
       .filterNot { case (_, key) => allowed(key.stripPrefix("\"").stripSuffix("\"")) }
     assert(reads.isEmpty, s"operator knobs:\n${reads.map(_._1).mkString("\n")}")
